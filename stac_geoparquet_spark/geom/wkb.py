@@ -14,7 +14,9 @@ MultiPolygon, GeometryCollection, with optional Z (ISO type codes
 
 Also replicates the reference's empty-MultiPolygon-part filtering
 (stac_geoparquet/utils.py:89-101): empty coordinate entries in a
-MultiPolygon are dropped before encoding.
+MultiPolygon are dropped before encoding, and computes the GeoJSON
+envelope (shapely's ``geom.bounds``) that the pgstac bbox fallback and
+CQL2 spatial literals need.
 """
 
 from __future__ import annotations
@@ -131,6 +133,30 @@ def _encode(geom: dict) -> bytes:
     else:
         raise ValueError(f"unsupported geometry type: {gtype}")
     return bytes(buf)
+
+
+def geojson_bounds(geom: dict | None) -> list[float] | None:
+    """[xmin, ymin, xmax, ymax] over every coordinate of a GeoJSON
+    geometry, GeometryCollection members included; None for a missing
+    or empty geometry."""
+    xs: list[float] = []
+    ys: list[float] = []
+
+    def walk(c: Any) -> None:
+        if isinstance(c, dict):
+            walk(c.get("geometries", c.get("coordinates")))
+        elif isinstance(c, (list, tuple)) and c:
+            if isinstance(c[0], (int, float)):
+                xs.append(float(c[0]))
+                ys.append(float(c[1]))
+            else:
+                for e in c:
+                    walk(e)
+
+    walk(geom)
+    if not xs:
+        return None
+    return [min(xs), min(ys), max(xs), max(ys)]
 
 
 class _Reader:

@@ -525,11 +525,6 @@ SELECT pair, n, rk FROM (
 """
 
 
-QUERIES: dict = {}
-ORACLE: dict = {}
-
-# Locally strict-gated like everything else, registered AFTER the
-# 50-entry driver window this round (see __spark_entry__._registries).
 # --------------------------------------------------------------------------
 # Edit-distance similarity join (AllPairs/PPJoin-style prefix filter):
 # pairs of strings within Levenshtein distance ED_TAU, found WITHOUT
@@ -1604,7 +1599,7 @@ GROUP BY source
 """
 
 
-QUERIES_ROTATION = {
+QUERIES = {
     "tokenize_unigram_eval": tokenize_unigram_eval,
     "tokenize_bpe_encode": tokenize_bpe_encode,
     "tokenize_bpe_roundtrip": tokenize_bpe_roundtrip,
@@ -1621,7 +1616,7 @@ QUERIES_ROTATION = {
     "fingerprint_winnowing": fingerprint_winnowing,
 }
 
-ORACLE_ROTATION = {
+ORACLE = {
     "tokenize_unigram_eval": TOKENIZE_UNIGRAM_SQL,
     "tokenize_bpe_encode": TOKENIZE_BPE_SQL,
     "tokenize_bpe_roundtrip": BPE_ROUNDTRIP_SQL,
@@ -1832,8 +1827,8 @@ agg AS (
 """
 
 
-QUERIES_ROTATION["er_fellegi_sunter"] = er_fellegi_sunter
-ORACLE_ROTATION["er_fellegi_sunter"] = _fs_oracle_sql()
+QUERIES["er_fellegi_sunter"] = er_fellegi_sunter
+ORACLE["er_fellegi_sunter"] = _fs_oracle_sql()
 
 
 # --------------------------------------------------------------------------
@@ -1976,5 +1971,5 @@ FROM curve CROSS JOIN fit
 """
 
 
-QUERIES_ROTATION["text_heaps_law_fit"] = text_heaps_law_fit
-ORACLE_ROTATION["text_heaps_law_fit"] = HEAPS_SQL
+QUERIES["text_heaps_law_fit"] = text_heaps_law_fit
+ORACLE["text_heaps_law_fit"] = HEAPS_SQL

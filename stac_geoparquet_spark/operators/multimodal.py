@@ -530,15 +530,12 @@ ORACLE = {
     "mm_resize": MM_RESIZE_SQL,
 }
 
-# Placement in the driver's 50-entry correctness window is decided by
-# __spark_entry__._registries (its window list + NEW_THIS_ROUND), not
-# by this module's dict split; the rotation dicts only group entries.
-QUERIES_ROTATION = {
+QUERIES |= {
     "mm_audio_energy": mm_audio_energy,
     "mm_cdc_chunk_dedup": mm_cdc_chunk_dedup,
 }
 
-ORACLE_ROTATION = {
+ORACLE |= {
     "mm_audio_energy": MM_AUDIO_ENERGY_SQL,
     "mm_cdc_chunk_dedup": MM_CDC_SQL,
 }
@@ -628,8 +625,8 @@ FROM hashed GROUP BY phash
 HAVING count(*) >= 2
 """
 
-QUERIES_ROTATION["mm_phash_dedup"] = mm_phash_dedup
-ORACLE_ROTATION["mm_phash_dedup"] = MM_PHASH_SQL
+QUERIES["mm_phash_dedup"] = mm_phash_dedup
+ORACLE["mm_phash_dedup"] = MM_PHASH_SQL
 
 
 # --------------------------------------------------------------------------
@@ -723,5 +720,5 @@ GROUP BY doc_id
 """
 
 
-QUERIES_ROTATION["mm_scene_cuts"] = mm_scene_cuts
-ORACLE_ROTATION["mm_scene_cuts"] = MM_SCENE_CUTS_SQL
+QUERIES["mm_scene_cuts"] = mm_scene_cuts
+ORACLE["mm_scene_cuts"] = MM_SCENE_CUTS_SQL

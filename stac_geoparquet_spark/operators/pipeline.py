@@ -736,15 +736,16 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort the whole corpus on one task): orderBy+limit plans as
     # TakeOrderedAndProject (per-partition top-K, then K*partitions
     # rows merged), and the K-row keep-list broadcasts back as the
-    # `selected` marker.  r11 batch 4: the localCheckpoint fence that
-    # kept the token-scoring join from running once per consumer is
-    # gone — both consumers read the SAME post-aggregate subtree
-    # (identical plan copies), so AQE stage reuse dedups them
-    # (ReusedExchange in the committed plan), the same route the
-    # hybrid-RRF tf stage took; the fence's construction-time job and
-    # its corpus-sized executor materialization disappear.
+    # `selected` marker.  No fence: both consumers must read the SAME
+    # per-doc aggregate so AQE reuses its shuffle (one ReusedExchange
+    # of the hashpartitioning(doc_id) stage in the final plan, which
+    # tests/test_plans.py pins).  Column pruning would otherwise drop
+    # count(1) from the top-K copy only, and the two aggregates — with
+    # the whole token-scoring join below them — would run twice.  The
+    # trailing n_tokens sort key keeps count(1) in both; it never
+    # decides the order, because doc_id is unique after the groupBy.
     topk = (
-        scored.orderBy(F.desc("log_iw"), F.asc("doc_id"))
+        scored.orderBy(F.desc("log_iw"), F.asc("doc_id"), F.asc("n_tokens"))
         .limit(DSIR_K)
         .select("doc_id", F.lit(True).alias("sel"))
     )
@@ -1624,7 +1625,7 @@ FROM ranked
 """
 
 
-QUERIES_ROTATION = {
+QUERIES |= {
     "corpus_gini_balance": corpus_gini_balance,
     "mixture_epoch_allocation": mixture_epoch_allocation,
     "sample_weighted_k": sample_weighted_k,
@@ -1635,7 +1636,7 @@ QUERIES_ROTATION = {
     "corpus_yield_funnel": corpus_yield_funnel,
 }
 
-ORACLE_ROTATION = {
+ORACLE |= {
     "corpus_gini_balance": GINI_SQL,
     "mixture_epoch_allocation": EPOCH_ALLOC_SQL,
     "sample_weighted_k": SAMPLE_WEIGHTED_SQL,

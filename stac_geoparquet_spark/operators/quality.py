@@ -608,17 +608,14 @@ FROM scored GROUP BY event_type
 """
 
 
-# Placement in the driver's 50-entry correctness window is decided by
-# __spark_entry__._registries (its window list + NEW_THIS_ROUND), not
-# by this module's dict split; the rotation dicts only group entries.
-QUERIES_ROTATION = {
+QUERIES |= {
     "events_anomaly_mad": events_anomaly_mad,
     "events_l_diversity": events_l_diversity,
     "dq_corpus_report": dq_corpus_report,
     "events_k_anonymity": events_k_anonymity,
 }
 
-ORACLE_ROTATION = {
+ORACLE |= {
     "events_anomaly_mad": ANOMALY_MAD_SQL,
     "events_l_diversity": L_DIVERSITY_SQL,
     "dq_corpus_report": _dq_corpus_oracle_sql(),

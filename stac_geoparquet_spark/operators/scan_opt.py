@@ -207,13 +207,10 @@ ORACLE = {
     "dpp_orders_by_year": DPP_SQL,
 }
 
-# Placement in the driver's 50-entry correctness window is decided by
-# __spark_entry__._registries (its window list + NEW_THIS_ROUND), not
-# by this module's dict split; the rotation dicts only group entries.
-QUERIES_ROTATION = {
+QUERIES |= {
     "bloom_filter_semijoin": bloom_filter_semijoin,
 }
 
-ORACLE_ROTATION = {
+ORACLE |= {
     "bloom_filter_semijoin": BLOOM_SEMIJOIN_SQL,
 }

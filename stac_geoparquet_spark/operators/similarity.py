@@ -2109,9 +2109,6 @@ FROM scores GROUP BY label
 """
 
 
-# Placement in the driver's 50-entry correctness window is decided by
-# __spark_entry__._registries (its window list + NEW_THIS_ROUND), not
-# by this module's dict split; the rotation dicts only group entries.
 # --------------------------------------------------------------------------
 # Per-dimension z-score standardization (feature scaling ahead of
 # clustering / linear probes): one global aggregate computes each
@@ -2736,7 +2733,7 @@ LEFT JOIN hits ON hits.query_id = ne.query_id
 """
 
 
-QUERIES_ROTATION = {
+QUERIES |= {
     "ann_recall_report": ann_recall_report,
     "hard_negative_mining": hard_negative_mining,
     "matryoshka_recall_report": matryoshka_recall_report,
@@ -2751,7 +2748,7 @@ QUERIES_ROTATION = {
     "pca_power_projection": pca_power_projection,
 }
 
-ORACLE_ROTATION = {
+ORACLE |= {
     "ann_recall_report": _recall_oracle_sql(),
     "hard_negative_mining": HARDNEG_SQL,
     "matryoshka_recall_report": MATRYOSHKA_RECALL_SQL,

@@ -482,9 +482,6 @@ QUERIES = {
     "sketch_kmv_distinct": sketch_kmv_distinct,
 }
 
-# Placement in the driver's 50-entry correctness window is decided by
-# __spark_entry__._registries (its window list + NEW_THIS_ROUND), not
-# by this module's dict split; the rotation dicts only group entries.
 # --------------------------------------------------------------------------
 # KMV set-intersection sketch: estimated distinct-content overlap
 # between every pair of corpus sources — the cross-dump dedup planning
@@ -1234,7 +1231,7 @@ FROM (
 """
 
 
-QUERIES_ROTATION = {
+QUERIES |= {
     "ols_discount_response": ols_discount_response,
     "hll_event_type_overlap": hll_event_type_overlap,
     "minhash_signature_source_sim": minhash_signature_source_sim,
@@ -1244,16 +1241,6 @@ QUERIES_ROTATION = {
     "sketch_hll_incremental": sketch_hll_incremental,
 }
 
-ORACLE_ROTATION = {
-    "ols_discount_response": OLS_SQL,
-    "hll_event_type_overlap": HLL_OVERLAP_SQL,
-    "minhash_signature_source_sim": _mhsig_oracle_sql(),
-    "sketch_cms_heavy_hitters": SKETCH_CMS_SQL,
-    "kmv_source_overlap": KMV_OVERLAP_SQL,
-    "sketch_hll_distinct": SKETCH_HLL_SQL,
-    "sketch_hll_incremental": SKETCH_HLL_INCR_SQL,
-}
-
 ORACLE = {
     "sample_stratified": _sample_stratified_oracle(),
     "sample_fixed_k": _sample_fixed_k_oracle(),
@@ -1261,6 +1248,13 @@ ORACLE = {
     "table_profile": _table_profile_oracle(),
     "outliers_iqr_price": OUTLIERS_IQR_SQL,
     "sketch_kmv_distinct": SKETCH_KMV_SQL,
+    "ols_discount_response": OLS_SQL,
+    "hll_event_type_overlap": HLL_OVERLAP_SQL,
+    "minhash_signature_source_sim": _mhsig_oracle_sql(),
+    "sketch_cms_heavy_hitters": SKETCH_CMS_SQL,
+    "kmv_source_overlap": KMV_OVERLAP_SQL,
+    "sketch_hll_distinct": SKETCH_HLL_SQL,
+    "sketch_hll_incremental": SKETCH_HLL_INCR_SQL,
 }
 
 
@@ -1402,8 +1396,8 @@ WHERE r = CAST(floor((CAST(n AS DOUBLE) - 1.0) * quantile) AS BIGINT)
 """
 
 
-QUERIES_ROTATION["quantiles_user_value_exact"] = quantiles_user_value_exact
-ORACLE_ROTATION["quantiles_user_value_exact"] = QUANTILES_EXACT_SQL
+QUERIES["quantiles_user_value_exact"] = quantiles_user_value_exact
+ORACLE["quantiles_user_value_exact"] = QUANTILES_EXACT_SQL
 
 
 # --------------------------------------------------------------------------
@@ -1551,5 +1545,5 @@ FROM cum JOIN qs
 """
 
 
-QUERIES_ROTATION["approx_quantiles_histogram"] = approx_quantiles_histogram
-ORACLE_ROTATION["approx_quantiles_histogram"] = APPROX_QUANTILES_SQL
+QUERIES["approx_quantiles_histogram"] = approx_quantiles_histogram
+ORACLE["approx_quantiles_histogram"] = APPROX_QUANTILES_SQL

@@ -1827,7 +1827,17 @@ GROUP BY bin
 """
 
 
-QUERIES_ROTATION = {
+QUERIES = {
+    "text_token_count": text_token_count,
+    "text_tfidf_top_terms": text_tfidf_top_terms,
+    "text_quality_score": text_quality_score,
+    "text_lang_id": text_lang_id,
+    "text_fingerprint": text_fingerprint,
+    "split_train_holdout": split_train_holdout,
+    "split_unigram_jsd": split_unigram_jsd,
+    "vocab_top_terms": vocab_top_terms,
+    "doc_length_buckets": doc_length_buckets,
+    "text_unigram_logppl": text_unigram_logppl,
     "classifier_calibration_bins": classifier_calibration_bins,
     "text_token_entropy": text_token_entropy,
     "vocab_oov_rate_by_lang": vocab_oov_rate_by_lang,
@@ -1843,7 +1853,17 @@ QUERIES_ROTATION = {
     "text_nfc_audit": text_nfc_audit,
 }
 
-ORACLE_ROTATION = {
+ORACLE = {
+    "text_token_count": TOKEN_COUNT_SQL,
+    "text_tfidf_top_terms": TFIDF_SQL,
+    "text_quality_score": QUALITY_SQL,
+    "text_lang_id": _lang_oracle_sql(),
+    "text_fingerprint": FINGERPRINT_SQL,
+    "split_train_holdout": SPLIT_SQL,
+    "split_unigram_jsd": SPLIT_JSD_SQL,
+    "vocab_top_terms": VOCAB_SQL,
+    "doc_length_buckets": LENGTH_BUCKETS_SQL,
+    "text_unigram_logppl": UNIGRAM_LOGPPL_SQL,
     "classifier_calibration_bins": CALIBRATION_SQL,
     "text_token_entropy": TOKEN_ENTROPY_SQL,
     "vocab_oov_rate_by_lang": OOV_RATE_SQL,
@@ -1857,33 +1877,6 @@ ORACLE_ROTATION = {
     "quality_classifier_score": CLASSIFIER_SQL,
     "quality_classifier_trained": CLASSIFIER_TRAINED_SQL,
     "text_nfc_audit": NFC_AUDIT_SQL,
-}
-
-
-QUERIES = {
-    "text_token_count": text_token_count,
-    "text_tfidf_top_terms": text_tfidf_top_terms,
-    "text_quality_score": text_quality_score,
-    "text_lang_id": text_lang_id,
-    "text_fingerprint": text_fingerprint,
-    "split_train_holdout": split_train_holdout,
-    "split_unigram_jsd": split_unigram_jsd,
-    "vocab_top_terms": vocab_top_terms,
-    "doc_length_buckets": doc_length_buckets,
-    "text_unigram_logppl": text_unigram_logppl,
-}
-
-ORACLE = {
-    "text_token_count": TOKEN_COUNT_SQL,
-    "text_tfidf_top_terms": TFIDF_SQL,
-    "text_quality_score": QUALITY_SQL,
-    "text_lang_id": _lang_oracle_sql(),
-    "text_fingerprint": FINGERPRINT_SQL,
-    "split_train_holdout": SPLIT_SQL,
-    "split_unigram_jsd": SPLIT_JSD_SQL,
-    "vocab_top_terms": VOCAB_SQL,
-    "doc_length_buckets": LENGTH_BUCKETS_SQL,
-    "text_unigram_logppl": UNIGRAM_LOGPPL_SQL,
 }
 
 
@@ -1954,8 +1947,8 @@ FROM counts GROUP BY source
 """
 
 
-QUERIES_ROTATION["lexical_diversity_by_source"] = lexical_diversity_by_source
-ORACLE_ROTATION["lexical_diversity_by_source"] = LEXDIV_SQL
+QUERIES["lexical_diversity_by_source"] = lexical_diversity_by_source
+ORACLE["lexical_diversity_by_source"] = LEXDIV_SQL
 
 
 # --------------------------------------------------------------------------
@@ -2050,8 +2043,8 @@ FROM counted
 """
 
 
-QUERIES_ROTATION["text_script_mix_audit"] = text_script_mix_audit
-ORACLE_ROTATION["text_script_mix_audit"] = _script_mix_sql()
+QUERIES["text_script_mix_audit"] = text_script_mix_audit
+ORACLE["text_script_mix_audit"] = _script_mix_sql()
 
 
 # --------------------------------------------------------------------------
@@ -2142,8 +2135,8 @@ FROM per_doc
 """
 
 
-QUERIES_ROTATION["text_mattr_diversity"] = text_mattr_diversity
-ORACLE_ROTATION["text_mattr_diversity"] = MATTR_SQL
+QUERIES["text_mattr_diversity"] = text_mattr_diversity
+ORACLE["text_mattr_diversity"] = MATTR_SQL
 
 
 # --------------------------------------------------------------------------
@@ -2297,5 +2290,5 @@ FROM cum CROSS JOIN tot
 """
 
 
-QUERIES_ROTATION["classifier_lift_gains"] = classifier_lift_gains
-ORACLE_ROTATION["classifier_lift_gains"] = LIFT_SQL
+QUERIES["classifier_lift_gains"] = classifier_lift_gains
+ORACLE["classifier_lift_gains"] = LIFT_SQL

@@ -26,24 +26,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from stac_geoparquet_spark.stac.constants import (
+    BBOX_2D,
+    GEOMETRY,
     STAC_GEOPARQUET_VERSION,
     WGS84_PROJJSON,
 )
+from stac_geoparquet_spark.stac.schema import geometry_paths
 
 SUPPORTED_VERSIONS = ("1.0.0", "1.1.0")
-
-
-def _geometry_columns(schema: T.StructType) -> list[str]:
-    """Top-level WKB geometry columns: ``geometry`` plus
-    ``proj:geometry`` when hoisted (arrow/_to_parquet.py:115-127)."""
-    out = []
-    for f in schema.fields:
-        if isinstance(f.dataType, T.BinaryType) and f.name in (
-            "geometry",
-            "proj:geometry",
-        ):
-            out.append(f.name)
-    return out
 
 
 def build_geo_metadata(
@@ -57,29 +47,26 @@ def build_geo_metadata(
             f"schema_version must be one of {SUPPORTED_VERSIONS}, got {schema_version!r}"
         )
     columns: dict[str, Any] = {}
-    for name in _geometry_columns(schema):
+    # top-level WKB geometry columns: ``geometry`` plus ``proj:geometry``
+    # when hoisted (arrow/_to_parquet.py:115-127)
+    for (name, *nested), dt in geometry_paths(schema).items():
+        if nested or not isinstance(dt, T.BinaryType):
+            continue
         col: dict[str, Any] = {
             "encoding": "WKB",
             "geometry_types": [],
         }
-        if name == "geometry":
+        if name == GEOMETRY:
             col["crs"] = WGS84_PROJJSON
             col["edges"] = "planar"
             if schema_version >= "1.1.0" and _has_bbox_struct(schema):
-                col["covering"] = {
-                    "bbox": {
-                        "xmin": ["bbox", "xmin"],
-                        "ymin": ["bbox", "ymin"],
-                        "xmax": ["bbox", "xmax"],
-                        "ymax": ["bbox", "ymax"],
-                    }
-                }
+                col["covering"] = {"bbox": {n: ["bbox", n] for n in BBOX_2D}}
         else:
             # proj:geometry is in the asset/item's own projection; the
             # reference writes crs: null for it
             col["crs"] = None
         columns[name] = col
-    if "geometry" not in columns:
+    if GEOMETRY not in columns:
         # Spec: primary_column must name an entry in columns.  A frame
         # with no binary geometry column (bbox-only spatial table, or
         # normalize skipped) gets NO `geo` key at all — emitting
@@ -88,7 +75,7 @@ def build_geo_metadata(
         return None
     return {
         "version": schema_version,
-        "primary_column": "geometry",
+        "primary_column": GEOMETRY,
         "columns": columns,
     }
 
@@ -98,9 +85,7 @@ def _has_bbox_struct(schema: T.StructType) -> bool:
         dt = schema["bbox"].dataType
     except KeyError:
         return False
-    return isinstance(dt, T.StructType) and {"xmin", "ymin", "xmax", "ymax"} <= {
-        f.name for f in dt.fields
-    }
+    return isinstance(dt, T.StructType) and set(BBOX_2D) <= set(dt.fieldNames())
 
 
 def build_stac_metadata(
@@ -179,8 +164,9 @@ def to_geoparquet(
             raise ValueError("spatial_order=True requires the bbox struct")
         # fixed global grid: lon/lat in [-180, 180]/[-90, 90] quantized
         # to 2^16 cells per axis — no data-dependent max pass needed
-        cx = "CAST(((bbox.xmin + bbox.xmax) / 2.0 + 180.0) * 182.04 AS BIGINT)"
-        cy = "CAST(((bbox.ymin + bbox.ymax) / 2.0 + 90.0) * 364.08 AS BIGINT)"
+        xmin, ymin, xmax, ymax = (f"bbox.{n}" for n in BBOX_2D)
+        cx = f"CAST((({xmin} + {xmax}) / 2.0 + 180.0) * 182.04 AS BIGINT)"
+        cy = f"CAST((({ymin} + {ymax}) / 2.0 + 90.0) * 364.08 AS BIGINT)"
         n_files = max(df.rdd.getNumPartitions(), 1)
         df = (
             df.withColumn("__zkey", F.expr(zorder_key_sql(cx, cy)))

@@ -33,7 +33,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.geom.wkb import wkb_to_geojson
+from stac_geoparquet_spark.geom.wkb import geojson_bounds, wkb_to_geojson
+from stac_geoparquet_spark.stac.constants import GEOMETRY
 
 # pypgstac's dehydration sentinel: a value set to this marker in the
 # stored item means "the base item's value does NOT apply here"
@@ -177,35 +178,6 @@ def hydrate(base: Any, item: Any) -> Any:
     return item
 
 
-def geojson_bounds(geom: dict | None) -> list[float] | None:
-    """(xmin, ymin, xmax, ymax) from GeoJSON coordinates — the
-    reference's bbox fallback uses shapely's geom.bounds
-    (pgstac_reader.py:74-76)."""
-    if not geom:
-        return None
-
-    xs: list[float] = []
-    ys: list[float] = []
-
-    def walk(c: Any) -> None:
-        if isinstance(c, (list, tuple)):
-            if c and isinstance(c[0], (int, float)):
-                xs.append(float(c[0]))
-                ys.append(float(c[1]))
-            else:
-                for e in c:
-                    walk(e)
-
-    if geom.get("type") == "GeometryCollection":
-        for g in geom.get("geometries", []):
-            walk(g.get("coordinates"))
-    else:
-        walk(geom.get("coordinates"))
-    if not xs:
-        return None
-    return [min(xs), min(ys), max(xs), max(ys)]
-
-
 def decode_row(
     row: dict,
     base_item: dict | None,
@@ -222,13 +194,13 @@ def decode_row(
     item = dict(content)
     item["id"] = row["id"]
     item["collection"] = row["collection"]
-    geom_hex = row.get("geometry")
-    if geom_hex and "geometry" not in item:
-        item["geometry"] = wkb_to_geojson(bytes.fromhex(geom_hex))
+    geom_hex = row.get(GEOMETRY)
+    if geom_hex and GEOMETRY not in item:
+        item[GEOMETRY] = wkb_to_geojson(bytes.fromhex(geom_hex))
     if base_item:
         item = hydrate(base_item, item)
     if "bbox" not in item or item["bbox"] is None:
-        item["bbox"] = geojson_bounds(item.get("geometry"))
+        item["bbox"] = geojson_bounds(item.get(GEOMETRY))
     if row_func is not None:
         item = row_func(item)
     return item
@@ -273,7 +245,7 @@ def parse_item_strings(spark: SparkSession, items: DataFrame) -> DataFrame:
     """JSON-string column -> JSON-shape item DataFrame (schema inferred
     by Spark's JSON reader — the FullFile strategy); feed the result to
     stac.forward.normalize_items."""
-    from stac_geoparquet_spark.stac.forward import _stringify_geometry_fields
+    from stac_geoparquet_spark.stac.schema import with_geometry_as_json
 
     # Persist the JSON strings before the two json() passes (inference
     # + typed read): without it the ENTIRE upstream pipeline — the
@@ -284,7 +256,7 @@ def parse_item_strings(spark: SparkSession, items: DataFrame) -> DataFrame:
     # blocks; it is evicted LRU or with the session.
     ds = items.select(F.col("item_json").alias("value")).cache()
     inferred = spark.read.json(ds.rdd.map(lambda r: r[0])).schema
-    patched = _stringify_geometry_fields(inferred)
+    patched = with_geometry_as_json(inferred)
     # typed pass stays JVM-side: from_json runs the same Jackson parser
     # the reader would, without piping every row through a Python
     # worker a second time (the rdd.map form re-serialized the whole

@@ -7,7 +7,18 @@
 - WGS84 PROJJSON: stac_geoparquet/arrow/_crs.py (the reference embeds
   pyproj's PROJJSON export of EPSG:4326; reproduced here from the
   public PROJJSON schema since pyproj is unavailable).
+- Geometry fields and bbox struct fields: arrow/_batch.py:96-122 and
+  arrow/_to_arrow.py:106-200; ``stac.schema.geometry_paths`` says where
+  the geometry fields may sit in an item.
 """
+
+#: the item's primary geometry and the projection extension's footprint
+GEOMETRY = "geometry"
+PROJ_GEOMETRY = "proj:geometry"
+
+#: bbox struct fields, in the order of the STAC bbox array
+BBOX_2D = ("xmin", "ymin", "xmax", "ymax")
+BBOX_3D = ("xmin", "ymin", "zmin", "xmax", "ymax", "zmax")
 
 TOP_LEVEL_KEYS = frozenset(
     {
@@ -16,7 +27,7 @@ TOP_LEVEL_KEYS = frozenset(
         "type",
         "id",
         "bbox",
-        "geometry",
+        GEOMETRY,
         "collection",
         "links",
         "assets",
@@ -30,7 +41,7 @@ CANONICAL_ORDER = (
     "stac_version",
     "stac_extensions",
     "id",
-    "geometry",
+    GEOMETRY,
     "bbox",
     "links",
     "assets",

@@ -25,7 +25,8 @@ Supported (the CQL2 "basic" + bbox-spatial + temporal subset):
   the engine's bbox struct column (exact geometry refinement is a
   documented non-goal: the reference's own output delegates spatial
   filtering to readers via bbox covering stats, README.md:10-15; the
-  envelope of a GeoJSON literal is computed driver-side, no shapely)
+  envelope of a GeoJSON literal, GeometryCollection included, is
+  computed driver-side, no shapely)
 
 Property references: {"property": "name"}. Timestamps parse with
 ``F.to_timestamp`` semantics (UTC session).
@@ -37,6 +38,9 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from stac_geoparquet_spark.geom.wkb import geojson_bounds
+from stac_geoparquet_spark.stac.constants import BBOX_2D
 
 _CMP = {
     "=": lambda a, b: a == b,
@@ -99,23 +103,11 @@ def _geometry_envelope(node: Any) -> tuple[float, float, float, float]:
         if len(b) != 4:
             raise Cql2Error(f"bbox literal must have 4 or 6 values: {b!r}")
         return tuple(b)
-    if isinstance(node, dict) and "coordinates" in node:
-        xs: list[float] = []
-        ys: list[float] = []
-
-        def walk(c: Any) -> None:
-            if isinstance(c, (list, tuple)):
-                if c and isinstance(c[0], (int, float)):
-                    xs.append(c[0])
-                    ys.append(c[1])
-                else:
-                    for e in c:
-                        walk(e)
-
-        walk(node["coordinates"])
-        if not xs:
+    if isinstance(node, dict) and ("coordinates" in node or "geometries" in node):
+        env = geojson_bounds(node)
+        if env is None:
             raise Cql2Error("empty geometry literal")
-        return min(xs), min(ys), max(xs), max(ys)
+        return tuple(env)
     raise Cql2Error(f"not a spatial literal: {node!r}")
 
 
@@ -135,12 +127,12 @@ def _bbox_intersects(env: tuple[float, float, float, float]) -> Column:
         return _bbox_intersects((xmin, ymin, 180.0, ymax)) | _bbox_intersects(
             (-180.0, ymin, xmax, ymax)
         )
-    b = F.col(BBOX_COL)
+    bxmin, bymin, bxmax, bymax = (F.col(BBOX_COL)[n] for n in BBOX_2D)
     return (
-        (b["xmin"] <= F.lit(xmax))
-        & (b["xmax"] >= F.lit(xmin))
-        & (b["ymin"] <= F.lit(ymax))
-        & (b["ymax"] >= F.lit(ymin))
+        (bxmin <= F.lit(xmax))
+        & (bxmax >= F.lit(xmin))
+        & (bymin <= F.lit(ymax))
+        & (bymax >= F.lit(ymin))
     )
 
 

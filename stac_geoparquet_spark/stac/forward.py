@@ -14,12 +14,13 @@ single Project (whole-stage-codegen'd, no Python in the loop); only T1
 crosses into Python, as an Arrow-batched pandas UDF around the pure
 WKB codec — the same boundary where the reference calls shapely.
 
-Schema inference is Spark's distributed JSON inference (the analogue of
-the reference's FullFile strategy, SURVEY.md §1.3); geometry fields are
-re-read as raw JSON strings because heterogeneous geometry types would
-otherwise collapse to conflicting array shapes — the identical failure
-mode the reference dodges by converting geometry *pre-parse*
-(arrow/_batch.py:89-92).
+Schema inference is Spark's distributed JSON inference over every input
+path (the analogue of the reference's FullFile strategy, SURVEY.md
+§1.3). The typed read then takes the fields ``stac.schema.geometry_paths``
+names as raw JSON strings — exactly the fields T1 encodes — because
+heterogeneous geometry types would otherwise collapse to conflicting
+array shapes, the failure mode the reference dodges by converting
+geometry *pre-parse* (arrow/_batch.py:89-92).
 """
 
 from __future__ import annotations
@@ -33,20 +34,15 @@ from pyspark.sql import types as T
 
 from stac_geoparquet_spark.geom import wkb as _wkb_mod
 from stac_geoparquet_spark.stac.constants import (
+    BBOX_2D,
+    BBOX_3D,
     CANONICAL_ORDER,
     DATETIME_COLUMNS,
     GEOARROW_EXTENSION_NAME,
-    TOP_LEVEL_KEYS,
+    GEOMETRY,
     WGS84_PROJJSON,
 )
-
-try:  # make the WKB codec pickle by value so executors never need the
-    # package on their PYTHONPATH (driver-owned sessions included)
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(_wkb_mod)
-except Exception:  # pragma: no cover - older cloudpickle
-    pass
+from stac_geoparquet_spark.stac.schema import geometry_paths, with_geometry_as_json
 
 
 # ---------------------------------------------------------------------------
@@ -92,36 +88,6 @@ def _sniff_format(spark: SparkSession, path: str) -> str:
         return "array"
 
 
-_GEOM_FIELD_NAMES = ("geometry", "proj:geometry")
-
-
-def _stringify_geometry_fields(dt: T.DataType, path: tuple[str, ...] = ()) -> T.DataType:
-    """Rewrite a schema so every geometry-bearing field is StringType.
-
-    Spark then yields the raw JSON text for those fields, keeping
-    heterogeneous geometry types intact until the WKB UDF (T1).
-    """
-    if isinstance(dt, T.StructType):
-        fields = []
-        for f in dt.fields:
-            if f.name in _GEOM_FIELD_NAMES:
-                fields.append(T.StructField(f.name, T.StringType(), True))
-            else:
-                fields.append(
-                    T.StructField(
-                        f.name,
-                        _stringify_geometry_fields(f.dataType, path + (f.name,)),
-                        f.nullable,
-                    )
-                )
-        return T.StructType(fields)
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(
-            _stringify_geometry_fields(dt.elementType, path), dt.containsNull
-        )
-    return dt
-
-
 def read_stac_json(
     spark: SparkSession,
     path: str | list[str],
@@ -131,8 +97,9 @@ def read_stac_json(
     a JSON-shape DataFrame (properties nested, geometry as raw JSON
     string ready for T1).
 
-    Two passes when no schema is given (inference then typed read) —
-    the same contract as the reference (arrow/_api.py:237-261).
+    Two passes when no schema is given (inference over every path, then
+    the typed read) — the same contract as the reference
+    (arrow/_api.py:237-261).
     """
     first_path = path if isinstance(path, str) else path[0]
     fmt = _sniff_format(spark, first_path)
@@ -161,20 +128,8 @@ def read_stac_json(
         return df.select(F.explode("features").alias("item")).select("item.*")
 
     if schema is None:
-        if fmt == "featurecollection":
-            # Infer the WRAPPER schema over ALL paths (not just the
-            # first file — a field present only in later files would
-            # otherwise be silently dropped), then do the typed read +
-            # explode.  One inference pass total.
-            wrapper = spark.read.option("multiLine", "true").json(path).schema
-            patched = _stringify_geometry_fields(wrapper)
-            reader = spark.read.schema(patched).option("multiLine", "true")
-            df = reader.json(path)
-            return df.select(F.explode("features").alias("item")).select("item.*")
-        inferred = _read(None).schema
-        patched = _stringify_geometry_fields(inferred)
-        return _read(patched)
-    return _read(_stringify_geometry_fields(schema))
+        schema = _read(None).schema
+    return _read(with_geometry_as_json(schema))
 
 
 # ---------------------------------------------------------------------------
@@ -193,45 +148,20 @@ def _make_wkb_encode_udf():
     return pandas_udf(_encode_series, T.BinaryType())
 
 
-def _geometry_string_paths(schema: T.StructType) -> list[list[str]]:
-    """Discover geometry columns to encode: top-level ``geometry``,
-    ``properties.proj:geometry`` and ``assets.<k>.proj:geometry``
-    (arrow/_batch.py:96-122)."""
-    paths: list[list[str]] = []
-    names = {f.name: f for f in schema.fields}
-    if "geometry" in names and isinstance(names["geometry"].dataType, T.StringType):
-        paths.append(["geometry"])
-    props = names.get("properties")
-    if props is not None and isinstance(props.dataType, T.StructType):
-        for f in props.dataType.fields:
-            if f.name == "proj:geometry" and isinstance(f.dataType, T.StringType):
-                paths.append(["properties", "proj:geometry"])
-    assets = names.get("assets")
-    if assets is not None and isinstance(assets.dataType, T.StructType):
-        for a in assets.dataType.fields:
-            if isinstance(a.dataType, T.StructType):
-                for f in a.dataType.fields:
-                    if f.name == "proj:geometry" and isinstance(
-                        f.dataType, T.StringType
-                    ):
-                        paths.append(["assets", a.name, "proj:geometry"])
-    return paths
-
-
 def encode_geometries(df: DataFrame) -> DataFrame:
-    """T1: every geometry-bearing string column -> ISO WKB binary."""
-    paths = _geometry_string_paths(df.schema)
+    """T1: every geometry field still holding GeoJSON text -> ISO WKB
+    binary (arrow/_batch.py:96-122)."""
+    paths = [
+        p for p, dt in geometry_paths(df.schema).items() if isinstance(dt, T.StringType)
+    ]
     if not paths:
         return df
     udf = _make_wkb_encode_udf()
-    for path in paths:
-        if len(path) == 1:
-            df = df.withColumn("geometry", udf(F.col("geometry")))
-        else:
-            top = path[0]
-            nested = ".".join(f"`{p}`" for p in path[1:])
-            src = F.col(".".join(f"`{p}`" for p in path))
-            df = df.withColumn(top, F.col(top).withField(nested, udf(src)))
+    for top, *nested in paths:
+        src = udf(F.col(".".join(f"`{p}`" for p in (top, *nested))))
+        if nested:
+            src = F.col(f"`{top}`").withField(".".join(f"`{p}`" for p in nested), src)
+        df = df.withColumn(top, src)
     return df
 
 
@@ -313,25 +243,11 @@ def bbox_to_struct(df: DataFrame) -> DataFrame:
                 f"mixed 2-D/3-D bboxes in one table: sizes {sizes['lo']}..{sizes['hi']}"
             )
         ndim = sizes["lo"]
-    b = F.col("bbox")
-    if ndim == 4:
-        struct = F.struct(
-            b[0].cast("double").alias("xmin"),
-            b[1].cast("double").alias("ymin"),
-            b[2].cast("double").alias("xmax"),
-            b[3].cast("double").alias("ymax"),
-        )
-    elif ndim == 6:
-        struct = F.struct(
-            b[0].cast("double").alias("xmin"),
-            b[1].cast("double").alias("ymin"),
-            b[2].cast("double").alias("zmin"),
-            b[3].cast("double").alias("xmax"),
-            b[4].cast("double").alias("ymax"),
-            b[5].cast("double").alias("zmax"),
-        )
-    else:
+    names = next((t for t in (BBOX_2D, BBOX_3D) if len(t) == ndim), None)
+    if names is None:
         raise ValueError(f"bbox must have 4 or 6 values, got {ndim}")
+    b = F.col("bbox")
+    struct = F.struct(*[b[i].cast("double").alias(n) for i, n in enumerate(names)])
     return df.withColumn("bbox", F.when(b.isNotNull(), struct))
 
 
@@ -339,10 +255,10 @@ def bbox_to_struct(df: DataFrame) -> DataFrame:
 # T5 — geoarrow column metadata
 # ---------------------------------------------------------------------------
 def tag_geometry_metadata(df: DataFrame) -> DataFrame:
-    if "geometry" not in df.columns:
+    if GEOMETRY not in df.columns:
         return df
     return df.withMetadata(
-        "geometry",
+        GEOMETRY,
         {
             "ARROW:extension:name": GEOARROW_EXTENSION_NAME,
             "ARROW:extension:metadata": json.dumps({"crs": WGS84_PROJJSON}),

@@ -10,10 +10,12 @@ iter_dicts at arrow/_batch.py:131-181):
   U5 all-null assets stripped        (arrow/_batch.py:173-179)
   U6 null == missing                 (tests/json_equals.py:144-158)
 
-U1-U3 are pure Column expressions. U4/U5 happen at the JSON boundary,
+U1-U3 are pure Column expressions. U4-U6 happen at the JSON boundary,
 which is row-oriented by nature (the reference iterates rows there
 too); we cross it once, in mapInPandas over Arrow batches, emitting
-one JSON document per item.
+one JSON document per item. U4 decodes the WKB fields among
+``stac.schema.geometry_paths``, the same fields T1 encoded; U6 is the
+one walk that makes each value JSON-serializable and drops null keys.
 """
 
 from __future__ import annotations
@@ -27,14 +29,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from stac_geoparquet_spark.geom import wkb as _wkb_mod
-from stac_geoparquet_spark.stac.constants import DATETIME_COLUMNS, TOP_LEVEL_KEYS
-
-try:
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(_wkb_mod)
-except Exception:  # pragma: no cover
-    pass
+from stac_geoparquet_spark.stac.constants import (
+    BBOX_2D,
+    BBOX_3D,
+    DATETIME_COLUMNS,
+    TOP_LEVEL_KEYS,
+)
+from stac_geoparquet_spark.stac.schema import geometry_paths
 
 # The reference formats with pc.strftime("%Y-%m-%dT%H:%M:%SZ")
 # (arrow/_from_arrow.py:24-28), and Arrow's %S — unlike C strftime —
@@ -107,11 +108,8 @@ def bbox_to_array(df: DataFrame) -> DataFrame:
     if not isinstance(dt, T.StructType):
         return df
     names = [f.name for f in dt.fields]
-    if set(names) == {"xmin", "ymin", "xmax", "ymax"}:
-        order = ["xmin", "ymin", "xmax", "ymax"]
-    elif set(names) == {"xmin", "ymin", "zmin", "xmax", "ymax", "zmax"}:
-        order = ["xmin", "ymin", "zmin", "xmax", "ymax", "zmax"]
-    else:
+    order = next((o for o in (BBOX_2D, BBOX_3D) if set(o) == set(names)), None)
+    if order is None:
         raise ValueError(f"unexpected bbox struct fields: {names}")
     arr = F.array(*[F.col(f"bbox.{n}") for n in order])
     return df.withColumn(
@@ -129,37 +127,21 @@ def to_json_shape(df: DataFrame, precision: str = "us") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# U4/U5 — JSON boundary
+# U4-U6 — JSON boundary
 # ---------------------------------------------------------------------------
-def _geometry_binary_paths(schema: T.StructType) -> list[tuple[str, ...]]:
-    """Schema walk for WKB columns: ['geometry'],
-    ['properties','proj:geometry'], ['assets',<k>,'proj:geometry']
-    (arrow/_batch.py:137-154)."""
-    paths: list[tuple[str, ...]] = []
-
-    def walk(dt: T.DataType, path: tuple[str, ...]):
-        if isinstance(dt, T.StructType):
-            for f in dt.fields:
-                p = path + (f.name,)
-                if isinstance(f.dataType, T.BinaryType) and f.name in (
-                    "geometry",
-                    "proj:geometry",
-                ):
-                    paths.append(p)
-                else:
-                    walk(f.dataType, p)
-
-    walk(schema, ())
-    return paths
+def _wkb_paths(schema: T.StructType) -> list[tuple[str, ...]]:
+    paths = geometry_paths(schema)
+    return [p for p, dt in paths.items() if isinstance(dt, T.BinaryType)]
 
 
 def _clean(v: Any) -> Any:
-    """Make a collected value JSON-serializable: numpy scalars/arrays to
-    Python, tuples to lists, drop nothing (null handling is caller's)."""
+    """Make a collected value JSON-serializable — numpy scalars/arrays to
+    Python, tuples to lists, NaN to null — and drop null-valued keys
+    (null == missing, U6)."""
     import numpy as np
 
     if isinstance(v, dict):
-        return {k: _clean(x) for k, x in v.items()}
+        return {k: c for k, x in v.items() if (c := _clean(x)) is not None}
     if isinstance(v, (list, tuple)):
         return [_clean(x) for x in v]
     if isinstance(v, np.ndarray):
@@ -171,53 +153,23 @@ def _clean(v: Any) -> Any:
     return v
 
 
-def _strip_nulls(v: Any) -> Any:
-    """Drop None-valued keys recursively (null == missing, U6)."""
-    if isinstance(v, dict):
-        return {k: _strip_nulls(x) for k, x in v.items() if x is not None}
-    if isinstance(v, list):
-        return [_strip_nulls(x) for x in v]
-    return v
-
-
-def _set_path(d: dict, path: tuple[str, ...], value: Any) -> None:
-    for k in path[:-1]:
-        nxt = d.get(k)
-        if not isinstance(nxt, dict):
-            return
-        d = nxt
-    if path[-1] in d or value is not None:
-        d[path[-1]] = value
-
-
-def _get_path(d: dict, path: tuple[str, ...]) -> Any:
-    for k in path:
-        if not isinstance(d, dict):
-            return None
-        d = d.get(k)
-    return d
-
-
 def row_to_item(row_dict: dict, geom_paths: list[tuple[str, ...]]) -> dict:
     """One normalized row (already in JSON shape) -> STAC Item dict:
-    decode WKB geometry paths, strip all-null assets, drop nulls,
+    drop nulls, decode WKB geometry paths, strip all-null assets,
     default type='Feature'."""
     item = _clean(row_dict)
-    for path in geom_paths:
-        raw = _get_path(item, path)
-        if raw is not None:
-            _set_path(item, path, _wkb_mod.wkb_to_geojson(raw))
+    for *parents, leaf in geom_paths:
+        d = item
+        for k in parents:
+            d = d.get(k) if isinstance(d, dict) else None
+        if isinstance(d, dict) and leaf in d:
+            d[leaf] = _wkb_mod.wkb_to_geojson(d[leaf])
     assets = item.get("assets")
     if isinstance(assets, dict):
         # U5: struct-union artifacts — assets whose value is entirely
-        # null exist only because the schema is the union across rows
-        item["assets"] = {
-            k: v
-            for k, v in assets.items()
-            if isinstance(v, dict)
-            and any(x is not None for x in v.values())
-        }
-    item = _strip_nulls(item)
+        # null (now empty) exist only because the schema is the union
+        # across rows
+        item["assets"] = {k: v for k, v in assets.items() if isinstance(v, dict) and v}
     if "type" not in item:
         item["type"] = "Feature"  # K3 parity (arrow/_api.py:394-400)
     return item
@@ -228,7 +180,7 @@ def to_item_dicts(df: DataFrame, precision: str = "us") -> Iterator[dict]:
     arrow/_api.py:347-367). Streams via toLocalIterator — the driver
     never holds the full table."""
     shaped = to_json_shape(df, precision=precision)
-    geom_paths = _geometry_binary_paths(shaped.schema)
+    geom_paths = _wkb_paths(shaped.schema)
     for row in shaped.toLocalIterator():
         yield row_to_item(row.asDict(recursive=True), geom_paths)
 
@@ -242,7 +194,7 @@ def to_ndjson(df: DataFrame, path: str, precision: str = "us", mode: str = "appe
     # the package so workers can import it whatever the driver's cwd
     ensure_worker_imports(df.sparkSession)
     shaped = to_json_shape(df, precision=precision)
-    geom_paths = _geometry_binary_paths(shaped.schema)
+    geom_paths = _wkb_paths(shaped.schema)
     out_schema = T.StructType([T.StructField("json", T.StringType())])
 
     def emit(batches):

@@ -16,6 +16,12 @@ any inference, `patch_null_types` replays the reference's
 manual_updates() (arrow/_schema/models.py:61-105): all-null datetime
 columns become timestamps, proj:epsg becomes int64, proj:wkt2 string —
 the patch that keeps Delta (which rejects void columns) working.
+
+`geometry_paths` is the one statement of where an item keeps geometry
+(the reference's arrow/_batch.py:96-122 walk): the forward read types
+exactly those fields as raw JSON text, T1 encodes them to WKB, the
+inverse decodes them and the GeoParquet sink lists the top-level ones
+in its ``geo`` metadata.
 """
 
 from __future__ import annotations
@@ -23,7 +29,11 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from stac_geoparquet_spark.stac.constants import DATETIME_COLUMNS
+from stac_geoparquet_spark.stac.constants import (
+    DATETIME_COLUMNS,
+    GEOMETRY,
+    PROJ_GEOMETRY,
+)
 
 FULL_FILE = "FullFile"
 FIRST_BATCH = "FirstBatch"
@@ -39,6 +49,48 @@ _NUM_ORDER = {
     T.FloatType(): 4,
     T.DoubleType(): 5,
 }
+
+
+def geometry_paths(schema: T.StructType) -> dict[tuple[str, ...], T.DataType]:
+    """Each geometry field present in ``schema``, as field path -> type:
+    top-level ``geometry``, hoisted ``proj:geometry``,
+    ``properties.proj:geometry`` and ``assets.<k>.proj:geometry``."""
+    top = {f.name: f.dataType for f in schema.fields}
+    parents: dict[tuple[str, ...], T.DataType | None] = {
+        (): schema,
+        ("properties",): top.get("properties"),
+    }
+    if isinstance(top.get("assets"), T.StructType):
+        parents.update({("assets", a.name): a.dataType for a in top["assets"].fields})
+    paths: dict[tuple[str, ...], T.DataType] = {}
+    for prefix, dt in parents.items():
+        names = (GEOMETRY, PROJ_GEOMETRY) if prefix == () else (PROJ_GEOMETRY,)
+        if isinstance(dt, T.StructType):
+            for f in dt.fields:
+                if f.name in names:
+                    paths[prefix + (f.name,)] = f.dataType
+    return paths
+
+
+def with_geometry_as_json(schema: T.StructType) -> T.StructType:
+    """``schema`` with every `geometry_paths` field typed as a string, so
+    a JSON read yields each geometry's raw GeoJSON text: heterogeneous
+    geometry types would otherwise collapse to conflicting coordinate
+    array shapes (the reference likewise converts geometry pre-parse,
+    arrow/_batch.py:89-92)."""
+
+    def retype(st: T.StructType, paths: set[tuple[str, ...]]) -> T.StructType:
+        fields = []
+        for f in st.fields:
+            sub = {p[1:] for p in paths if p[0] == f.name}
+            if () in sub:
+                f = T.StructField(f.name, T.StringType(), True)
+            elif sub:
+                f = T.StructField(f.name, retype(f.dataType, sub), f.nullable)
+            fields.append(f)
+        return T.StructType(fields)
+
+    return retype(schema, set(geometry_paths(schema)))
 
 
 def merge_types(a: T.DataType, b: T.DataType) -> T.DataType:

@@ -262,3 +262,19 @@ def test_malformed_ast_raises_cql2error(spark):
     ):
         with pytest.raises(Cql2Error):
             cql2_to_column(bad)
+
+
+def test_s_intersects_geometry_collection_envelope(items_df):
+    """A GeometryCollection literal filters by the envelope of all its
+    members: two points, one near a/d and one inside c, span a box
+    that also reaches a and d but stays east of b."""
+    gc = {
+        "op": "s_intersects",
+        "args": [{"property": "geometry"},
+                 {"type": "GeometryCollection",
+                  "geometries": [
+                      {"type": "Point", "coordinates": [-74.0, 40.6]},
+                      {"type": "Point", "coordinates": [10.5, 45.5]},
+                  ]}],
+    }
+    assert ids(items_df, gc) == ["a", "c", "d"]

@@ -510,6 +510,33 @@ def test_dsir_no_global_window_no_cartesian(spark, sf):
     assert n_ops(plan, "BroadcastHashJoin") >= 1
 
 
+def test_dsir_per_doc_aggregate_built_once(spark, sf):
+    """DSIR has no fence: the output branch and the top-K keep-list
+    must read ONE per-doc aggregate. In the FINAL adaptive plan the
+    hashpartitioning(doc_id) shuffle is materialized once and the
+    top-K branch reads it as a ReusedExchange, so the token-scoring
+    join below it runs once per call."""
+    import re
+
+    from stac_geoparquet_spark.operators import pipeline as pl
+
+    df = pl.dsir_importance_weights(spark, sf)
+    df.collect()
+    final = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "simple"
+        )
+    )
+    final_section = final.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final_section
+    real = re.findall(r"\+\- Exchange hashpartitioning\(doc_id", final_section)
+    reused = re.findall(
+        r"ReusedExchange .*Exchange hashpartitioning\(doc_id", final_section
+    )
+    assert len(real) == 1
+    assert len(reused) == 1
+
+
 def test_token_budget_two_phase_prefix_sum(spark, sf):
     """The budget selector's running sum is the range-partitioned
     two-phase form (round-3 verdict fix): the per-doc window partitions
@@ -1283,21 +1310,20 @@ def test_oov_rate_vocab_is_takeordered_broadcast(spark, sf):
     assert n_ops(plan, "Window") == 0
 
 
-def test_anomaly_mad_is_rollup_plus_broadcast_medians(spark, sf):
-    """Both medians aggregate the calendar-bounded HOURLY ROLLUP —
-    which is FENCED, so the returned plan reads the materialized
-    rollup (one events scan total, at build time) — and come back as
-    ONE broadcast join; no window anywhere (the robustness win over
-    events_hourly_anomaly's mean/sd window)."""
+def test_anomaly_mad_is_rollup_plus_type_windows(spark, sf):
+    """Both medians are exact percentiles over the calendar-bounded
+    HOURLY ROLLUP, carried by two windows partitioned by event type:
+    the whole med -> absdev -> mad chain is one plan with ONE events
+    scan and no join (no fence, no broadcast)."""
     from stac_geoparquet_spark.operators import quality
 
     plan = plan_of(quality.events_anomaly_mad(spark, sf))
-    assert n_ops(plan, "Window") == 0
-    assert n_ops(plan, "BroadcastHashJoin") == 1
+    assert n_ops(plan, "Window") == 2
+    assert n_ops(plan, "Scan parquet") == 1
+    assert n_ops(plan, "BroadcastHashJoin") == 0
     assert n_ops(plan, "SortMergeJoin") == 0
     assert "percentile" in plan
-    # the fence is real: the returned plan never rescans the parquet
-    assert "events.parquet" not in plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_dup_rate_by_source_is_one_keyed_rollup(spark, sf):
@@ -1549,12 +1575,13 @@ def test_fdr_bh_alphabet_windows_after_aggregate(spark, sf):
     assert n_ops(plan, "CartesianProduct") == 0
     assert n_ops(plan, "SortMergeJoin") == 0
     assert "BatchEvalPython" not in plan
-    # the alphabet-bounded moment table is FENCED: its three consumers
-    # (m count, testable branch, untestable branch) read materialized
-    # rows — the final plan holds ZERO corpus scans
+    # the alphabet-bounded moment table is FENCED: its consumers read
+    # materialized rows — the final plan holds ZERO corpus scans
     assert n_ops(plan, "Scan parquet") == 0
-    assert n_ops(plan, "Scan ExistingRDD") >= 3
-    assert n_ops(plan, "BroadcastNestedLoopJoin") == 2  # m onto each
+    assert n_ops(plan, "Scan ExistingRDD") == 2
+    # m rides a window over the scored rows, not a broadcast join
+    assert n_ops(plan, "BroadcastNestedLoopJoin") == 0
+    assert n_ops(plan, "Window") == 4
 
 
 def test_harmonic_centrality_topk_over_fences(spark, sf):
@@ -1856,14 +1883,16 @@ def test_benford_single_orders_scan(spark, sf):
 
 def test_attribution_single_user_window(spark, sf):
     """The carry-forward runs in ONE window over the scaling user_id;
-    the touch rollup is fenced so the totals join reads materialized
-    rows — the returned plan has no events scan and no second
-    window."""
+    the total rides a second, unpartitioned window over the
+    type-alphabet-bounded touch rollup — one scan of the canonical
+    layout, no fence, no join."""
     from stac_geoparquet_spark.operators import audit
 
     plan = plan_of(audit.events_attribution_last_touch(spark, sf))
-    assert "events.parquet" not in plan  # canon layout + fence upstream
-    assert n_ops(plan, "Window") == 0  # window ran at build time
+    assert "events.parquet" not in plan  # reads the canon layout
+    assert n_ops(plan, "Scan parquet") == 1
+    assert n_ops(plan, "Window") == 2
+    assert "ExistingRDD" not in plan
     assert "CartesianProduct" not in plan
 
 
@@ -2761,35 +2790,34 @@ def test_theil_sen_fenced_rollup_one_window(spark, sf):
     assert "ExistingRDD" in plan
 
 
-def test_heaps_fit_fenced_curve(spark, sf):
-    """The Heaps output joins the FENCED 10-row curve with its fit —
-    the two corpus passes (first occurrence, lengths) and the cutoff
-    broadcast ran once at build time; the consumer plan holds no
-    parquet scan, no window, no cartesian, no Python."""
+def test_heaps_fit_window_over_curve(spark, sf):
+    """The Heaps fit rides ONE unpartitioned window over the 10-row
+    curve, which has a single consumer: the two corpus passes (first
+    occurrence, lengths) run once in-plan, both reading the FENCED
+    10-row cutoff table — no cartesian, no Python."""
     from stac_geoparquet_spark.operators import curation
 
     plan = plan_of(curation.text_heaps_law_fit(spark, sf))
-    assert n_ops(plan, "Scan parquet") == 0
-    assert n_ops(plan, "Window") == 0
-    assert n_ops(plan, "CartesianProduct") == 0
-    assert "BatchEvalPython" not in plan
-    assert "ExistingRDD" in plan
-
-
-def test_bootstrap_ci_one_point_pass(spark, sf):
-    """The percentile CI ranks the FENCED 200-row replicate means (the
-    x B explode ran once at build time); the consumer plan is the one
-    point-estimate scan + the bounded rank — one parquet scan, one
-    window over the constant replicate table, no cartesian, no
-    Python."""
-    from stac_geoparquet_spark.operators import timeseries
-
-    plan = plan_of(timeseries.events_bootstrap_ci(spark, sf))
-    assert n_ops(plan, "Scan parquet") == 1
+    assert n_ops(plan, "Scan parquet") == 2
+    assert n_ops(plan, "Scan ExistingRDD") == 2  # the cutoff fence
     assert n_ops(plan, "Window") == 1
     assert n_ops(plan, "CartesianProduct") == 0
     assert "BatchEvalPython" not in plan
-    assert "ExistingRDD" in plan
+
+
+def test_bootstrap_ci_windows_over_replicates(spark, sf):
+    """The percentile CI ranks the 200-row replicate means, whose count
+    rides a second unpartitioned window over the same bounded rows (no
+    fence): one plan with the point-estimate scan and the x B explode
+    scan, two windows, no cartesian, no Python."""
+    from stac_geoparquet_spark.operators import timeseries
+
+    plan = plan_of(timeseries.events_bootstrap_ci(spark, sf))
+    assert n_ops(plan, "Scan parquet") == 2
+    assert n_ops(plan, "Window") == 2
+    assert n_ops(plan, "CartesianProduct") == 0
+    assert "BatchEvalPython" not in plan
+    assert "ExistingRDD" not in plan
 
 
 def test_rm3_one_filtered_tokenize_pass(spark, sf):
@@ -2809,15 +2837,16 @@ def test_rm3_one_filtered_tokenize_pass(spark, sf):
 
 
 def test_stl_decompose_fenced_rollup(spark, sf):
-    """The decomposition consumes the fenced calendar rollup and the
-    fenced 7-row seasonal table: no parquet scan, no window, no
-    cartesian, no Python in the consumer plan — the x7 lag explode
-    and both tiny aggregates are hash joins on the fence."""
+    """The decomposition consumes the fenced calendar rollup: no
+    parquet scan, no cartesian, no Python in the consumer plan — the
+    x7 lag explode and the tiny aggregates are hash joins on the
+    fence, and the centering mean is ONE unpartitioned window over
+    the 7-row seasonal table."""
     from stac_geoparquet_spark.operators import timeseries
 
     plan = plan_of(timeseries.orders_stl_decompose(spark, sf))
     assert n_ops(plan, "Scan parquet") == 0
-    assert n_ops(plan, "Window") == 0
+    assert n_ops(plan, "Window") == 1
     assert n_ops(plan, "CartesianProduct") == 0
     assert "BatchEvalPython" not in plan
     assert "ExistingRDD" in plan

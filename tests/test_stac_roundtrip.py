@@ -219,3 +219,59 @@ def test_featurecollection_union_of_fields_across_files(spark, tmp_path):
     df = read_stac_json(spark, [str(p1), str(p2)])
     assert "only_in_second" in df.schema["properties"].dataType.names
     assert df.count() == 2
+
+
+def test_geojson_outside_geometry_paths_roundtrips_as_object(spark, tmp_path):
+    """Only the STAC geometry fields become WKB; a GeoJSON object
+    anywhere else (an asset's ``geometry``, ``geometry`` inside a
+    property list) is ordinary nested data and must come back as the
+    same object, not as its JSON text."""
+
+    def square(x0, y0):
+        ring = [[x0, y0], [x0 + 1.0, y0], [x0 + 1.0, y0 + 1.0], [x0, y0]]
+        return {"type": "Polygon", "coordinates": [ring]}
+
+    items = [
+        {
+            "type": "Feature",
+            "stac_version": "1.0.0",
+            "id": f"i{i}",
+            "geometry": square(float(i), 0.0),
+            "bbox": [float(i), 0.0, i + 1.0, 1.0],
+            "properties": {
+                "datetime": "2024-01-01T00:00:00Z",
+                "footprints": [
+                    {"name": "scene", "geometry": square(float(i), 0.5)}
+                ],
+            },
+            "assets": {
+                "x": {
+                    "href": f"https://example.com/{i}.tif",
+                    "geometry": square(0.5, float(i)),
+                }
+            },
+            "links": [],
+        }
+        for i in range(2)
+    ]
+    df, out = _roundtrip(spark, tmp_path, items)
+    assert isinstance(df.schema["geometry"].dataType, T.BinaryType)
+    ok, why = items_equal(items, out)
+    assert ok, why
+    assert out[0]["assets"]["x"]["geometry"] == items[0]["assets"]["x"]["geometry"]
+
+
+def test_featurecollection_files_roundtrip_union_of_fields(spark, tmp_path):
+    """With no schema given, a property present only in the second
+    FeatureCollection file reaches the items read back."""
+    from stac_geoparquet_spark.stac import read_items, to_item_dicts
+
+    items = fx.sentinel_like_items(2)
+    items[1]["properties"]["only_in_second"] = 7
+    paths = []
+    for i, item in enumerate(items):
+        paths.append(str(tmp_path / f"fc{i}.json"))
+        fx.write_feature_collection([item], paths[-1])
+    out = list(to_item_dicts(read_items(spark, paths)))
+    ok, why = items_equal(items, out)
+    assert ok, why
