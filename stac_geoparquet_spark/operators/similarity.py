@@ -2667,7 +2667,8 @@ def _matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keep identical columns below _rank_topk's query_id exchange (the
     # window needs the full row for ordering, so pruning cannot
     # diverge) and AQE stage reuse runs the GEMM once at runtime
-    # (ReusedExchange verified in plans/r11/matryoshka_..._final.txt);
+    # (one ReusedExchange in the final adaptive plan, pinned by
+    # tests/test_plans.py::test_matryoshka_truncated_topk_built_once);
     # the fence's construction-time GEMM job disappears.
     return _rank_topk(
         _emb_blocks(spark, sf_dir).mapInPandas(score, SCORE_SCHEMA)

@@ -9,6 +9,8 @@ if str(REPO) not in sys.path:
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MID = "/root/testdata/sf0.01"
+# the suite's session; tools/gen_plans.py records plans/shapes.json on it
+SESSION = {"app_name": "tests", "master": "local[4]", "shuffle_partitions": 4}
 
 
 def pytest_configure(config):
@@ -23,7 +25,7 @@ def pytest_configure(config):
 def spark():
     from stac_geoparquet_spark.session import get_spark
 
-    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark(**SESSION)
     yield s
     # drop every session-memoized DataFrame/state before stopping so
     # the suite's JVM memory profile stays flat regardless of how many

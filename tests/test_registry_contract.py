@@ -11,10 +11,20 @@ explode them before returning.
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 from pyspark.sql import types as T
 
 from tests.conftest import SF_DIR
+
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+)
+import gen_plans  # noqa: E402
+
+_SHAPES = gen_plans.load_shapes()
 
 
 def _names():
@@ -42,11 +52,7 @@ def test_query_output_schema_is_scalar_only(spark, name):
     # row-at-a-time Python UDF.  Broadcast 1-row-aggregate crossjoins
     # (BroadcastNestedLoopJoin) and tiny global aggregates
     # (SinglePartition) are the blessed exceptions and not flagged.
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+    plan = gen_plans.formatted_plan(df)
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, (
         f"{name}: row-at-a-time Python UDF — use built-ins or an "
@@ -54,6 +60,54 @@ def test_query_output_schema_is_scalar_only(spark, name):
     )
     _assert_no_bounded_cardinality_window(name, plan)
     _assert_percentile_inputs_bounded(name, plan)
+    # the plan shape must match its line in plans/shapes.json; after an
+    # intended plan change run `python tools/gen_plans.py` and review
+    # `git diff plans/shapes.json`
+    if name in _SHAPES:
+        shape = gen_plans.shape_of(plan)
+        diff = gen_plans.diff_shape(name, _SHAPES[name], shape)
+    else:
+        diff = gen_plans.diff_names([], [name])
+    if diff:
+        pytest.fail("\n".join(diff), pytrace=False)
+
+
+def test_shape_diff_is_one_line_naming_query_field_and_values():
+    import copy
+
+    name = "q3_shipping_priority"
+    old = _SHAPES[name]
+    new = copy.deepcopy(old)
+    bhj = new["ops"]["BroadcastHashJoin"]
+    new["ops"]["BroadcastHashJoin"] -= 1
+    assert gen_plans.diff_shape(name, old, new) == [
+        f"{name}: BroadcastHashJoin {bhj} -> {bhj - 1}"
+    ]
+    new = copy.deepcopy(old)
+    was = new["exchanges"][0]
+    new["exchanges"][0] = "SinglePartition, ENSURE_REQUIREMENTS"
+    (line,) = gen_plans.diff_shape(name, old, new)
+    assert line == (
+        f'{name}: exchanges ["{was}"] -> '
+        '["SinglePartition, ENSURE_REQUIREMENTS"]'
+    )
+    assert gen_plans.diff_shape(name, old, copy.deepcopy(old)) == []
+
+
+def test_ledger_has_one_line_per_registered_query():
+    import __spark_entry__ as entry
+
+    registered = list(entry.queries())
+    assert gen_plans.diff_names(_SHAPES, registered) == []
+    with open(gen_plans.LEDGER) as f:
+        assert f.read() == gen_plans.dump_shapes(_SHAPES)
+    first = sorted(_SHAPES)[0]
+    assert gen_plans.diff_names(sorted(_SHAPES)[1:], registered) == [
+        f"{first}: registered but has no line in plans/shapes.json"
+    ]
+    assert gen_plans.diff_names([*_SHAPES, "gone_query"], registered) == [
+        "gone_query: has a line in plans/shapes.json but is not registered"
+    ]
 
 
 # Column names whose value domain does NOT grow with the data: a window

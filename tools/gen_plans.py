@@ -1,570 +1,264 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans for representative
-queries, with the scale property each plan is chosen for. Run from the
-repo root: python tools/gen_plans.py"""
+"""Regenerate plans/shapes.json, the physical-plan shape of every
+registered query (one line per query).  Run from the repo root:
+
+    python tools/gen_plans.py
+
+Each query is built (not executed) on the test suite's session
+(``tests.conftest.SESSION`` over ``SF_DIR``) and its formatted plan is
+reduced by ``shape_of`` to:
+
+- ``ops``: count of every physical operator, by name;
+- ``scans``: per file scan, the file basename plus its ReadSchema,
+  PushedFilters, PartitionFilters, PushedAggregation and Bucketed
+  lines;
+- ``exchanges``: each Exchange's partitioning and shuffle origin;
+- ``joins``: strategy, join type, keys and residual condition;
+- ``windows``: each Window's partition keys;
+- ``funcs``: the functions the plan's expressions call (pushed-down
+  source filters are already in ``scans``).
+
+Expression ids, ``plan_id``s and hex scratch tags are stripped, hash
+partitioning keys are sorted and only the initial adaptive plan is
+kept, so the file does not depend on build order or on what ran
+before.  ``test_query_output_schema_is_scalar_only`` renders the same
+plan for every query and fails with a one-line diff per changed field
+(``q3_shipping_priority: BroadcastHashJoin 2 -> 1``).  A plan change is:
+run this script, review ``git diff plans/shapes.json``, commit.
+"""
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
+from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+LEDGER = os.path.join(REPO, "plans", "shapes.json")
 
-SF = "/root/testdata/sf0.01"
+_HEADER_RE = re.compile(r"^\((\d+)\) (.+)$")
+_EXPR_ID_RE = re.compile(r"#\d+L?")
+_PLAN_ID_RE = re.compile(r",? \[plan_id=\d+\]")
+_GEN_ALIAS_RE = re.compile(r"(_gen_alias_)\d+")
+_HEX_TAG_RE = re.compile(r"_[0-9a-f]{10,12}$")
+_FUNC_RE = re.compile(r"(?<![\w$.])([A-Za-z_]\w*)\(")
+_SCAN_FIELDS = (
+    "ReadSchema",
+    "PushedFilters",
+    "PartitionFilters",
+    "PushedAggregation",
+    "Bucketed",
+)
 
-# (query name, why this plan shape — the property to look for)
-SHOWCASE = [
-    (
-        "q1_pricing_summary",
-        "Single scan -> partial hash agg -> exchange on the 2 group keys -> "
-        "final agg, all inside WholeStageCodegen; only needed columns read "
-        "(ReadSchema) and the date filter is pushed to Parquet (PushedFilters).",
-    ),
-    (
-        "q3_shipping_priority",
-        "Fact-side scans keep their filters pushed down; the customer dim is "
-        "broadcast (BroadcastHashJoin) so the only exchange is the final "
-        "aggregation's.",
-    ),
-    (
-        "q21_waiting_suppliers",
-        "Orders joins broadcast; the per-order rollup is two chained hash "
-        "aggregates (distinct pairs, then order stats) instead of "
-        "countDistinct's Expand, and the culprit supplier falls out of the "
-        "same aggregate - one pass over the joined fact.",
-    ),
-    (
-        "dedup_minhash_lsh",
-        "One groupBy on doc_id carries signature mins AND verify doc-sets; "
-        "the band pipeline and both verify join sides reuse that single "
-        "exchange (ReusedExchange) instead of shuffling the hash table "
-        "twice.",
-    ),
-    (
-        "dedup_ngram_jaccard",
-        "Default path routes through the MinHash/LSH candidate verify: "
-        "exact Jaccard runs only on band-bucket collision pairs, never the "
-        "quadratic shared-shingle expansion (that exhaustive formulation "
-        "is kept behind exact_all_pairs=True).",
-    ),
-    (
-        "ann_lsh_bucketed",
-        "The LSH index does work: candidates come from a BroadcastHashJoin "
-        "on the bucket key against the query x Hamming<=1 probe table, so "
-        "off-bucket vectors never reach the scorer - no Q x N GEMM, no "
-        "post-hoc masking.",
-    ),
-    (
-        "ann_ivf_probe",
-        "IVF n-probe over the ivf_cell-partitioned layout: the cell "
-        "predicate shows up as PartitionFilters (INSET ...) on the layout "
-        "scan, so non-probed cells are pruned at planning time and never "
-        "read; per-query routing is a broadcast equi-join on ivf_cell.",
-    ),
-    (
-        "layout_zorder_cells",
-        "Quantization maxima arrive via a broadcast 1-row aggregate "
-        "(BroadcastNestedLoopJoin on a single row); the z-key and quadtree "
-        "cell are pure integer codegen; the rollup shuffles only 64 cell "
-        "keys.",
-    ),
-    (
-        "events_hourly_rollup",
-        "Timestamp-truncate + two-key aggregate straight off the scan; "
-        "TIMESTAMP_NTZ end-to-end so the plan is timezone-independent.",
-    ),
-    (
-        "knn_brute_force",
-        "Arrow-batched mapInPandas GEMM against a broadcast query matrix; "
-        "each batch emits only its local top-k so the final window ranks "
-        "k x n_batches rows, never Q x N.",
-    ),
-    (
-        "spatial_join_grid",
-        "PBSM spatial join: bbox sets replicated to overlapped grid cells, "
-        "then a single hash EQUI-join on the cell key (no nested-loop over "
-        "the theta predicate); responsibility-cell filter makes emission "
-        "exactly-once with zero distinct/aggregate operators.",
-    ),
-    (
-        "sample_fixed_k",
-        "Fixed-K deterministic sample plans as TakeOrderedAndProject: each "
-        "task keeps its local K smallest hashes and the driver merges — no "
-        "global sort, no single-partition stage.",
-    ),
-    (
-        "decontaminate_against_holdout",
-        "Single scan of the corpus: n-grams built once (zip_with chain — "
-        "no per-element re-tokenization), one shuffle on the gram, holdout "
-        "contamination via a gram-partition window max instead of a "
-        "branch-re-scanning train-vs-holdout self-join.",
-    ),
-    (
-        "pack_sequences",
-        "Two-phase prefix sum: the per-doc running total windows over the "
-        "doc_id div 65536 bucket (hashpartitioning(bucket)), and the only "
-        "SinglePartition stage is the |docs|/65536-row bucket-offset "
-        "table — no global single-task window over the corpus.",
-    ),
-    (
-        "chunk_documents",
-        "Zero-shuffle generate: scan -> explode(sequence) -> project; the "
-        "only exchange is the conditional small-input spreading "
-        "round-robin, absent at real scale.",
-    ),
-    (
-        "ann_pq_adc",
-        "IVFPQ search: ONE scan of the ivf_cell-partitioned layout with "
-        "the probed cells as a PartitionFilter (non-probed cells never "
-        "read), fused Arrow encode+LUT-score pass (MapInPandas), "
-        "per-batch local top-k, and WindowGroupLimit below the rank "
-        "window's shuffle — no join, no Q x N movement; a deployment "
-        "scans persisted 8-byte codes of probed cells only.",
-    ),
-    (
-        "decontam_bloom_semijoin",
-        "Skew-capped decontamination: left-semi join over the persisted "
-        "gram index with a runtime Bloom filter injected on the train-"
-        "side scan (might_contain BEFORE the shuffle) — hot grams are "
-        "dropped at the scan, not split by AQE after the fact.",
-    ),
-    (
-        "dsir_importance_weights",
-        "DSIR selection: token stream joined to the broadcast-small "
-        "log-ratio LM table, doc-keyed aggregate, then TakeOrdered + "
-        "broadcast keep-list for top-K — no global row_number window "
-        "(a single-task sort of every train doc).",
-    ),
-    (
-        "select_token_budget",
-        "Token-budget curation: range-partitioned two-phase prefix sum "
-        "(ONE rangepartitioning exchange on the greedy order, AQE-reused "
-        "by the offset branch; windows partition by spark_partition_id, "
-        "P-row offset table broadcast back) — the greedy best-first "
-        "running total with no global or fixed-band single-task window.",
-    ),
-    (
-        "cross_lang_contamination",
-        "Language-pair audit with ONE corpus scan and zero joins: each "
-        "gram aggregates its (bounded) distinct language set and pairs "
-        "explode in-row — the oracle's gram-keyed self-join would rescan "
-        "and re-shingle the corpus per side.",
-    ),
-    (
-        "dedup_substring_spans",
-        "Char-shingle duplicated-span coverage: strided substr explode "
-        "(len/stride rows per doc), cross-doc test as a window min/max "
-        "over the shingle hash (no self-join), two-phase doc-keyed "
-        "rollup.",
-    ),
-    (
-        "decontam_incremental",
-        "Ingest-time decontamination: stateless in-row array_distinct "
-        "gram explode, then a BroadcastHashJoin against the static "
-        "holdout gram index — the same plan the streaming path runs "
-        "per micro-batch with zero aggregation state.",
-    ),
-    (
-        "fingerprint_winnowing",
-        "MOSS-style winnowing computed entirely in-row (projected "
-        "norm/hash columns consumed by higher-order transforms): one "
-        "scan, zero Generate/aggregate/window — a pure map stage at "
-        "any corpus size.",
-    ),
-    (
-        "sketch_cms_heavy_hitters",
-        "Count-min sketch build as a (row, bucket)-keyed two-phase "
-        "aggregate bounded at 4x256 cells regardless of corpus size; "
-        "estimates via a broadcast join of the distributed exact top-K "
-        "(TakeOrderedAndProject) against the cell table.",
-    ),
-    (
-        "bloom_filter_semijoin",
-        "Runtime Bloom-filter injection on the shuffle-join path: "
-        "bloom_filter_agg builds from the filtered dim at runtime and "
-        "might_contain prunes the fact scan BEFORE the join exchange — "
-        "the shuffle-side sibling of dynamic partition pruning.",
-    ),
-    (
-        "quality_repetition",
-        "Gopher repetition gate with the 2-gram rollup computed IN-ROW "
-        "(run lengths over the sorted gram array): one scan, zero "
-        "aggregates, zero Generate, zero shuffles — the explode -> "
-        "(doc, gram) count -> rollup form paid two corpus-sized "
-        "exchanges (measured 3.3x slower).",
-    ),
-    (
-        "semdedup_cells",
-        "SemDeDup: one scan of the ivf_cell-partitioned layout into a "
-        "grouped per-cell GEMM (FlatMapGroupsInPandas) — the quadratic "
-        "pair space is bounded per cell and never materializes through "
-        "Catalyst; the only exchange is the groupBy(cell) hash.",
-    ),
-    (
-        "edit_distance_join",
-        "AllPairs-style string-similarity join: candidates from an "
-        "equi-join on each name's q*tau+1 globally-rarest q-grams "
-        "(frequency table broadcast — bounded by charset^q), exact "
-        "Levenshtein verify on candidates only; the exhaustive oracle "
-        "re-proves candidate completeness every gate run.",
-    ),
-    (
-        "kmv_source_overlap",
-        "KMV set-intersection sketch: two-phase bottom-K build — local "
-        "bottom-K per (source, shuffle partition), bounded P*K aggregate "
-        "merge (no bare-source window sorting a source's full hash set) "
-        "— sketches merged and re-cut at K for the overlap estimate, "
-        "never a corpus-wide content join.",
-    ),
-    (
-        "dedup_substring_removal",
-        "Tile-grid ExactSubstr removal: duplicated tiles found by hash "
-        "grouping (one corpus-scaling window, ZERO joins — linear where "
-        "candidate-pair matching goes quadratic on hot spans); cleaned "
-        "text rebuilt in-row from the kept tiles.",
-    ),
-    (
-        "cap_docs_per_source",
-        "Per-source quota: grouped top-K with no per-group sort — local "
-        "top-M per (source, partition) window, bounded P*M threshold "
-        "merge, broadcast threshold join; selected = key <= M-th-best "
-        "pair.",
-    ),
-    (
-        "ngram_novelty_by_source",
-        "First-occurrence novelty: gram ownership is a map-side-combining "
-        "min aggregate and the owned-count aggregates the OWNERS table "
-        "(one row per distinct gram) — no join carries the gram hash, so "
-        "hot stop-phrase grams never expand; everything after the two "
-        "gram aggs is one row per document.",
-    ),
-    (
-        "dedup_containment",
-        "Directional containment: candidate pairs only from RARE grams "
-        "(df <= cap bounds posting expansion — the pairs high-containment "
-        "detection needs that Jaccard-banded LSH structurally misses); "
-        "exact verify joins the bounded candidate set to per-doc gram "
-        "arrays and intersects in the JVM.",
-    ),
-    (
-        "knn_label_agreement",
-        "Label-noise audit: cell-grouped Python stage bounds the pair "
-        "space at |cell|^2 (SemDeDup's scaling argument) and emits "
-        "per-label PARTIALS, so the final rollup shuffles |labels| x "
-        "|cells| rows; the canonical-by-id window gets WindowGroupLimit "
-        "partial/final pushdown.",
-    ),
-    (
-        "embedding_random_projection",
-        "JL projection: broadcast 64x8 matrix, one numpy GEMM per Arrow "
-        "batch, zero joins/windows — the only exchanges are the toy-scale "
-        "spread and the canonical-by-id build agg; at 100 TB this is a "
-        "pure map over the scan.",
-    ),
-    (
-        "sample_weighted_k",
-        "Weighted sampling (A-ES) plans as TakeOrderedAndProject: "
-        "per-partition top-K then a K*P merge - never a global Sort or a "
-        "row_number window funnelling the corpus through one task.",
-    ),
-    (
-        "events_decayed_activity",
-        "The max-anchor window and the final per-user aggregate share one "
-        "hashpartitioning(user_id) exchange; every exponent is <= 0 by "
-        "construction so the decay can never overflow on a long time axis.",
-    ),
-    (
-        "sketch_hll_distinct",
-        "Sketch state is a two-phase aggregate to (event_type, bucket) "
-        "rows - bounded by the sketch, not the data; the 2^-M fold is "
-        "exact in a double so the estimator is deterministic cross-engine.",
-    ),
-    (
-        "source_unigram_divergence",
-        "KL regrouped so the only window keys on the unbounded token; the "
-        "bounded source totals fall out of the final aggregate instead of "
-        "a window over the ~20-value source key the registry sweep bans.",
-    ),
-    (
-        "basket_part_pairs",
-        "Pair mining as a self-EQUI-join on the order key (per-order "
-        "fan-out bounded by basket size, never a cartesian pair space); "
-        "lift margins join back keyed and the 1-row order count is the "
-        "only broadcast-nested-loop input.",
-    ),
-    (
-        "events_dau_wau",
-        "Distinct-over-window without a window: the x7 day fan-out "
-        "(Generate) sits ABOVE the (user, day) dedup aggregate, so event "
-        "volume never rides the explode and WAU is a keyed count of "
-        "re-deduped pairs.",
-    ),
-    (
-        "hll_event_type_overlap",
-        "Sketch set algebra: every pairwise union merges the per-type "
-        "REGISTER table (m rows/type) — adding a pair costs a 64-row "
-        "max-merge, never an events rescan; the exact reference "
-        "self-joins deduped (type, user) pairs with alphabet-bounded "
-        "fan-out.",
-    ),
-    (
-        "ann_recall_report",
-        "Index eval joins two <=|Q|xK top-K sets on (query, neighbor); "
-        "the ground-truth side scores only the bounded query sample and "
-        "the index side reuses the bucket equi-join — recall is a keyed "
-        "count ratio, no new data-sized stage.",
-    ),
-    (
-        "text_token_entropy",
-        "Per-doc entropy in the ln(n) - sum(c ln c)/n form: one explode, "
-        "two map-side-combined aggregates on scaling keys — no window, "
-        "no join, and the per-doc float sum is bounded by doc length so "
-        "round(,6) sits ~8 orders above merge noise.",
-    ),
-    (
-        "bm25_topk_retrieval",
-        "Retrieval without a global sort: postings filter to the constant "
-        "query-term set BEFORE the (doc, term) aggregate, df/corpus stats "
-        "join back broadcast, and the top-K is TakeOrderedAndProject "
-        "(per-task tournament); the ranking window sees K rows.",
-    ),
-    (
-        "chi2_discriminative_terms",
-        "Feature selection with ONE corpus explode: term presence is "
-        "array_distinct in-row, the df total is a window over the "
-        "COMPACTED (term, source) counts partitioned on the scaling term "
-        "key — a second groupBy pass would re-plan the explode into the "
-        "join's other side.",
-    ),
-    (
-        "graph_kcore_parts",
-        "Fixpoint peeling behind the lineage fence: the returned plan is "
-        "one degree aggregate over the final checkpointed edge set — the "
-        "per-round degree filters and semi-joins ran once at build time "
-        "on the bounded pair graph, never on lineitem.",
-    ),
-    (
-        "kmeans_silhouette",
-        "Cluster eval as a pure map: centroids are K x d literals from "
-        "the shared fit, per-point a/b/s fold in-row, and the only "
-        "exchange is the per-cluster rollup of exact integer micro-unit "
-        "silhouettes.",
-    ),
-    (
-        "user_survival_km",
-        "KM spine bounded by calendar hours: the corpus compacts through "
-        "the user_id aggregate, the lifetime rollup shrinks it again, and "
-        "only then do the two unpartitioned cumulative windows run — "
-        "their input can never grow with event volume.",
-    ),
-    (
-        "orders_autocorrelation",
-        "The lag join runs entirely on the FENCED daily rollup "
-        "(calendar-bounded): one orders scan at build time, a broadcast "
-        "hash join over the 7-lag explode in the returned plan, Pearson "
-        "r as one double expression over exact int64 moments.",
-    ),
-    (
-        "events_psi_drift",
-        "Data-derived split point = inherent two-pass: min/max row plus "
-        "the conditional per-type counts, both map-side combining; the "
-        "type-alphabet-bounded rollup is fenced so the totals join "
-        "never re-plans the events scan.",
-    ),
-    (
-        "events_attribution_last_touch",
-        "One carry-forward window over the scaling user_id (last_value "
-        "IGNORE NULLS), then a keyed rollup on the bounded touch type; "
-        "the fence keeps the totals join off the window chain — the "
-        "returned plan reads materialized rows only.",
-    ),
-    (
-        "split_leakage_audit",
-        "Pure in-row projection + filter over the session-cached, "
-        "fenced verified-pair table: the near-dup work is paid once by "
-        "the dedup family; the audit itself adds zero shuffles.",
-    ),
-    (
-        "embedding_centroid_drift",
-        "One embeddings scan; micro-unit quantization per row, exact "
-        "int64 sums compacting map-side onto the bounded label x dim "
-        "key; the dimension-axis dot/norm/l2 reductions are ordered "
-        "in-row folds over dim-sorted arrays, never a float row "
-        "aggregate.",
-    ),
-    (
-        "part_affinity_topk",
-        "Item-item retrieval off the session-cached co-purchase pair "
-        "table (the self-join paid once across the mining/graph "
-        "family); the one ranking window partitions by the scaling "
-        "part key and plans with WindowGroupLimit, so the K-filter "
-        "runs inside the sort.",
-    ),
-    (
-        "events_seasonal_anomaly",
-        "Three-tier compaction: corpus -> fenced hourly rollup "
-        "(calendar-bounded) -> 168-slot baseline (broadcast) -> "
-        "in-row z; the returned plan never touches the events scan.",
-    ),
-    (
-        "quantiles_user_value_exact",
-        "Exact quantiles over an unbounded-distinct domain with NO "
-        "percentile buffer: ONE rangepartitioning exchange feeds both "
-        "the in-partition rank window (partitioned by the scaling "
-        "spark_partition_id) and the P-row offset branch — AQE reuses "
-        "the exchange (ReusedExchange in the final plan), and the "
-        "3-row rank targets join back broadcast.",
-    ),
-    (
-        "orders_interarrival_burstiness",
-        "The lag window and the gap-moment aggregate share ONE "
-        "o_custkey exchange (the aggregate regroups the window's own "
-        "partitioning); moments are exact int64, the burstiness "
-        "expression is a pure projection.",
-    ),
-    (
-        "tokenize_bpe_encode",
-        "Greedy subword encode with the sequential scan confined to "
-        "the DISTINCT word table: the session-cached merge table "
-        "arrives as a 1-row broadcast (BroadcastNestedLoopJoin), the "
-        "fold is an in-row aggregate() expression (no Python), and "
-        "corpus weighting re-joins on the vocab-scaled word key.",
-    ),
-    (
-        "orders_mann_whitney_u",
-        "Global average ranks WITHOUT a global window or sampled "
-        "range boundaries: the exclusive prefix runs per "
-        "DETERMINISTIC value-domain bucket (cents div 2^20 — each "
-        "window partition is hard-bounded by the bucket width at any "
-        "corpus size) with the tiny bucket-offset table broadcast "
-        "back; no spark_partition_id anywhere in the plan.",
-    ),
-    (
-        "cap_docs_per_domain",
-        "Per-domain cap through the twophase scaffold: the only "
-        "window keys on (domain, spark_partition_id) — never the "
-        "bounded domain alone — and the K-th-best thresholds join "
-        "back broadcast, so a hot domain cannot create a hot "
-        "partition.",
-    ),
-    (
-        "graph_modularity_score",
-        "Partition-quality audit over the session-cached LPA state: "
-        "the returned plan reads fenced leaves (ExistingRDD), "
-        "aggregates exact int64 A/B/m2 scalars, and combines them as "
-        "1-row broadcast joins — zero corpus scans.",
-    ),
-    (
-        "events_jackknife_ci",
-        "Delete-a-group jackknife with ONE corpus scan: user-keyed agg "
-        "-> 20-row bucket agg -> totals via an unpartitioned window "
-        "over the bucket rows.  The naive totals-aggregate crossJoin "
-        "re-planned the WHOLE corpus scan into the broadcast side "
-        "(Catalyst does not CSE aggregate subtrees) — the plan pin "
-        "asserts Scan parquet == 1.",
-    ),
-    (
-        "approx_quantiles_histogram",
-        "Mergeable histogram quantiles with NO range exchange (the "
-        "exact-quantiles op pays one): value-domain buckets aggregate "
-        "map-side, the cumsum windows run over the bounded bucket "
-        "list, and the 3 requested quantiles probe via a tiny "
-        "broadcast non-equi join.",
-    ),
-    (
-        "blocking_quality_report",
-        "ER blocking eval whose exhaustive truth side is an EQUI-join "
-        "on a lossless length bucket (|len diff| <= tau is necessary "
-        "for dist <= tau) — no CartesianProduct anywhere despite the "
-        "all-pairs semantics; candidates reuse the shared q-gram "
-        "prefix-filter stages.",
-    ),
-    (
-        "hybrid_rrf_retrieval",
-        "Join-free rank fusion: the two top-K lists union and collapse in "
-        "ONE hash aggregate (Spark cannot broadcast full-outer joins — the "
-        "join form would SortMergeJoin); the ranking window's input is the "
-        "bounded per-query union.",
-    ),
-    (
-        "ql_dirichlet_topk",
-        "Two linear corpus passes (lengths + query-filtered postings) "
-        "joined CO-KEYED on doc_id (SortMergeJoin by choice — neither side "
-        "broadcasts at scale); smoothing statistics are fenced 1-row "
-        "aggregates; the global top-K is TakeOrderedAndProject.",
-    ),
-    (
-        "graph_adamic_adar",
-        "Link prediction never touches the corpus: wedges, degrees, and the "
-        "LEFT ANTI edge filter all key on the fenced support-filtered pair "
-        "set; the global top-K is TakeOrderedAndProject, no global sort.",
-    ),
-    (
-        "events_bootstrap_ci",
-        "The x200 Poisson-replicate explode map-side combines to B rows per "
-        "task; the CI ranks the FENCED 200-row replicate table — consumer "
-        "plan: one point-estimate scan + a constant-input window.",
-    ),
-    (
-        "orders_stl_decompose",
-        "All corpus work is the fenced calendar rollup; the centered MA is "
-        "a x7 constant lag explode joined on dates, the seasonal table a "
-        "broadcast 7-row aggregate — consumer plan has zero parquet scans.",
-    ),
-    (
-        "text_mattr_diversity",
-        "Pure in-row array arithmetic: one scan, ZERO exchanges of computed "
-        "data (the only exchange is read_spread's toy-input block spread) — "
-        "the token array materializes once as a named column because "
-        "Catalyst does not CSE inside lambda bodies.",
-    ),
-    (
-        "hard_negative_mining",
-        "Per-query pos/neg maxima as block-GEMM partials: one "
-        "MapInPandas emits ONE row per (query, block) and a |Q|-row "
-        "max-merge finishes — the pairwise similarity matrix never "
-        "materializes through Catalyst.",
-    ),
-]
 
-HEADER = """# PLANS — physical-plan evidence for headline queries
+def formatted_plan(df) -> str:
+    """The formatted physical plan that ``df.explain("formatted")``
+    prints, as a string."""
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    return df._jdf.queryExecution().explainString(mode.fromString("formatted"))
 
-Generated by `tools/gen_plans.py` (sf0.01 inputs; plan *shapes* are
-scale-independent — AQE may further coalesce partitions at runtime).
-Each section states the property the plan was engineered for; the
-regression suite in `tests/test_plans.py` pins these shapes (pushdown,
-pruning, broadcast choices, exchange counts) so they can't silently
-regress.
-"""
+
+def _clean(text: str) -> str:
+    text = _PLAN_ID_RE.sub("", _EXPR_ID_RE.sub("", text))
+    return _GEN_ALIAS_RE.sub(r"\1", text)
+
+
+def split_args(args: str) -> list[str]:
+    """Split on ', ' outside parentheses and brackets."""
+    out, depth, start = [], 0, 0
+    for i, ch in enumerate(args):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0 and args[i + 1:i + 2] == " ":
+            out.append(args[start:i])
+            start = i + 2
+    out.append(args[start:])
+    return out
+
+
+def _op_name(header: str) -> str:
+    name = header.split(" [", 1)[0].strip()
+    words = name.split()
+    if words[0] in ("Scan", "BatchScan"):
+        return " ".join(words[:2])
+    return name
+
+
+def _partitioning(args: str) -> str:
+    parts = split_args(args)
+    part = parts[0]
+    m = re.match(r"hashpartitioning\((.*)\)$", part)
+    if m:
+        keys = split_args(m.group(1))
+        part = f"hashpartitioning({', '.join(sorted(keys[:-1]) + keys[-1:])})"
+    return ", ".join([part] + parts[1:])
+
+
+def _file_names(location: str) -> list[str]:
+    paths = re.findall(r"file:([^,\]\s]+)", location)
+    return [
+        _HEX_TAG_RE.sub("", os.path.basename(p.rstrip("/"))) for p in paths
+    ]
+
+
+def _initial_plan_ids(trees: list[str]) -> set[str]:
+    """Operator ids in the plan trees outside any ``== Final Plan ==``
+    section.  An adaptive plan that has already run (a cached relation
+    materialized at construction time, or by an earlier query) prints
+    its final plan next to the initial one; the shape keeps only the
+    initial plan, so it does not depend on what ran before."""
+    ids, final_col = set(), None
+    for tree in trees:
+        for ln in tree.splitlines():
+            col = len(ln) - len(ln.lstrip(" :|+-"))
+            body = ln[col:]
+            if final_col is not None and (
+                col < final_col
+                or (col == final_col and body.startswith("== Initial Plan"))
+            ):
+                final_col = None
+            if body.startswith("== Final Plan"):
+                final_col = col
+            elif final_col is None and not body.startswith("Subquery:"):
+                m = re.search(r"\((\d+)\)", body)
+                if m:
+                    ids.add(m.group(1))
+    return ids
+
+
+def shape_of(plan: str) -> dict:
+    """Reduce a formatted physical plan to its order-independent shape."""
+    ops: Counter = Counter()
+    scans, exchanges, joins, windows = [], [], [], []
+    funcs: set[str] = set()
+    blocks = [b.strip("\n").splitlines() for b in plan.split("\n\n")]
+    blocks = [lines for lines in blocks if lines]
+    heads = [_HEADER_RE.match(lines[0]) for lines in blocks]
+    initial = _initial_plan_ids(
+        ["\n".join(lines) for lines, h in zip(blocks, heads) if h is None]
+    )
+    for lines, head in zip(blocks, heads):
+        if head is None or head.group(1) not in initial:
+            continue
+        name = _op_name(head.group(2))
+        ops[name] += 1
+        fields = {}
+        for ln in lines[1:]:
+            key, sep, value = ln.partition(": ")
+            if sep:
+                fields[key.strip()] = _clean(value.strip())
+            if not ln.startswith(("Location", "PushedFilters")):
+                funcs.update(_FUNC_RE.findall(ln))
+        if "Location" in fields:
+            scan = {"file": ", ".join(_file_names(fields["Location"]))}
+            scan.update((k, fields[k]) for k in _SCAN_FIELDS if k in fields)
+            scans.append(scan)
+        elif name == "Exchange":
+            exchanges.append(_partitioning(fields["Arguments"]))
+        elif name.endswith("Join"):
+            # "Left keys [n]: [...]" / "Right keys [n]: [...]"
+            keys = {k.split(" [")[0]: v for k, v in fields.items()}
+            left = keys.get("Left keys", "")
+            right = keys.get("Right keys", "")
+            join = f"{name} {fields.get('Join type', '')}"
+            if left:
+                join += f" {left} = {right}"
+            cond = fields.get("Join condition", "None")
+            if cond != "None":
+                join += f" if {cond}"
+            joins.append(join)
+        elif name == "Window":
+            # [functions], [partition keys], [order keys]; an empty key
+            # list is not printed, and order keys carry ASC/DESC
+            keys = [
+                arg
+                for arg in split_args(fields["Arguments"])[1:]
+                if not re.search(r" (ASC|DESC) NULLS", arg)
+            ]
+            windows.append(keys[0] if keys else "[]")
+    return {
+        "ops": dict(sorted(ops.items())),
+        "scans": sorted(scans, key=lambda s: json.dumps(s, sort_keys=True)),
+        "exchanges": sorted(exchanges),
+        "joins": sorted(joins),
+        "windows": sorted(windows),
+        "funcs": sorted(funcs),
+    }
+
+
+def diff_shape(name: str, old: dict, new: dict) -> list[str]:
+    """One line per changed field: an operator count as ``old -> new``,
+    a list field as the entries only the old side has ``->`` the
+    entries only the new side has."""
+    lines = []
+    old_ops, new_ops = old.get("ops", {}), new.get("ops", {})
+    for op in sorted(set(old_ops) | set(new_ops)):
+        a, b = old_ops.get(op, 0), new_ops.get(op, 0)
+        if a != b:
+            lines.append(f"{name}: {op} {a} -> {b}")
+    for field in ("scans", "exchanges", "joins", "windows", "funcs"):
+        a = Counter(json.dumps(v, sort_keys=True) for v in old.get(field, []))
+        b = Counter(json.dumps(v, sort_keys=True) for v in new.get(field, []))
+        if a != b:
+            gone = ", ".join(sorted((a - b).elements()))
+            came = ", ".join(sorted((b - a).elements()))
+            lines.append(f"{name}: {field} [{gone}] -> [{came}]")
+    return lines
+
+
+def diff_names(recorded, registered) -> list[str]:
+    """One line per query missing from, or extra in, the ledger."""
+    recorded, registered = set(recorded), set(registered)
+    return [
+        f"{n}: registered but has no line in plans/shapes.json"
+        for n in sorted(registered - recorded)
+    ] + [
+        f"{n}: has a line in plans/shapes.json but is not registered"
+        for n in sorted(recorded - registered)
+    ]
+
+
+def load_shapes() -> dict:
+    with open(LEDGER) as f:
+        return json.load(f)
+
+
+def dump_shapes(shapes: dict) -> str:
+    """One JSON object, one line per query, sorted by query name."""
+    rows = [
+        f"{json.dumps(name)}: {json.dumps(shapes[name], sort_keys=True)}"
+        for name in sorted(shapes)
+    ]
+    return "{\n" + ",\n".join(rows) + "\n}\n"
+
+
+def build_shapes(spark, sf_dir: str, names) -> dict:
+    import __spark_entry__ as entry
+
+    queries = entry.queries()
+    return {
+        name: shape_of(formatted_plan(queries[name](spark, sf_dir)))
+        for name in names
+    }
 
 
 def main() -> None:
+    sys.path.insert(0, REPO)
+    import __spark_entry__ as entry
     from stac_geoparquet_spark.session import get_spark
+    from tests.conftest import SESSION, SF_DIR
 
-    import __spark_entry__ as entry_mod
-
-    spark = get_spark(app_name="gen-plans")
+    spark = get_spark(**SESSION)
     spark.sparkContext.setLogLevel("ERROR")
-    queries = entry_mod.queries()
-
-    out = [HEADER]
-    for name, why in SHOWCASE:
-        df = queries[name](spark, SF)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        # keep the operator tree + scan details; cap very long listings
-        lines = plan.splitlines()
-        if len(lines) > 120:
-            lines = lines[:120] + ["... (truncated; run tools/gen_plans.py for full)"]
-        out.append(f"\n## {name}\n\n{why}\n\n```\n" + "\n".join(lines) + "\n```\n")
-    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
-        f.write("".join(out))
-    print("wrote PLANS.md")
+    shapes = build_shapes(spark, SF_DIR, list(entry.queries()))
     spark.stop()
+    with open(LEDGER, "w") as f:
+        f.write(dump_shapes(shapes))
+    print(f"wrote {os.path.relpath(LEDGER, REPO)}: {len(shapes)} queries")
 
 
 if __name__ == "__main__":

@@ -1,19 +1,26 @@
 #!/usr/bin/env python
-"""Solo-measure declared queries for the optimization round.
+"""Solo-measure registered queries: construction, noop-sink and count.
 
 Usage:
+  python tools/opt_probe.py                      # every registered query
   python tools/opt_probe.py q1_pricing_summary dedup_containment ...
-  python tools/opt_probe.py --plans-dir plans/r10 --suffix before q21_...
-  python tools/opt_probe.py --all-top 25          # slowest 25 from bench_detail.json
+  python tools/opt_probe.py --all-top 25         # slowest 25 from bench_detail.json
 
-For each named query: builds the bench session, runs bench.py's warmup
-shapes, then times the query with the noop sink (guide §1.4 — computes
-every column of every row, no optimizer count-shortcut) min-of-N
-(default 3), and optionally writes .explain('formatted') to
-<plans-dir>/<name>_<suffix>.txt.  Prints one line per query:
-  <name>  noop_s=<min>  count_s=<min>  jobs=<n>
-where jobs is the number of Spark jobs the noop action spawned
-(scheduling overhead proxy; fences and AQE stages add jobs).
+Builds the bench session, runs a warmup query, then for each query
+takes the min over --runs (default 3) of:
+  cons_s   building the DataFrame (``queries()[name](spark, sf)``, no
+           action): py4j expression building plus any construction-time
+           jobs such as fences and fixpoint rounds;
+  noop_s   the noop sink (computes every column of every row, no
+           optimizer count-shortcut);
+  count_s  ``.count()`` on a fresh build.
+Prints one line per query:
+  <name>  noop_s=<min>  count_s=<min>  cons_s=<min>  jobs=<n>
+where jobs is the number of Spark jobs the last construction ran (from
+the status tracker; process-level memos are warm after the first run,
+so later runs are what the bench's best-of-2 loop sees).  Ends with the
+construction total over all measured queries and one JSON line
+``{name: [noop_s, count_s, cons_s, jobs]}``.
 """
 
 from __future__ import annotations
@@ -31,14 +38,17 @@ sys.path.insert(0, REPO)
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
-    ap.add_argument("--plans-dir", default=None)
-    ap.add_argument("--suffix", default="before")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--all-top", type=int, default=0)
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    from stac_geoparquet_spark.session import get_spark
+
+    import __spark_entry__ as entry_mod
+
+    queries = entry_mod.queries()
     names = list(args.names)
     if args.all_top:
         with open(os.path.join(REPO, "bench_detail.json")) as f:
@@ -47,20 +57,22 @@ def main() -> None:
             n for n in sorted(detail, key=detail.get, reverse=True)
             if n not in names
         ][: args.all_top]
-
-    from stac_geoparquet_spark.session import get_spark
-
-    import __spark_entry__ as entry_mod
+    if not names:
+        names = sorted(queries)
 
     spark = get_spark(app_name="opt-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = entry_mod.queries()
 
     # same warmup as bench.py (JVM + codegen shapes), abbreviated
     queries["q1_pricing_summary"](spark, args.sf_dir).count()
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+
+    def last_job_id() -> int:
+        # job ids only grow; the tracker's id list is capped at
+        # spark.ui.retainedJobs, so compare maxima, not lengths
+        return max(tracker.getJobIdsForGroup(None) or [-1])
 
     results = {}
     for name in names:
@@ -69,40 +81,38 @@ def main() -> None:
         jobs = 0
         for i in range(args.runs):
             sc.setJobDescription(f"{name} run{i}")
-            j0 = len(tracker.getJobIdsForGroup(None) or [])
+            j0 = last_job_id()
             tc = time.perf_counter()
             df = fn(spark, args.sf_dir)
             best_cons = min(best_cons, time.perf_counter() - tc)
+            jobs = last_job_id() - j0
             t0 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            if dt < best_noop:
-                best_noop = dt
+            best_noop = min(best_noop, time.perf_counter() - t0)
             df2 = fn(spark, args.sf_dir)
             t0 = time.perf_counter()
             df2.count()
-            dtc = time.perf_counter() - t0
-            best_count = min(best_count, dtc)
+            best_count = min(best_count, time.perf_counter() - t0)
         sc.setJobDescription(None)
-        if args.plans_dir:
-            os.makedirs(args.plans_dir, exist_ok=True)
-            plan = fn(spark, args.sf_dir)._jdf.queryExecution().explainString(
-                sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
-            with open(
-                os.path.join(args.plans_dir, f"{name}_{args.suffix}.txt"), "w"
-            ) as f:
-                f.write(plan)
-        results[name] = (round(best_noop, 3), round(best_count, 3))
+        results[name] = [
+            round(best_noop, 3),
+            round(best_count, 3),
+            round(best_cons, 3),
+            jobs,
+        ]
         print(
             f"{name:42s} noop_s={best_noop:7.3f} count_s={best_count:7.3f}"
-            f" cons_s={best_cons:7.3f}",
+            f" cons_s={best_cons:7.3f} jobs={jobs}",
             flush=True,
         )
 
-    print(json.dumps({k: v[0] for k, v in results.items()}, sort_keys=True))
+    total = sum(v[2] for v in results.values())
+    total_jobs = sum(v[3] for v in results.values())
+    print(
+        f"TOTAL construction: {total:.1f}s, jobs={total_jobs} over "
+        f"{len(results)} queries"
+    )
+    print(json.dumps(results, sort_keys=True))
     spark.stop()
 
 
