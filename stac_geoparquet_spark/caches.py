@@ -1,31 +1,95 @@
-"""Session-cache registry (r08 verdict task #8).
+"""Session memos: intermediates derived from one source file, kept for
+the life of a Spark session.
 
-Several operator families memoize a small shared intermediate for the
-lifetime of the Spark session — a ``.cache()``'d shingle table, a
-``localCheckpoint()``'d pair graph, a K-row centroid list — so their
-second/third consumers skip the build (the ``_PAIRS_CACHE`` pattern,
-``operators/dedup.py``).  A long-lived session that runs the whole
-registry (bench.py, the full test suite) therefore accumulates blocks
-from every family at once, which is a plausible heap/GC driver for the
-one-JVM bench.  Each memo dict registers itself here at definition
-time so ONE helper can drop all of them; a contract test
-(tests/test_registry_contract.py) asserts every ``*_CACHE`` module
-global in the package goes through ``register_cache``, so future
-caches cannot silently escape the registry.
+Several operator families share a small intermediate between their
+consumers — a ``.cache()``'d shingle table, a ``localCheckpoint()``'d
+pair graph, a K-row centroid list, a parquet scan relation — so the
+second and later consumers skip the build.  ``session_memo`` is the one
+mechanism for that.  It decorates a builder ``build(spark, where,
+*extra)`` and owns the whole contract:
+
+- **Key.** ``(applicationId, abspath(source), source_stamp(source),
+  *extra)``.  ``source`` is the file the intermediate is derived from:
+  ``where`` itself, or ``<where>/<table>.parquet`` when the memo names
+  a table.  The ``(mtime, size)`` stamp makes a source regenerated
+  mid-session build a fresh value instead of serving a stale one, the
+  way every derived view of a Delta table is keyed on one table
+  version.  The absolute path makes a relative and an absolute
+  spelling of one data dir share an entry, and keeps two dirs with the
+  same basename apart.
+- **Session.** The session rides in the stored value and is
+  identity-checked on a hit.  A DataFrame is bound to its
+  SparkSession; handing session A's plan to a query of session B would
+  cross-wire their SQLConf scopes, so a different session rebuilds.
+- **Absent is not ``None``.** A builder may return ``None`` (an empty
+  graph has no hyperball states) and that answer is cached too.
+- **Registry.** Every store registers under a stable name, so
+  ``clear_session_caches`` drops all of them at once (bench and test
+  hygiene: a session that runs the whole registry would otherwise keep
+  blocks from every family) and ``registered_caches`` lets the bench
+  count entries added inside a timed window.
+
+What a memo may hold is bounded: a fenced or cached intermediate far
+below corpus size, a centroid list, a logical scan (no rows), a bool.
+A memo earns its place by a second consumer (or a measured repeat) that
+would otherwise rebuild it.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+
 _REGISTRY: dict[str, dict] = {}
+_ABSENT = object()
+
+
+def source_stamp(src_file: str) -> str:
+    """(mtime, size) freshness stamp of a source file — the one
+    definition of the staleness contract that session memos and
+    derived scratch layouts key on."""
+    try:
+        st = os.stat(os.path.abspath(src_file))
+        return f"{st.st_mtime_ns}:{st.st_size}"
+    except OSError:
+        return "missing"
 
 
 def register_cache(name: str, store: dict) -> dict:
-    """Register a module-level session-memo dict under a stable name
-    and return it (so definition sites stay one-liners)."""
+    """Register a session-memo dict under a stable name and return it."""
     if name in _REGISTRY and _REGISTRY[name] is not store:
         raise ValueError(f"duplicate session-cache name: {name}")
     _REGISTRY[name] = store
     return store
+
+
+def session_memo(name: str, table: str | None = None):
+    """Memoize ``build(spark, where, *extra)`` in the store ``name``.
+
+    The source file is ``<where>/<table>.parquet`` when ``table`` is
+    given, else the path ``where`` itself; ``extra`` arguments join the
+    key.  See the module docstring for the contract."""
+    store = register_cache(name, {})
+
+    def decorate(build):
+        @functools.wraps(build)
+        def memoized(spark, where: str, *extra):
+            src = os.path.abspath(
+                where if table is None
+                else os.path.join(where, f"{table}.parquet")
+            )
+            app = spark.sparkContext.applicationId
+            key = (app, src, source_stamp(src), *extra)
+            hit = store.get(key, _ABSENT)
+            if hit is not _ABSENT and hit[0] is spark:
+                return hit[1]
+            value = build(spark, where, *extra)
+            store[key] = (spark, value)
+            return value
+
+        return memoized
+
+    return decorate
 
 
 def registered_caches() -> dict[str, dict]:
@@ -49,7 +113,7 @@ def clear_session_caches(spark=None) -> dict[str, int]:
     dropped: dict[str, int] = {}
     for name, store in _REGISTRY.items():
         dropped[name] = len(store)
-        for value in store.values():
+        for _session, value in store.values():
             parts = value if isinstance(value, tuple) else (value,)
             for v in parts:
                 if isinstance(v, DataFrame):

@@ -6,64 +6,41 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from stac_geoparquet_spark.caches import register_cache
-
-# Memoized parquet scan relations per (application, session, path,
-# source stamp) — r10 optimization round.  ``spark.read.parquet``
-# costs a driver-side file listing + footer/schema read (~0.25 s per
-# call measured at sf0.1) and the engine's 274 declared queries
-# construct >500 scans of the SAME dozen files per bench run.  A
-# catalog table pays this once (the relation and its InMemoryFileIndex
-# live in the catalog); bare-path reads re-list on every call.  This
-# memo gives bare-path reads the catalog behavior: the value is the
-# LOGICAL scan (schema + file listing) only — no rows are cached, and
-# every action still computes from the parquet bytes.  The source
-# stamp in the key (mtime+size, same freshness contract as the layout
-# scratch) drops the memo when the file is regenerated mid-session.
-# The session object rides in the value and is identity-checked on
-# hit: a DataFrame is bound to its SparkSession, and handing session
-# A's plan to session B's query would cross-wire SQLConf scopes
-# (scan_opt's newSession ops read through their own sessions for
-# exactly that reason).
-_SCAN_CACHE: dict[tuple[str, str, str], tuple] = register_cache(
-    "io.scans", {}
-)
-
-# read_spread's split-count probe (``df.rdd.getNumPartitions()``)
-# forces analysis + physical planning of the scan (~0.1 s per call);
-# the answer is a pure function of (file set, parallelism) so it is
-# memoized alongside.
-_SPREAD_CACHE: dict[tuple[str, str, str, int], bool] = register_cache(
-    "io.spread", {}
-)
+from stac_geoparquet_spark.caches import session_memo, source_stamp
 
 
+@session_memo("io.scans")
 def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Memoized ``spark.read.parquet(path)`` — one file listing +
-    schema read per (session, path, stamp) instead of one per query
-    construction.  Returns the same logical scan every time; callers
-    compose transformations on top exactly as with a catalog table."""
-    apath = os.path.abspath(path)
-    key = (
-        spark.sparkContext.applicationId,
-        apath,
-        source_stamp(apath),
-    )
-    hit = _SCAN_CACHE.get(key)
-    if hit is not None and hit[1] is spark:
-        return hit[0]
-    df = spark.read.parquet(path)
-    _SCAN_CACHE[key] = (df, spark)
-    return df
+    """Memoized ``spark.read.parquet(path)``: one file listing + schema
+    read per (session, path, stamp) instead of one per query
+    construction.
+
+    ``spark.read.parquet`` costs a driver-side file listing and
+    footer/schema read (~0.25 s per call measured at sf0.1), and the
+    274 declared queries construct >500 scans of the SAME dozen files
+    per bench run.  A catalog table pays this once; this memo gives
+    bare-path reads the catalog behavior.  The value is the LOGICAL
+    scan only — no rows are cached, and every action still computes
+    from the parquet bytes.  Callers compose transformations on top
+    exactly as with a catalog table."""
+    return spark.read.parquet(path)
+
+
+@session_memo("io.spread")
+def _fewer_splits_than(spark: SparkSession, path: str, target: int) -> bool:
+    # the split-count probe (``df.rdd.getNumPartitions()``) forces
+    # analysis + physical planning of the scan (~0.1 s per call); the
+    # answer is a pure function of (file set, target)
+    return scan_parquet(spark, path).rdd.getNumPartitions() < target
 
 
 def scan_is_multisplit(
     spark: SparkSession, path: str, target: int | None = None
 ) -> bool:
     """True when ``path`` scans as at least one split per core — the
-    scale regime.  Same memoized plan-time probe as ``read_spread``
-    (shared cache), exposed for callers that must pick a STRATEGY by
-    regime rather than re-spread rows: e.g. an eager fence over a
+    scale regime.  Same memoized plan-time probe as ``read_spread``,
+    exposed for callers that must pick a STRATEGY by regime rather
+    than re-spread rows: e.g. an eager fence over a
     multi-consumer aggregate deletes a duplicate input pass (a real
     win when every core is busy) but SERIALIZES branches that a toy
     single-split fixture runs in parallel on idle cores — the r10
@@ -71,18 +48,7 @@ def scan_is_multisplit(
     8->32-core scaling ratio 0.88)."""
     if target is None:
         target = spark.sparkContext.defaultParallelism
-    df = scan_parquet(spark, path)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(path),
-        source_stamp(path),
-        target,
-    )
-    spread = _SPREAD_CACHE.get(key)
-    if spread is None:
-        spread = df.rdd.getNumPartitions() < target
-        _SPREAD_CACHE[key] = spread
-    return not spread
+    return not _fewer_splits_than(spark, path, target)
 
 
 def read_spread(
@@ -145,17 +111,6 @@ def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split count; per-op opt-in via read_spread stays available for
     # any genuinely compute-bound toy-scale consumer.
     return scan_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
-
-
-def source_stamp(src_file: str) -> str:
-    """(mtime, size) freshness stamp of a source file — the ONE
-    definition of the staleness contract every derived artifact
-    (scratch layouts, bucketed tables, session caches) keys on."""
-    try:
-        st = os.stat(os.path.abspath(src_file))
-        return f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        return "missing"
 
 
 # Bumped whenever the CONTENT a layout build writes changes (e.g. the

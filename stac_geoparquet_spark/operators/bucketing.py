@@ -12,22 +12,25 @@ philosophy as `layout.write_zordered` (clustered scans) and the IVF
 cell layout (pruned vector search).
 
 `bucketed_colocated_join` is the oracle-gated demonstration: revenue
-per order priority through a lineitem-orders join over session-built
+per order priority through a lineitem-orders join over derived
 bucketed tables. The result is layout-independent (the oracle is a
 plain join), the PLAN is what the layout buys —
 `tests/test_plans.py::test_bucketed_join_no_exchange` pins zero
 Exchange operators in the join stage.
 
-Bucket metadata lives in the session catalog (in-memory catalog in the
-driver's vanilla session), so tables are (re)built once per session
-under a session-private scratch path — no cross-session file races;
-`spark.catalog.tableExists` makes repeat calls free within a session.
+Bucket metadata lives in the session catalog (in-memory in the driver's
+vanilla session), which forgets it when the process exits. The bucketed
+files do not have to go with it: each copy is a derived layout of its
+source table (``_io.layout_scratch_path``, keyed on the source's stamp),
+built once through ``_io.materialize_layout``, and every later process
+re-registers the existing copy with a ``CREATE TABLE ... CLUSTERED BY
+... LOCATION`` over it. ``spark.catalog.tableExists`` makes repeat calls
+free within a session.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,63 +40,46 @@ from stac_geoparquet_spark.operators.relational import _dsum, _t
 N_BUCKETS = 8
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = N_BUCKETS,
-    path: str | None = None,
-) -> None:
-    """Write ``df`` as a parquet table bucketed (and sorted) on
-    ``bucket_col``. Spark requires a catalog table for bucketing —
-    the spec is metadata, not a file property."""
-    spark = df.sparkSession
-    if path is None:
-        app = spark.sparkContext.applicationId
-        path = os.path.join(tempfile.gettempdir(), f"sgs_bucketed_{app}", table)
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .option("path", path)
-        .saveAsTable(table)
+def _bucketed_table(
+    spark: SparkSession, sf_dir: str, table: str, cols: tuple, key: str
+) -> str:
+    """Catalog name of ``table``'s ``cols`` bucketed and sorted on
+    ``key``, building the copy under the table's layout scratch path
+    if no earlier process left one there."""
+    from stac_geoparquet_spark.operators._io import (
+        layout_scratch_path,
+        materialize_layout,
     )
 
+    path = layout_scratch_path(
+        os.path.join(sf_dir, f"{table}.parquet"), f"sgs_{table}_b{N_BUCKETS}"
+    )
+    name = os.path.basename(path)
+    if spark.catalog.tableExists(name):
+        return name
+    df = _t(spark, sf_dir, table).select(*cols)
 
-def _ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    # Key the session tables on the FULL path plus each source file's
-    # (mtime, size) — two data dirs sharing a basename must not alias
-    # to one table, and a regenerated source file under the same path
-    # must get fresh bucketed copies, not silently stale ones (same
-    # freshness contract as _io.layout_scratch_path).
-    import hashlib
-
-    from stac_geoparquet_spark.operators._io import source_stamp
-
-    stamps = [
-        source_stamp(os.path.join(os.path.abspath(sf_dir), f"{t}.parquet"))
-        for t in ("lineitem", "orders")
-    ]
-    key = f"{os.path.abspath(sf_dir)}|{'|'.join(stamps)}"
-    tag = hashlib.md5(key.encode()).hexdigest()[:10]
-    li_name = f"sgs_lineitem_b{N_BUCKETS}_{tag}"
-    ord_name = f"sgs_orders_b{N_BUCKETS}_{tag}"
-    if not spark.catalog.tableExists(li_name):
-        write_bucketed(
-            _t(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_extendedprice", "l_discount"
-            ),
-            li_name,
-            "l_orderkey",
+    def build(build_dir: str) -> None:
+        # Spark writes bucketed files only through a catalog table (the
+        # spec is metadata, not a file property); the path option makes
+        # it external, so dropping it keeps the files for the publish
+        (
+            df.write.mode("overwrite")
+            .format("parquet")
+            .bucketBy(N_BUCKETS, key)
+            .sortBy(key)
+            .option("path", build_dir)
+            .saveAsTable(name)
         )
-    if not spark.catalog.tableExists(ord_name):
-        write_bucketed(
-            _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
-            ord_name,
-            "o_orderkey",
-        )
-    return li_name, ord_name
+        spark.sql(f"DROP TABLE {name}")
+
+    materialize_layout(path, build)
+    spark.sql(
+        f"CREATE TABLE {name} ({df.schema.toDDL()}) USING parquet "
+        f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {N_BUCKETS} BUCKETS "
+        f"LOCATION '{path}'"
+    )
+    return name
 
 
 def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,9 +89,24 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     path so the demonstration does not degrade to a broadcast at small
     sf (at real scale neither side fits a broadcast anyway); the ONLY
     exchange in the whole plan is the final 5-row aggregation's."""
-    li_name, ord_name = _ensure_bucketed_tables(spark, sf_dir)
-    li = spark.table(li_name).hint("merge")
-    orders = spark.table(ord_name).hint("merge")
+    li = spark.table(
+        _bucketed_table(
+            spark,
+            sf_dir,
+            "lineitem",
+            ("l_orderkey", "l_extendedprice", "l_discount"),
+            "l_orderkey",
+        )
+    ).hint("merge")
+    orders = spark.table(
+        _bucketed_table(
+            spark,
+            sf_dir,
+            "orders",
+            ("o_orderkey", "o_orderpriority"),
+            "o_orderkey",
+        )
+    ).hint("merge")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_orderpriority")

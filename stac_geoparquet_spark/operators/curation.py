@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
 
-from stac_geoparquet_spark.caches import register_cache
+from stac_geoparquet_spark.caches import session_memo
 
 from stac_geoparquet_spark.operators._canon import (
     DOCS_CANON_SQL as _DOCS_CANON_SQL,
@@ -459,26 +459,14 @@ def _bpe_topk(wf: DataFrame) -> DataFrame:
     )
 
 
-# The learned top-K pair table is session-cached (the mining
-# _SUPPORT_PAIRS_CACHE pattern): the corpus-wide word-frequency
-# aggregate behind it is paid once for its three consumers
-# (bpe_merge_candidates, tokenize_bpe_encode, pack_sequences).
-_BPE_TOPK_CACHE: dict = register_cache("curation.bpe_topk", {})
-
-
+@session_memo("curation.bpe_topk", "documents")
 def _bpe_topk_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    """The learned top-K pair table, fenced: the corpus-wide
+    word-frequency aggregate behind it is paid once for its consumers
+    (bpe_merge_candidates, tokenize_bpe_encode, pack_sequences)."""
+    from stac_geoparquet_spark.operators._io import fenced
 
-    from stac_geoparquet_spark.operators._io import fenced, source_stamp
-
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    key = (spark.sparkContext.applicationId, sf_dir, source_stamp(src))
-    hit = _BPE_TOPK_CACHE.get(key)
-    if hit is not None:
-        return hit
-    out = fenced(_bpe_topk(_word_freq(_docs(spark, sf_dir))))
-    _BPE_TOPK_CACHE[key] = out
-    return out
+    return fenced(_bpe_topk(_word_freq(_docs(spark, sf_dir))))
 
 
 def bpe_merges_vocab_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1372,21 +1360,15 @@ def _uni_vocab(wf: DataFrame) -> DataFrame:
     )
 
 
-_UNI_VOCAB_CACHE: dict = register_cache("curation.uni_vocab", {})
-
-
+@session_memo("curation.uni_vocab", "documents")
 def _uni_vocab_map_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE row holding the vocab as a map<string,bigint> — fenced +
-    session-cached (the bpe_merges_vocab_cached pattern)."""
-    import os
+    session-cached (the bpe_merges_vocab_cached pattern).  Only
+    tokenize_unigram_eval reads it; the memo serves that query's
+    repeats within a session, which rebuild the vocab aggregate in
+    full without it."""
+    from stac_geoparquet_spark.operators._io import fenced
 
-    from stac_geoparquet_spark.operators._io import fenced, source_stamp
-
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    key = (spark.sparkContext.applicationId, sf_dir, source_stamp(src))
-    hit = _UNI_VOCAB_CACHE.get(key)
-    if hit is not None:
-        return hit
     wf = (
         _docs(spark, sf_dir)
         .select(F.explode(_words(F.col("text"))).alias("word"))
@@ -1397,15 +1379,13 @@ def _uni_vocab_map_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    out = fenced(
+    return fenced(
         _uni_vocab(wf).agg(
             F.map_from_entries(
                 F.collect_list(F.struct("gram", "cost_half"))
             ).alias("vmap")
         )
     )
-    _UNI_VOCAB_CACHE[key] = out
-    return out
 
 
 def _uni_cands() -> str:

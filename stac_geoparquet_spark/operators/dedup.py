@@ -30,14 +30,12 @@ construction.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
 
-from stac_geoparquet_spark.caches import register_cache
+from stac_geoparquet_spark.caches import session_memo
 from pyspark.sql.window import Window
 
 from stac_geoparquet_spark.operators.similarity import (
@@ -111,51 +109,6 @@ def _hash32(col: Column, seed: int) -> Column:
 
 _MINHASH_PRIME = 4294967291  # largest prime < 2^32
 
-# One cached shingle-hash table per (session, sf_dir), shared by every
-# shingle-based operator (minhash signature agg + verify, ngram
-# self-join + sizes) — the same materialized-common-intermediate a real
-# dedup pipeline would persist once and fan out from. Ints only, ~8 MB
-# at sf0.1.
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = register_cache(
-    "dedup.shingles", {}
-)
-
-# Verified minhash pair set per (session, sf_dir) — shared by the pair
-# query and the connected-components clustering.
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = register_cache(
-    "dedup.pairs", {}
-)
-
-# Per-doc signature table (doc_id, ss, n, h0..h{NUM_HASHES-1}) per
-# (session, sf_dir) — the "resident MinHash index" a long-running dedup
-# service keeps materialized: built once from the shingle table, then
-# fanned out to LSH banding, verify join sides, and the incremental
-# stream-static index (streaming/dedup.py).
-_PER_DOC_CACHE: dict[tuple[str, str], DataFrame] = register_cache(
-    "dedup.per_doc", {}
-)
-
-# connected-component label table (doc_id, label) per (app, sf, stamp)
-# — the fenced fixpoint result every cluster consumer reads
-_LABELS_CACHE: dict[tuple[str, str], DataFrame] = register_cache(
-    "dedup.cc_labels", {}
-)
-
-
-def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    """Session cache key including the source file's (mtime, size) —
-    same freshness contract as _io.layout_scratch_path: a regenerated
-    documents.parquet mid-session gets fresh cached intermediates, not
-    silently stale ones."""
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        stamp = "missing"
-    return (spark.sparkContext.applicationId, sf_dir, stamp)
-
-
 def band_parts_sql() -> str:
     """SQL fragment building the LSH band structs
     array(struct(band_id, band_key), ...) from signature columns
@@ -171,18 +124,18 @@ def band_parts_sql() -> str:
     )
 
 
+@session_memo("dedup.per_doc", "documents")
 def per_doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per document carrying everything every MinHash consumer
     needs: the shingle-hash set ``ss`` + size ``n`` (exact-Jaccard
     verify) and the ``NUM_HASHES`` signature minima (banding). ONE
     groupBy on doc_id; cached so the exchange is paid once per session
-    per scale factor."""
-    key = _cache_key(spark, sf_dir)
-    cached = _PER_DOC_CACHE.get(key)
-    if cached is not None:
-        return cached
+    per scale factor — the "resident MinHash index" a long-running
+    dedup service keeps materialized, fanned out to LSH banding, the
+    verify join sides and the incremental stream-static index
+    (streaming/dedup.py)."""
     hashed = _hashed_shingles(spark, sf_dir)
-    out = hashed.groupBy("doc_id").agg(
+    return hashed.groupBy("doc_id").agg(
         F.expr("collect_list(shash) AS ss"),
         F.expr("count(1) AS n"),
         *[
@@ -190,10 +143,9 @@ def per_doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
             for s in range(NUM_HASHES)
         ],
     ).cache()
-    _PER_DOC_CACHE[key] = out
-    return out
 
 
+@session_memo("dedup.shingles", "documents")
 def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h1, h2, shash) — one row per distinct k-word shingle.
 
@@ -205,11 +157,9 @@ def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (conv's hex->dec string walk is the next-hottest op after md5):
     the 60-bit verify hash is the conv value itself, and the minhash
     family bases are bit-slices of it — h1 = top 32 bits, h2 = low 28
-    bits."""
-    key = _cache_key(spark, sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    bits.  Cached: every shingle-based operator (minhash signature
+    agg + verify, ngram self-join + sizes) fans out from this one
+    table (ints only, ~8 MB at sf0.1)."""
     sh_rows = (
         _docs(spark, sf_dir)
         .select("doc_id", _words(F.col("text")).alias("w"))
@@ -220,14 +170,12 @@ def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast(
         "bigint"
     )
-    out = sh_rows.select(
+    return sh_rows.select(
         "doc_id",
         F.shiftright(v, 28).alias("h1"),
         v.bitwiseAND(F.lit((1 << 28) - 1)).alias("h2"),
         v.alias("shash"),
     ).cache()
-    _SHINGLE_CACHE[key] = out
-    return out
 
 
 def _jaccard_from_inter(inter: DataFrame, shh: DataFrame) -> DataFrame:
@@ -374,6 +322,7 @@ WHERE round(i * 1.0 / (sa.n + sb.n - i), 6) >= {JACCARD_THRESHOLD}
 # 3. MinHash + LSH banding (the scale path: candidates from band
 #    collisions, exact Jaccard verified only on candidates)
 # --------------------------------------------------------------------------
+@session_memo("dedup.pairs", "documents")
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The shared cached hash table feeds ONE per-doc aggregate that
     # carries both the 32 signature mins (for banding) and the shingle
@@ -386,10 +335,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parsed JVM-side in one shot — constructing the ~300 Column
     # objects through py4j costs >1s of driver time per call, ~4x the
     # parse cost of the equivalent strings.
-    key = _cache_key(spark, sf_dir)
-    cached = _PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
     per_doc = per_doc_signatures(spark, sf_dir)
     sig = per_doc
     band_parts = band_parts_sql()
@@ -430,13 +375,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", "jaccard")
     )
     # Materialized once per (session, sf): the verified pair set is
-    # the fan-out point for clustering and reporting, exactly like the
-    # shingle table above — tiny (pairs that survived verify), so the
-    # shared lineage fence is cheap and cuts every consumer's lineage
-    # back to a leaf (contract: _io.fenced docstring).
-    out = fenced(out)
-    _PAIRS_CACHE[key] = out
-    return out
+    # the fan-out point for clustering and reporting — tiny (pairs that
+    # survived verify), so the shared lineage fence is cheap and cuts
+    # every consumer's lineage back to a leaf (contract: _io.fenced
+    # docstring).
+    return fenced(out)
 
 
 def _minhash_oracle_ctes() -> str:
@@ -573,17 +516,13 @@ def _min_label_propagate(pairs: DataFrame) -> DataFrame:
     return labels
 
 
+@session_memo("dedup.cc_labels", "documents")
 def _cc_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The session-cached near-dup cluster label table (doc_id, label)
-    — built once per (app, sf, source stamp) and shared by every
-    cluster consumer (see the dedup_cluster_cc docstring)."""
-    key = _cache_key(spark, sf_dir)
-    labels = _LABELS_CACHE.get(key)
-    if labels is None:
-        pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-        labels = _min_label_propagate(pairs)
-        _LABELS_CACHE[key] = labels
-    return labels
+    shared by every cluster consumer (see the dedup_cluster_cc
+    docstring)."""
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+    return _min_label_propagate(pairs)
 
 
 def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -608,13 +547,13 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE expresses the same fixpoint, so this op still has an exact
     value oracle (WITH RECURSIVE reachability + min label).
 
-    The label table is session-cached per (app, sf, source stamp) —
-    the _PAIRS_CACHE pattern one level up: SIX shipped consumers
-    (cluster_cc, survivors, rep_weights, component_sizes, purity,
-    token_savings) read the cluster labels, and without the cache each
-    re-ran the whole fixpoint loop (its rounds are cheap, but 6x the
-    rounds is 6x the jobs at any scale).  The cached frame is the
-    final fenced checkpoint leaf, already bounded by the pair graph.
+    The label table is a session memo one level above the pair set:
+    SIX shipped consumers (cluster_cc, survivors, rep_weights,
+    component_sizes, purity, token_savings) read the cluster labels,
+    and without the memo each re-ran the whole fixpoint loop (its
+    rounds are cheap, but 6x the rounds is 6x the jobs at any scale).
+    The cached frame is the final fenced checkpoint leaf, already
+    bounded by the pair graph.
     """
     labels = _cc_labels_cached(spark, sf_dir)
     w = Window.partitionBy("label")

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.caches import register_cache
+from stac_geoparquet_spark.caches import session_memo
 
 from stac_geoparquet_spark.operators._io import fenced
 from stac_geoparquet_spark.operators.stats import HLL_ALPHA
@@ -658,28 +658,16 @@ ORACLE["graph_local_clustering"] = _local_clustering_oracle_sql()
 LPA_ROUNDS = 4
 
 
-# LPA state is session-cached (the mining._SUPPORT_PAIRS_CACHE /
-# dedup label-table pattern): 4 fenced rounds are paid once however
-# many consumers (community sizes, modularity) run in a session.
-_LPA_STATE_CACHE: dict = register_cache("graph.lpa_state", {})
-
-
+@session_memo("graph.lpa_state", "lineitem")
 def _lpa_state(spark: SparkSession, sf_dir: str):
     """Run the fixed-round synchronous LPA and return (symmetrized
     fenced edge list, final node->label table) — shared by the
     community-size report and the modularity audit so both consume
-    the IDENTICAL partition."""
+    the IDENTICAL partition; a session memo, so the 4 fenced rounds
+    are paid once however many consumers run."""
     from pyspark.sql import Window
 
-    from stac_geoparquet_spark.operators.mining import (
-        _pairs_cache_key,
-        basket_pair_support,
-    )
-
-    key = _pairs_cache_key(spark, sf_dir)
-    hit = _LPA_STATE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    from stac_geoparquet_spark.operators.mining import basket_pair_support
 
     pairs = basket_pair_support(spark, sf_dir).select("part_a", "part_b")
     edges = fenced(
@@ -708,7 +696,6 @@ def _lpa_state(spark: SparkSession, sf_dir: str):
             .where(F.col("rk") == 1)
             .select(F.col("a").alias("n"), "lab")
         )
-    _LPA_STATE_CACHE[key] = (edges, labels)
     return edges, labels
 
 
@@ -1062,24 +1049,16 @@ def _hb_fold_est(state: DataFrame) -> DataFrame:
     return folded.selectExpr("n", f"round({_HB_EST}, 4) AS est")
 
 
-# per-round register states shared by graph_hyperball_reach and
-# graph_harmonic_centrality (one propagation per (app, sf, stamp) —
-# the basket_pair_support cache-key pattern); value is the list
-# [s0..sR] of fenced state frames, or None for an empty pair graph
-_HB_STATE_CACHE: dict = register_cache("graph.hyperball_states", {})
-
-
+@session_memo("graph.hyperball_states", "lineitem")
 def _hyperball_states(
     spark: SparkSession, sf_dir: str
 ) -> list[DataFrame] | None:
-    from stac_geoparquet_spark.operators.mining import (
-        _pairs_cache_key,
-        basket_pair_support,
-    )
+    """Per-round register states [s0..sR] (fenced frames) shared by
+    graph_hyperball_reach and graph_harmonic_centrality — a session
+    memo, so one propagation serves both; None for an empty pair
+    graph."""
+    from stac_geoparquet_spark.operators.mining import basket_pair_support
 
-    key = _pairs_cache_key(spark, sf_dir)
-    if key in _HB_STATE_CACHE:
-        return _HB_STATE_CACHE[key]
     pairs = basket_pair_support(spark, sf_dir).select("part_a", "part_b")
     edges = fenced(
         pairs.selectExpr("part_a AS a", "part_b AS b").union(
@@ -1087,7 +1066,6 @@ def _hyperball_states(
         )
     )
     if edges.isEmpty():
-        _HB_STATE_CACHE[key] = None
         return None
     h, bucket, rho = _hb_seed_exprs()
     state = fenced(
@@ -1109,7 +1087,6 @@ def _hyperball_states(
             .agg(F.max("m_j").alias("m_j"))
         )
         states.append(state)
-    _HB_STATE_CACHE[key] = states
     return states
 
 

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
 
-from stac_geoparquet_spark.caches import register_cache
+from stac_geoparquet_spark.caches import session_memo
 
 
 MIN_SUPPORT = 2  # basket pairs: min co-occurrence count
@@ -78,22 +78,7 @@ def _basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Support-filtered pair set per (session, sf_dir, lineitem stamp) —
-# shared by the lift scoring and the k-core peel (the dedup
-# _PAIRS_CACHE pattern): built + fenced once, both consumers read the
-# materialized blocks instead of re-running the self-join.
-_SUPPORT_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = register_cache(
-    "mining.support_pairs", {}
-)
-
-
-def _pairs_cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    from stac_geoparquet_spark.operators._io import source_stamp
-
-    src = os.path.join(os.path.abspath(sf_dir), "lineitem.parquet")
-    return (spark.sparkContext.applicationId, sf_dir, source_stamp(src))
-
-
+@session_memo("mining.support_pairs", "lineitem")
 def basket_pair_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The support-filtered co-purchase pair set (part_a < part_b,
     support >= MIN_SUPPORT) — the edge list basket_part_pairs scores
@@ -101,15 +86,11 @@ def basket_pair_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fenced (bounded: aggregated + support-thresholded, orders of
     magnitude below lineitem) and session-cached so the self-join is
     paid once however many graph/mining consumers run."""
-    key = _pairs_cache_key(spark, sf_dir)
-    hit = _SUPPORT_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
     from stac_geoparquet_spark.operators._io import fenced
 
     items = _basket_items(spark, sf_dir)
     a, b = items.alias("a"), items.alias("b")
-    out = fenced(
+    return fenced(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -122,8 +103,6 @@ def basket_pair_support(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("support"))
         .where(F.col("support") >= MIN_SUPPORT)
     )
-    _SUPPORT_PAIRS_CACHE[key] = out
-    return out
 
 
 def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from stac_geoparquet_spark.operators._exprs import const_cols
 from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
 
-from stac_geoparquet_spark.caches import register_cache
+from stac_geoparquet_spark.caches import session_memo
 from pyspark.sql.window import Window
 
 
@@ -266,31 +266,20 @@ def _emb_blocks(
 # --------------------------------------------------------------------------
 # exact brute-force top-k
 # --------------------------------------------------------------------------
-# ranked brute-force ground truth per (app, sf, stamp): FOUR shipped
+# ranked brute-force ground truth, a session memo: FOUR shipped
 # consumers (the op itself, ann_recall_report, ivf_recall_report,
 # knn_kdist_outliers) read it, and each would otherwise re-run the
-# full corpus GEMM; the cached frame is |Q| x K — fence-eligible
-# bounded (the dedup label-table pattern)
-_KNN_CACHE: dict[tuple[str, str, str], DataFrame] = register_cache(
-    "similarity.knn", {}
-)
-
-
+# full corpus GEMM; the fenced frame is |Q| x K — bounded
+@session_memo("similarity.knn", "embeddings")
 def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _kmeans_cache_key(spark, sf_dir)
-    hit = _KNN_CACHE.get(key)
-    if hit is not None:
-        return hit
     from stac_geoparquet_spark.operators._io import fenced
 
     q_ids, qm, qnorm = _load_queries(sf_dir)
     b_q = spark.sparkContext.broadcast((q_ids, qm, qnorm))
     score = _make_score(b_q, TOP_K)
-    out = fenced(
+    return fenced(
         _rank_topk(_emb_blocks(spark, sf_dir).mapInPandas(score, SCORE_SCHEMA))
     )
-    _KNN_CACHE[key] = out
-    return out
 
 
 _DOT_SQL = "list_sum(list_transform(list_zip({a}, {b}), p -> p[1] * p[2]))"
@@ -815,32 +804,10 @@ def _kmeans_assign(
     )
 
 
-# Final centroid list per (session, sf_dir, embeddings stamp) — the
-# Lloyd fit's two bounded collects are paid once, shared by the
-# assignment query and the silhouette eval (the mining pair-set /
-# dedup shingle cache pattern; the cached value is K x d floats).
-_KMEANS_CENTS_CACHE: dict[tuple[str, str, str], list] = register_cache(
-    "similarity.kmeans_cents", {}
-)
-
-
-def _kmeans_cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    from stac_geoparquet_spark.operators._io import source_stamp
-
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    return (spark.sparkContext.applicationId, sf_dir, source_stamp(src))
-
-
-def _kmeans_fit(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
-    """The shared Lloyd fit: canonical vectors + the final centroid
-    list after KMEANS_ROUNDS-1 mean updates (empty list on an empty
-    table).  Consumers: kmeans_embeddings (assignments) and
-    kmeans_silhouette (cluster-quality eval).  Centroids are
-    session-cached (bounded: K x d floats); the vector table itself is
-    a cheap canonical-layout read rebuilt per call."""
-    emb = (
+def _kmeans_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The canonical vectors the Lloyd fit runs over — a cheap
+    canonical-layout read rebuilt per call."""
+    return (
         _scan_parquet(spark, os.path.join(sf_dir, "embeddings.parquet"))
         .where(_valid_vec())
         # canonical-by-id (_canon.py): k-means is an index build — a
@@ -853,17 +820,25 @@ def _kmeans_fit(
         .agg(F.min("embedding").alias("embedding"))
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     )
-    key = _kmeans_cache_key(spark, sf_dir)
-    hit = _KMEANS_CENTS_CACHE.get(key)
-    if hit is not None:
-        return emb, hit
+
+
+@session_memo("similarity.kmeans_cents", "embeddings")
+def _kmeans_centroids(
+    spark: SparkSession, sf_dir: str
+) -> list[tuple[int, list[float]]]:
+    """The shared Lloyd fit: the final centroid list after
+    KMEANS_ROUNDS-1 mean updates (empty list on an empty table).
+    Consumers: kmeans_embeddings (assignments) and kmeans_silhouette
+    (cluster-quality eval); the memo pays the fit's bounded collects
+    (K x d floats) once."""
+    emb = _kmeans_vectors(spark, sf_dir)
     # deterministic seeds: the K lowest vec_ids' vectors
     seeds = (
         emb.filter(F.col("vec_id") < KMEANS_K).orderBy("vec_id").collect()
     )
     cents = [(int(r["vec_id"]), list(r["v"])) for r in seeds]
     if not cents:
-        return emb, []
+        return []
     for _ in range(KMEANS_ROUNDS - 1):
         asg = _kmeans_assign(emb, cents)
         means = asg.groupBy("cluster").agg(
@@ -877,19 +852,20 @@ def _kmeans_fit(
             for r in means.collect()
         ]
         cents.sort()
-    _KMEANS_CENTS_CACHE[key] = cents
-    return emb, cents
+    return cents
 
 
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb, cents = _kmeans_fit(spark, sf_dir)
+    cents = _kmeans_centroids(spark, sf_dir)
     if not cents:
         # empty table/partition: no seeds -> no assignments; an empty
         # F.array() is untyped and breaks the struct extraction
         return spark.createDataFrame(
             [], "vec_id bigint, cluster bigint, dist double"
         )
-    return _kmeans_assign(emb, cents).select("vec_id", "cluster", "dist")
+    return _kmeans_assign(_kmeans_vectors(spark, sf_dir), cents).select(
+        "vec_id", "cluster", "dist"
+    )
 
 
 def _kmeans_assign_cte(src: str, cent: str, out: str) -> str:
@@ -922,7 +898,7 @@ def _kmeans_means_cte(src: str, out: str) -> str:
 
 def _kmeans_fit_ctes() -> str:
     """e (canonical vectors) .. c1 (final centroids) — the oracle twin
-    of _kmeans_fit, shared by the kmeans and silhouette oracles."""
+    of _kmeans_centroids, shared by the kmeans and silhouette oracles."""
     return f"""e AS (
   SELECT vec_id, min(embedding::DOUBLE[]) AS v FROM embeddings
   WHERE {VALID_VEC_SQL} GROUP BY vec_id
@@ -961,7 +937,7 @@ SELECT vec_id, cluster, dist FROM a2
 # is one division of exact ints, round(,6).
 # --------------------------------------------------------------------------
 def kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb, cents = _kmeans_fit(spark, sf_dir)
+    cents = _kmeans_centroids(spark, sf_dir)
     if not cents:
         return spark.createDataFrame(
             [],
@@ -975,7 +951,9 @@ def kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-point stage ran the centroid GEMM ~4x (noop 1.46 -> 0.31 s
     # solo at sf0.1).  CollapseProject keeps the layers: it only
     # re-inlines cheap expressions.
-    l1 = emb.select(_kmeans_dist_structs(cents).alias("arr"))
+    l1 = _kmeans_vectors(spark, sf_dir).select(
+        _kmeans_dist_structs(cents).alias("arr")
+    )
     l2 = l1.select("arr", F.array_min("arr").alias("best"))
     others = F.filter(
         F.col("arr"), lambda x: x["cid"] != F.col("best")["cid"]
@@ -1528,29 +1506,18 @@ def _covariance_merged(spark, sf_dir: str) -> DataFrame:
     )
 
 
-# merged covariance partials per (app, sf, stamp): THREE shipped
-# consumers (embedding_covariance itself, embedding_isotropy_report,
-# and pca_power_projection's driver-side eigensolve pull) each re-ran
-# the corpus scan + GEMM; the cached frame is the FENCED
-# <= d(d+1)/2 + d row partial matrix — fence-eligible bounded (the
-# kNN-ground-truth / dedup-label-table session-cache pattern)
-_COV_MERGED_CACHE: dict[tuple[str, str, str], DataFrame] = register_cache(
-    "similarity.cov_merged", {}
-)
-
-
+# merged covariance partials, a session memo: THREE shipped consumers
+# (embedding_covariance itself, embedding_isotropy_report, and
+# pca_power_projection's driver-side eigensolve pull) each re-ran the
+# corpus scan + GEMM; the memo holds the FENCED <= d(d+1)/2 + d row
+# partial matrix — bounded
+@session_memo("similarity.cov_merged", "embeddings")
 def _covariance_merged_fenced(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    key = _kmeans_cache_key(spark, sf_dir)
-    hit = _COV_MERGED_CACHE.get(key)
-    if hit is not None:
-        return hit
     from stac_geoparquet_spark.operators._io import fenced
 
-    out = fenced(_covariance_merged(spark, sf_dir))
-    _COV_MERGED_CACHE[key] = out
-    return out
+    return fenced(_covariance_merged(spark, sf_dir))
 
 
 @const_cols
@@ -1606,7 +1573,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan+GEMM per consumer — the explain showed the 100-TB pass
     TRIPLED.  Same move as ``pagerank_neardup_graph``; what gets
     materialized is only the tiny d × d matrix — and it is
-    session-cached (``_COV_MERGED_CACHE``) so the isotropy report,
+    a session memo (``_covariance_merged_fenced``) so the isotropy report,
     the PCA eigensolve, and the whitening report share ONE scan +
     GEMM per (app, sf, stamp)."""
     return _cov_assembly(_covariance_merged_fenced(spark, sf_dir))

@@ -46,3 +46,50 @@ def test_zordered_write_tightens_both_dims(spark, sf_dir, tmp_path):
         # must cover a strict fraction of it on BOTH dimensions
         assert avg_tight < avg_plain * 0.6, (col, avg_tight, avg_plain)
         assert avg_tight < (glob_hi - glob_lo) * 0.6
+
+
+def test_bucketed_copy_is_reused_after_the_catalog_forgets_it(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A later process starts with an empty catalog; dropping the two
+    tables stands in for that.  The second call re-registers the copies
+    the first one built: it writes no parquet file, and the temp dir
+    still holds one copy per table."""
+    import tempfile
+
+    from stac_geoparquet_spark.operators import _io
+    from stac_geoparquet_spark.operators.bucketing import (
+        bucketed_colocated_join,
+    )
+
+    def drop_bucketed_tables() -> None:
+        for t in spark.catalog.listTables():
+            if t.name.startswith("sgs_"):
+                spark.sql(f"DROP TABLE {t.name}")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    drop_bucketed_tables()
+    try:
+        first = sorted(bucketed_colocated_join(spark, sf_dir).collect())
+        copies = sorted(os.listdir(tmp_path))
+        assert [c.rsplit("_", 1)[0] for c in copies] == [
+            "sgs_lineitem_b8",
+            "sgs_orders_b8",
+        ]
+        files = {
+            f: os.stat(f).st_mtime_ns
+            for f in glob.glob(str(tmp_path / "*" / "*.parquet"))
+        }
+        builds = len(_io.LAYOUT_BUILD_LOG)
+        drop_bucketed_tables()
+        second = sorted(bucketed_colocated_join(spark, sf_dir).collect())
+        assert len(_io.LAYOUT_BUILD_LOG) == builds
+        assert {
+            f: os.stat(f).st_mtime_ns
+            for f in glob.glob(str(tmp_path / "*" / "*.parquet"))
+        } == files
+        assert sorted(os.listdir(tmp_path)) == copies
+        assert second == first
+    finally:
+        # later tests re-register the copies under the real temp dir
+        drop_bucketed_tables()

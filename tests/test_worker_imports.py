@@ -63,3 +63,30 @@ def test_udf_operators_run_with_foreign_cwd(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "WORKER_IMPORTS_OK" in proc.stdout
+
+
+def test_worker_zip_is_shared_by_processes_with_the_same_source(tmp_path):
+    """The zip is named by a hash of the package source: two processes
+    running the same code resolve to one file, and publishing leaves no
+    temp file behind."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    script = (
+        f"import sys; sys.path.insert(0, {repo!r}); "
+        "from stac_geoparquet_spark.session import worker_zip; "
+        "print(worker_zip())"
+    )
+    paths = [
+        subprocess.run(
+            [sys.executable, "-c", script],
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=120,
+            check=True,
+        ).stdout.strip()
+        for _ in range(2)
+    ]
+    assert paths[0] == paths[1]
+    assert os.path.dirname(paths[0]) == str(tmp_path)
+    assert os.listdir(tmp_path) == [os.path.basename(paths[0])]

@@ -15,10 +15,13 @@ takes the min over --runs (default 3) of:
            optimizer count-shortcut);
   count_s  ``.count()`` on a fresh build.
 Prints one line per query:
-  <name>  noop_s=<min>  count_s=<min>  cons_s=<min>  jobs=<n>
+  <name>  noop_s=<min>  count_s=<min>  cons_s=<min>  jobs=<n>  memo_builds=<stores>
 where jobs is the number of Spark jobs the last construction ran (from
 the status tracker; process-level memos are warm after the first run,
-so later runs are what the bench's best-of-2 loop sees).  Ends with the
+so later runs are what the bench's best-of-2 loop sees) and
+memo_builds names the session-memo stores (``caches.registered_caches``)
+that gained entries during the query's first run, i.e. the memos this
+query built rather than read (``-`` when none).  Ends with the
 construction total over all measured queries and one JSON line
 ``{name: [noop_s, count_s, cons_s, jobs]}``.
 """
@@ -44,6 +47,7 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    from stac_geoparquet_spark.caches import registered_caches
     from stac_geoparquet_spark.session import get_spark
 
     import __spark_entry__ as entry_mod
@@ -74,11 +78,15 @@ def main() -> None:
         # spark.ui.retainedJobs, so compare maxima, not lengths
         return max(tracker.getJobIdsForGroup(None) or [-1])
 
+    def memo_sizes() -> dict[str, int]:
+        return {k: len(v) for k, v in registered_caches().items()}
+
     results = {}
     for name in names:
         fn = queries[name]
         best_noop = best_count = best_cons = float("inf")
-        jobs = 0
+        jobs, built = 0, []
+        sizes0 = memo_sizes()
         for i in range(args.runs):
             sc.setJobDescription(f"{name} run{i}")
             j0 = last_job_id()
@@ -93,6 +101,11 @@ def main() -> None:
             t0 = time.perf_counter()
             df2.count()
             best_count = min(best_count, time.perf_counter() - t0)
+            if i == 0:
+                built = [
+                    k for k, n in memo_sizes().items()
+                    if n > sizes0.get(k, 0)
+                ]
         sc.setJobDescription(None)
         results[name] = [
             round(best_noop, 3),
@@ -102,7 +115,8 @@ def main() -> None:
         ]
         print(
             f"{name:42s} noop_s={best_noop:7.3f} count_s={best_count:7.3f}"
-            f" cons_s={best_cons:7.3f} jobs={jobs}",
+            f" cons_s={best_cons:7.3f} jobs={jobs}"
+            f" memo_builds={','.join(sorted(built)) or '-'}",
             flush=True,
         )
 
