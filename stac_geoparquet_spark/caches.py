@@ -8,10 +8,10 @@ second and later consumers skip the build.  ``session_memo`` is the one
 mechanism for that.  It decorates a builder ``build(spark, where,
 *extra)`` and owns the whole contract:
 
-- **Key.** ``(applicationId, abspath(source), source_stamp(source),
-  *extra)``.  ``source`` is the file the intermediate is derived from:
-  ``where`` itself, or ``<where>/<table>.parquet`` when the memo names
-  a table.  The ``(mtime, size)`` stamp makes a source regenerated
+- **Key.** ``(abspath(source), source_stamp(source), *extra)``.  The
+  source is the file the intermediate is derived from: ``where``, or
+  ``<where>/<table>.parquet`` when the memo names a table.  The
+  ``(mtime, size)`` stamp makes a source regenerated
   mid-session build a fresh value instead of serving a stale one, the
   way every derived view of a Delta table is keyed on one table
   version.  The absolute path makes a relative and an absolute
@@ -21,6 +21,8 @@ mechanism for that.  It decorates a builder ``build(spark, where,
   identity-checked on a hit.  A DataFrame is bound to its
   SparkSession; handing session A's plan to a query of session B would
   cross-wire their SQLConf scopes, so a different session rebuilds.
+  The stored reference keeps a stopped session alive, so no new
+  session shares its identity and the key needs no application id.
 - **Absent is not ``None``.** A builder may return ``None`` (an empty
   graph has no hyperball states) and that answer is cached too.
 - **Registry.** Every store registers under a stable name, so
@@ -78,8 +80,7 @@ def session_memo(name: str, table: str | None = None):
                 where if table is None
                 else os.path.join(where, f"{table}.parquet")
             )
-            app = spark.sparkContext.applicationId
-            key = (app, src, source_stamp(src), *extra)
+            key = (src, source_stamp(src), *extra)
             hit = store.get(key, _ABSENT)
             if hit is not _ABSENT and hit[0] is spark:
                 return hit[1]

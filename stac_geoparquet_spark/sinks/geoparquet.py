@@ -146,15 +146,17 @@ def to_geoparquet(
     non-empty destination.
 
     ``spatial_order=True`` clusters rows on the z-curve of the bbox
-    centroid before writing (requires the bbox struct), so the
-    GeoParquet 1.1 ``covering`` stats this writer emits are *tight*:
-    each file/row-group covers a small spatial window instead of the
-    whole extent, and bbox-predicate readers skip most of them. The
-    reference emits the covering metadata but leaves clustering to the
-    caller; at 100 TB the clustering IS the feature (same z-order
-    machinery as ``operators.layout``, degrees quantized onto a fixed
-    global 2^16 grid so no data-dependent pass is needed).
+    centroid (degrees on a fixed global 2^16 grid; requires the bbox
+    struct), one file per input partition, so the GeoParquet 1.1
+    ``covering`` stats are *tight* and bbox-predicate readers skip most
+    files and row groups. The reference leaves clustering to the
+    caller; at 100 TB it IS the feature. The file bounds are the key's
+    approximate quantiles from one job that reads only ``bbox``; each
+    row goes to the file of the bounds below its key (Spark >= 4.1
+    ``repartitionById``), so the forward pipeline runs once.
     """
+    if mode not in ("overwrite", "append", "error"):
+        raise ValueError(f"mode must be overwrite|append|error, got {mode!r}")
     if spatial_order:
         from pyspark.sql import functions as F
 
@@ -162,15 +164,26 @@ def to_geoparquet(
 
         if not _has_bbox_struct(df.schema):
             raise ValueError("spatial_order=True requires the bbox struct")
-        # fixed global grid: lon/lat in [-180, 180]/[-90, 90] quantized
-        # to 2^16 cells per axis — no data-dependent max pass needed
         xmin, ymin, xmax, ymax = (f"bbox.{n}" for n in BBOX_2D)
         cx = f"CAST((({xmin} + {xmax}) / 2.0 + 180.0) * 182.04 AS BIGINT)"
         cy = f"CAST((({ymin} + {ymax}) / 2.0 + 90.0) * 364.08 AS BIGINT)"
+        zkey = F.expr(zorder_key_sql(cx, cy))
         n_files = max(df.rdd.getNumPartitions(), 1)
+        bounds = []
+        if n_files > 1:  # no bounds when every bbox is null
+            ranks = [i / n_files for i in range(1, n_files)]
+            bounds = df.select(F.percentile_approx(zkey, ranks, 10000)).first()[0] or []
+
+        def below(lo: int, hi: int):  # bounds[lo:hi] below the key, as nested CASEs
+            if lo == hi:  # a null key is below none
+                return F.lit(lo)
+            mid = (lo + hi) // 2
+            above = F.col("__zkey") > bounds[mid]
+            return F.when(above, below(mid + 1, hi)).otherwise(below(lo, mid))
+
         df = (
-            df.withColumn("__zkey", F.expr(zorder_key_sql(cx, cy)))
-            .repartitionByRange(n_files, "__zkey")
+            df.withColumn("__zkey", zkey)
+            .repartitionById(n_files, below(0, len(bounds)))
             .sortWithinPartitions("__zkey")
             .drop("__zkey")
         )
@@ -180,16 +193,11 @@ def to_geoparquet(
     kv: dict[str, str] = {"stac-geoparquet": stac_md}
     if geo is not None:
         kv["geo"] = json.dumps(geo)
-    for k, v in (extra_metadata or {}).items():
-        kv[k] = v
-
-    if mode not in ("overwrite", "append", "error"):
-        raise ValueError(f"mode must be overwrite|append|error, got {mode!r}")
+    kv.update(extra_metadata or {})
 
     from pyarrow import fs as pafs
 
     filesystem, base = pafs.FileSystem.from_uri(output_path)
-    filesystem.create_dir(base, recursive=True)
     # recursive: a previously Spark-written dataset may hold its part
     # files in nested (e.g. hive-partitioned) subdirectories; a
     # top-level-only listing would miss them — mode='error' would not

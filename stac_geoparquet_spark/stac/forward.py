@@ -52,15 +52,11 @@ def _sniff_format(spark: SparkSession, path: str) -> str:
     """Return 'ndjson' | 'array' | 'featurecollection' for the input.
 
     Mirrors the reference's auto-detection (json_reader.py:14-41): try
-    line-delimited first, fall back to whole-file parse.
+    line-delimited first, fall back to whole-file parse. The text source
+    reads the head in a JVM-only job with Hadoop path semantics.
     """
-    sc = spark.sparkContext
-    head = sc.textFile(path).take(400)
-    first = ""
-    for line in head:
-        if line.strip():
-            first = line.strip()
-            break
+    head = [r.value.strip() for r in spark.read.text(path).head(400)]
+    first = next(filter(None, head), "")
     if first.startswith("["):
         return "array"
     try:
@@ -222,6 +218,10 @@ def type_timestamps(df: DataFrame) -> DataFrame:
 # T4 — bbox array -> struct (2-D or 3-D, arrow/_to_arrow.py:106-200)
 # ---------------------------------------------------------------------------
 def bbox_to_struct(df: DataFrame) -> DataFrame:
+    """T4. The arity comes from a limit-1 probe of the first non-null
+    bbox (4 if none; not 4 or 6 raises ``ValueError`` here). Every row
+    is checked in the plan: mixed 2-D/3-D bboxes raise on the first
+    action that reads the column, as the reference rejects them."""
     if "bbox" not in df.columns:
         return df
     dt = df.schema["bbox"].dataType
@@ -229,26 +229,17 @@ def bbox_to_struct(df: DataFrame) -> DataFrame:
         return df
     if not isinstance(dt, T.ArrayType):
         raise ValueError(f"bbox has unexpected type {dt.simpleString()}")
-    sizes = (
-        df.select(F.size("bbox").alias("n"))
-        .where(F.col("n") >= 0)
-        .agg(F.min("n").alias("lo"), F.max("n").alias("hi"))
-        .first()
-    )
-    if sizes is None or sizes["lo"] is None:
-        ndim = 4
-    else:
-        if sizes["lo"] != sizes["hi"]:
-            raise ValueError(
-                f"mixed 2-D/3-D bboxes in one table: sizes {sizes['lo']}..{sizes['hi']}"
-            )
-        ndim = sizes["lo"]
+    probe = df.select(F.size("bbox").alias("n")).where(F.col("n") >= 0).first()
+    ndim = 4 if probe is None else probe["n"]
     names = next((t for t in (BBOX_2D, BBOX_3D) if len(t) == ndim), None)
     if names is None:
         raise ValueError(f"bbox must have 4 or 6 values, got {ndim}")
     b = F.col("bbox")
     struct = F.struct(*[b[i].cast("double").alias(n) for i, n in enumerate(names)])
-    return df.withColumn("bbox", F.when(b.isNotNull(), struct))
+    mixed = F.raise_error(F.lit(f"mixed 2-D/3-D bboxes in one table (probed {ndim})"))
+    return df.withColumn(
+        "bbox", F.when(F.size(b) == ndim, struct).when(b.isNotNull(), mixed)
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -180,6 +180,161 @@ def test_spatial_order_requires_bbox(spark):
         to_geoparquet(df, "/tmp/never-written", spatial_order=True)
 
 
+def _zkey(bbox):
+    """The sink's z-key of one bbox, recomputed in Python: the centroid
+    on the fixed global 2^16 grid, x bits at even positions."""
+    cx = int(((bbox["xmin"] + bbox["xmax"]) / 2.0 + 180.0) * 182.04)
+    cy = int(((bbox["ymin"] + bbox["ymax"]) / 2.0 + 90.0) * 364.08)
+    return sum(
+        (((cx >> i) & 1) << (2 * i)) | (((cy >> i) & 1) << (2 * i + 1))
+        for i in range(16)
+    )
+
+
+def _file_zkeys(files):
+    """Per written file, the z-key of each row in row order (None for a
+    null bbox)."""
+    import pyarrow.parquet as pq
+
+    return [
+        [
+            None if b is None else _zkey(b)
+            for b in pq.read_table(f, columns=["bbox"]).column("bbox").to_pylist()
+        ]
+        for f in files
+    ]
+
+
+def _points(spark, n, n_null=0, seed=7):
+    """``n`` distinct point bboxes over the globe plus ``n_null`` null
+    bboxes, as a bbox-struct frame."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        x, y = rng.uniform(-179, 179), rng.uniform(-89, 89)
+        rows.append((f"p{i}", x, y, x, y))
+    rows += [(f"null{i}", None, None, None, None) for i in range(n_null)]
+    df = spark.createDataFrame(
+        rows, "id string, xmin double, ymin double, xmax double, ymax double"
+    )
+    bbox = F.struct("xmin", "ymin", "xmax", "ymax")
+    return df.select("id", F.when(F.col("xmin").isNotNull(), bbox).alias("bbox"))
+
+
+def test_spatial_order_writes_disjoint_balanced_z_ranges(spark, tmp_path):
+    """One file per input partition; the files hold disjoint z-key
+    ranges, each z-sorted and within 10% of the mean row count; every
+    null bbox lands in the file of the lowest range."""
+    from stac_geoparquet_spark.sinks import to_geoparquet
+
+    df = _points(spark, 3000, n_null=20).repartition(6)
+    files = to_geoparquet(df, str(tmp_path / "z"), spatial_order=True)
+    assert len(files) == 6
+    per_file = sorted(
+        _file_zkeys(files), key=lambda ks: min(k for k in ks if k is not None)
+    )
+    assert [sum(k is None for k in ks) for ks in per_file] == [20, 0, 0, 0, 0, 0]
+    keyed = [[k for k in ks if k is not None] for ks in per_file]
+    for ks, raw in zip(keyed, per_file):
+        assert raw == [None] * (len(raw) - len(ks)) + sorted(ks)
+    for lower, upper in zip(keyed, keyed[1:]):
+        assert max(lower) < min(upper)
+    mean = 3000 / 6
+    assert all(abs(len(ks) - mean) <= 0.1 * mean for ks in keyed)
+
+
+def test_spatial_order_single_partition_skips_bounds_job(spark, tmp_path, monkeypatch):
+    from pyspark.sql import functions as F
+
+    from stac_geoparquet_spark.sinks import to_geoparquet
+
+    def no_bounds(*args, **kwargs):
+        raise AssertionError("bounds job run for a single-partition input")
+
+    monkeypatch.setattr(F, "percentile_approx", no_bounds)
+    files = to_geoparquet(
+        _points(spark, 200).repartition(1), str(tmp_path / "one"), spatial_order=True
+    )
+    assert len(files) == 1
+    (ks,) = _file_zkeys(files)
+    assert len(ks) == 200 and ks == sorted(ks)
+
+
+def test_spatial_order_empty_input_writes_schema_file(spark, tmp_path):
+    from stac_geoparquet_spark.sinks import read_geoparquet_metadata, to_geoparquet
+
+    empty = _points(spark, 50).repartition(3).filter("id = 'no-such-id'")
+    dest = str(tmp_path / "empty_z")
+    assert len(to_geoparquet(empty, dest, spatial_order=True)) == 1
+    assert "stac-geoparquet" in read_geoparquet_metadata(dest)
+    assert spark.read.parquet(dest).count() == 0
+
+
+def test_spatial_order_encodes_each_geometry_once(spark, tmp_path, monkeypatch):
+    """The spatial sort's bounds come from the bbox alone, so one
+    read -> normalize -> spatially ordered write encodes every geometry
+    of every item exactly once."""
+    from pyspark.sql import types as T
+
+    from stac_geoparquet_spark.sinks import to_geoparquet
+    from stac_geoparquet_spark.stac import forward
+    from stac_geoparquet_spark.stac.schema import geometry_paths
+
+    encoded = spark.sparkContext.accumulator(0)
+
+    def counting_udf():
+        import pandas as pd
+        from pyspark.sql.functions import pandas_udf
+
+        encode = forward._wkb_mod.geojson_to_wkb
+
+        def count_and_encode(s: pd.Series) -> pd.Series:
+            encoded.add(int(s.notna().sum()))
+            return s.map(lambda v: None if v is None else encode(v))
+
+        return pandas_udf(count_and_encode, T.BinaryType())
+
+    monkeypatch.setattr(forward, "_make_wkb_encode_udf", counting_udf)
+    src = []
+    for k in range(4):
+        items = [dict(it, id=f"{it['id']}_{k}") for it in fx.lidar_like_items()]
+        src.append(fx.write_ndjson(items, str(tmp_path / f"in-{k}.ndjson")))
+    raw = forward.read_stac_json(spark, src)
+    assert raw.rdd.getNumPartitions() >= 2
+    n_paths = sum(
+        isinstance(dt, T.StringType) for dt in geometry_paths(raw.schema).values()
+    )
+    assert n_paths == 2
+    files = to_geoparquet(
+        forward.normalize_items(raw), str(tmp_path / "once"), spatial_order=True
+    )
+    assert len(files) >= 2
+    assert encoded.value == 12 * n_paths
+
+
+def test_mixed_bbox_arity_fails_before_any_file_is_written(spark, tmp_path):
+    """T4's arity check runs inside the plan; with spatial_order=True the
+    first action is the bounds job, so the destination stays empty."""
+    import glob
+
+    from stac_geoparquet_spark.sinks import to_geoparquet
+    from stac_geoparquet_spark.stac.forward import bbox_to_struct
+
+    rows = [(f"a{i}", [0.0, 0.0, 1.0, 1.0]) for i in range(20)]
+    rows += [(f"b{i}", [0.0, 0.0, 0.0, 1.0, 1.0, 1.0]) for i in range(20)]
+    df = bbox_to_struct(
+        spark.createDataFrame(rows, "id string, bbox array<double>").repartition(4)
+    )
+    dest = str(tmp_path / "mixed")
+    with pytest.raises(Exception, match="mixed 2-D/3-D"):
+        to_geoparquet(df, dest, spatial_order=True)
+    assert glob.glob(dest + "/**/*.parquet", recursive=True) == []
+
+
 def test_full_collection_dicts_round_trip(spark, tmp_path, normalized):
     """`collections` as {id: full Collection JSON} is stored verbatim
     under stac-geoparquet.collections and rehydrates from the footer

@@ -1,10 +1,9 @@
 """Freshness contract of ``caches.session_memo``.
 
-A memo is keyed on (applicationId, absolute source path, source stamp):
-rewriting the source rebuilds, an unchanged stamp returns the very same
-object, and two spellings of one data dir share an entry.  No Spark is
-needed — the helper reads only ``spark.sparkContext.applicationId`` and
-compares sessions by identity."""
+A memo is keyed on (absolute source path, source stamp): rewriting the
+source rebuilds, an unchanged stamp returns the very same object, and
+two spellings of one data dir share an entry.  No Spark is needed — the
+helper only compares sessions by identity."""
 
 from __future__ import annotations
 
@@ -35,10 +34,9 @@ STORES = {
 }
 
 
-def _session(app: str = "app-1"):
-    return types.SimpleNamespace(
-        sparkContext=types.SimpleNamespace(applicationId=app)
-    )
+def _session():
+    """A stand-in session: the helper only checks its identity."""
+    return types.SimpleNamespace()
 
 
 @pytest.fixture

@@ -87,6 +87,81 @@ def test_bbox3d_struct_fields(spark, tmp_path):
     ]
 
 
+def _bbox_to_struct_of(spark, *bboxes):
+    from stac_geoparquet_spark.stac.forward import bbox_to_struct
+
+    rows = [(f"i{k}", b) for k, b in enumerate(bboxes)]
+    return bbox_to_struct(spark.createDataFrame(rows, "id string, bbox array<double>"))
+
+
+def test_bbox_arity_probe_and_in_plan_check(spark):
+    """T4 probes the arity from one bbox and checks every row in the
+    plan: mixed 2-D/3-D bboxes raise on the first action, a probed arity
+    other than 4 or 6 raises at construction."""
+    from stac_geoparquet_spark.stac.constants import BBOX_2D, BBOX_3D
+
+    mixed = _bbox_to_struct_of(spark, [0.0, 0.0, 1.0, 1.0], [0.0] * 3 + [1.0] * 3)
+    with pytest.raises(Exception, match="mixed 2-D/3-D"):
+        mixed.collect()
+
+    three = _bbox_to_struct_of(spark, [0.0, 1.0, 2.0, 3.0, 4.0, 5.0], None)
+    assert tuple(three.schema["bbox"].dataType.names) == BBOX_3D
+    rows = {r["id"]: r["bbox"] for r in three.collect()}
+    assert rows["i0"].asDict() == dict(zip(BBOX_3D, [0.0, 1.0, 2.0, 3.0, 4.0, 5.0]))
+    assert rows["i1"] is None
+
+    nulls = _bbox_to_struct_of(spark, None, None)
+    assert tuple(nulls.schema["bbox"].dataType.names) == BBOX_2D
+    assert [r["bbox"] for r in nulls.collect()] == [None, None]
+
+    with pytest.raises(ValueError, match="4 or 6 values, got 5"):
+        _bbox_to_struct_of(spark, [0.0, 1.0, 2.0, 3.0, 4.0])
+
+
+def test_normalize_items_runs_one_single_task_job(spark, tmp_path):
+    """Building the normalized frame reads one split (T4's arity probe),
+    not the whole input."""
+    from stac_geoparquet_spark.stac.forward import normalize_items, read_stac_json
+
+    src = []
+    for k in range(3):
+        items = [dict(it, id=f"{it['id']}_{k}") for it in fx.naip_like_items()]
+        src.append(fx.write_ndjson(items, str(tmp_path / f"in-{k}.ndjson")))
+    raw = read_stac_json(spark, src)
+    assert raw.rdd.getNumPartitions() >= 2
+    sc = spark.sparkContext
+    sc.setJobGroup("normalize-items-jobs", "normalize_items")
+    try:
+        normalize_items(raw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    (job,) = tracker.getJobIdsForGroup("normalize-items-jobs")
+    stages = tracker.getJobInfo(job).stageIds
+    assert sum(tracker.getStageInfo(s).numTasks for s in stages) == 1
+
+
+@pytest.mark.parametrize("layout", ["gzip_file", "directory"])
+def test_ndjson_gzip_file_and_directory_read_like_plain_files(spark, tmp_path, layout):
+    import gzip
+
+    from stac_geoparquet_spark.stac import read_items, to_item_dicts
+
+    items = fx.naip_like_items() + fx.sentinel_like_items()
+    if layout == "gzip_file":
+        src = str(tmp_path / "items.ndjson.gz")
+        with gzip.open(src, "wt") as f:
+            f.writelines(json.dumps(it) + "\n" for it in items)
+    else:
+        src = str(tmp_path / "items")
+        (tmp_path / "items").mkdir()
+        fx.write_ndjson(items[:4], f"{src}/a.ndjson")
+        fx.write_ndjson(items[4:], f"{src}/b.ndjson")
+    ok, why = items_equal(items, list(to_item_dicts(read_items(spark, src))))
+    assert ok, why
+
+
 def test_collision_warns_and_drops(spark, tmp_path):
     items = [fx.collision_item()]
     with pytest.warns(UserWarning, match="collection"):
