@@ -34,23 +34,6 @@ def _fewer_splits_than(spark: SparkSession, path: str, target: int) -> bool:
     return scan_parquet(spark, path).rdd.getNumPartitions() < target
 
 
-def scan_is_multisplit(
-    spark: SparkSession, path: str, target: int | None = None
-) -> bool:
-    """True when ``path`` scans as at least one split per core — the
-    scale regime.  Same memoized plan-time probe as ``read_spread``,
-    exposed for callers that must pick a STRATEGY by regime rather
-    than re-spread rows: e.g. an eager fence over a
-    multi-consumer aggregate deletes a duplicate input pass (a real
-    win when every core is busy) but SERIALIZES branches that a toy
-    single-split fixture runs in parallel on idle cores — the r10
-    ``part_affinity_topk`` regression (driver cell 1.14 -> 1.39 s,
-    8->32-core scaling ratio 0.88)."""
-    if target is None:
-        target = spark.sparkContext.defaultParallelism
-    return not _fewer_splits_than(spark, path, target)
-
-
 def read_spread(
     spark: SparkSession, path: str, target: int | None = None
 ) -> DataFrame:
@@ -70,7 +53,7 @@ def read_spread(
     df = scan_parquet(spark, path)
     if target is None:
         target = spark.sparkContext.defaultParallelism
-    if not scan_is_multisplit(spark, path, target):
+    if _fewer_splits_than(spark, path, target):
         return df.repartition(target)
     return df
 
@@ -79,24 +62,29 @@ def fenced(df: DataFrame) -> DataFrame:
     """Lineage fence for a SMALL intermediate that multiple downstream
     consumers (or a fixpoint loop) will re-read.
 
-    Contract — apply this when BOTH hold, and only then:
+    Contract — apply this when ALL hold, and only then:
 
-    1. **Multi-consumer or iterative.**  Without the fence, Catalyst
-       re-executes the whole upstream plan once per consumer (the
-       covariance assembly's two reads of the merged partial matrix
-       TRIPLED the 100-TB scan in the explain), and a loop's plan tree
-       grows by one full copy of the body per iteration until analysis
-       time itself blows up.
+    1. **Multi-consumer or iterative.**  A loop's plan tree grows by
+       one full copy of the body per iteration until analysis time
+       itself blows up; a multi-consumer subtree may be planned once
+       per consumer.
     2. **Bounded output.**  ``localCheckpoint`` materializes the rows
        on the executors, so the input must be bounded by something
        OTHER than corpus size — a d×d matrix, a near-dup pair graph,
        a K-row centroid table.  Never fence a corpus-sized scan; cache
        or restructure instead.
+    3. **Measured need.**  The fence truncates a loop's lineage, or
+       backs a session memo that later queries read, or the query's
+       final adaptive plan WITHOUT it reads a source more than once.
+       Two consumers of one identical subtree usually share a single
+       scan through a ``ReusedExchange``; there the fence only adds a
+       construction-time job, and stays only where an interleaved A/B
+       shows the query slower without it.  Pin the single read on the
+       final plan (``tests/test_plans.py``) when deleting one.
 
     Eager by default (same as bare ``df.localCheckpoint()``): the fence
     runs the upstream job exactly once, NOW, and every consumer reads
-    the materialized blocks.  Kept as one helper so the next
-    multi-consumer op inherits the contract instead of re-deriving it.
+    the materialized blocks.
     """
     return df.localCheckpoint()
 
@@ -183,6 +171,13 @@ def layout_write_partitions(
 # the one-line stdout contract.
 LAYOUT_BUILD_LOG: list[dict] = []
 
+# Every published layout records the source file it derives from in
+# this file (Spark's readers skip ``_``-prefixed files), so a later
+# publish can tell its own stale copies and orphans from live layouts.
+_SOURCE_RECORD = "_SOURCE"
+# layout path -> source file, for every path this process computed
+_LAYOUT_SOURCES: dict[str, str] = {}
+
 
 def layout_scratch_path(src_file: str, prefix: str) -> str:
     """Scratch location for a derived layout of ``src_file``, keyed by
@@ -196,7 +191,31 @@ def layout_scratch_path(src_file: str, prefix: str) -> str:
     tag = hashlib.md5(
         f"{src}|{source_stamp(src)}|v{LAYOUT_FORMAT_VERSION}".encode()
     ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
+    path = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
+    _LAYOUT_SOURCES[path] = src
+    return path
+
+
+def _prune_layout_siblings(path: str) -> None:
+    """Delete the other copies of ``path``'s layout prefix that are
+    dead: built from the same source at an older stamp or format
+    version, or from a source that no longer exists.  A copy of
+    another live source, or one without a record, stays."""
+    import shutil
+
+    parent, name = os.path.split(path)
+    prefix = name.rsplit("_", 1)[0]
+    src = _LAYOUT_SOURCES.get(path)
+    for sib in os.listdir(parent):
+        if sib == name or ".build-" in sib or sib.rsplit("_", 1)[0] != prefix:
+            continue
+        try:
+            with open(os.path.join(parent, sib, _SOURCE_RECORD)) as f:
+                rec = f.read()
+        except OSError:
+            continue
+        if rec == src or not os.path.exists(rec):
+            shutil.rmtree(os.path.join(parent, sib), ignore_errors=True)
 
 
 def materialize_layout(path: str, build) -> str:
@@ -206,6 +225,9 @@ def materialize_layout(path: str, build) -> str:
     publish with one rename.  Concurrent builders race benignly —
     whoever renames first wins (content is deterministic), the loser
     discards its copy — and no reader ever sees a half-written layout.
+    A published build then deletes the same prefix's dead copies
+    (``_prune_layout_siblings``), so the temp dir keeps one copy per
+    (source, layout).
     """
     import shutil
     import time
@@ -223,6 +245,9 @@ def materialize_layout(path: str, build) -> str:
                 "seconds": round(time.perf_counter() - t0, 3),
             }
         )
+        if path in _LAYOUT_SOURCES:
+            with open(os.path.join(build_dir, _SOURCE_RECORD), "w") as f:
+                f.write(_LAYOUT_SOURCES[path])
         os.rename(build_dir, path)
     except OSError:
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -236,4 +261,5 @@ def materialize_layout(path: str, build) -> str:
         # build() itself failed mid-job: clean the private dir
         shutil.rmtree(build_dir, ignore_errors=True)
         raise
+    _prune_layout_siblings(path)
     return path

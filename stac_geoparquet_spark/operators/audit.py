@@ -68,11 +68,6 @@ def orders_benford_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n_orders"))
     )
-    from stac_geoparquet_spark.operators._io import fenced
-
-    # fenced (9-row rollup, two consumers): totals + share join read
-    # the materialized counts, not a second orders scan
-    per = fenced(per)
     tot = per.agg(F.sum("n_orders").alias("t"))
     return per.join(F.broadcast(tot)).selectExpr(
         "digit",

@@ -15,9 +15,11 @@ oracle; ranks are rounded to 10 decimals at every synchronization
 point so both engines iterate from bit-identical state (neighbor-sum
 reordering noise ~1e-16 against a 5e-11 rounding quantum). At a
 100-TB corpus the same loop holds — iterations are joins on the pair
-graph, never on the corpus — with the shared lineage fence
-(``operators/_io.fenced``, see its contract docstring) truncating
-lineage per round exactly as in dedup_cluster_cc.
+graph, never on the corpus.  The peeling and propagation loops
+(k-core, label propagation, HyperBall) truncate lineage per round with
+the shared lineage fence (``operators/_io.fenced``, see its contract
+docstring) exactly as in dedup_cluster_cc; the fixed-round power
+iterations stay one plan.
 """
 
 from __future__ import annotations
@@ -44,38 +46,29 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, pagerank) after PR_ITERS damped power iterations on the
     symmetric near-dup graph; rank rounded to 8 decimals on output."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    edges = fenced(
-        pairs.union(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
+    edges = pairs.union(
+        pairs.select(
+            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
         )
     )
-    # r11: deg is node-bounded and multi-consumer (the contrib join
-    # AND the per-round node list below) — fence it per the _io.fenced
-    # contract so neither consumer re-runs the edge aggregate
-    deg = fenced(edges.groupBy("doc_a").agg(F.count(F.lit(1)).alias("deg")))
+    deg = edges.groupBy("doc_a").agg(F.count(F.lit(1)).alias("deg"))
     n_nodes = deg.count()
     if n_nodes == 0:
         # empty pair graph (tiny/degenerate corpus): no nodes to rank —
         # the oracle's chained CTEs are empty too
         return spark.createDataFrame([], "doc_id bigint, pagerank double")
-    ranks = fenced(
-        deg.select(
-            F.col("doc_a").alias("doc_id"),
-            F.round(F.lit(1.0 / n_nodes), PR_ROUND).alias("pr"),
-        )
+    ranks = deg.select(
+        F.col("doc_a").alias("doc_id"),
+        F.round(F.lit(1.0 / n_nodes), PR_ROUND).alias("pr"),
     )
-    # r11 batch 3: NO per-round fence.  The node list is the constant
-    # key set of the FENCED deg (ranks carries exactly deg's doc_ids
-    # every round, including round 0), so taking it from deg instead
-    # of from the previous iterate leaves each iterate with exactly
-    # ONE consumer (the contrib join) — the fence prevented no
-    # recompute and only paid a localCheckpoint job per round at
-    # construction time (the eigenvector argument).  The whole damped
-    # iteration is ONE linear plan over the fenced edges/deg leaves,
-    # and the per-round round(pr, PR_ROUND) keeps both engines on
-    # identical float sequences exactly as before.
+    # No fence: the node list is the constant key set of deg (ranks
+    # carries exactly deg's doc_ids every round, including round 0), so
+    # each iterate has exactly ONE consumer (the contrib join), and the
+    # repeated edges/deg subtrees read one shuffle each through exchange
+    # reuse (pinned on the final plan in tests/test_plans.py).  The
+    # damped iteration is ONE linear plan over the memoized pair graph;
+    # the per-round round(pr, PR_ROUND) keeps both engines on identical
+    # float sequences.
     node_ids = deg.select(F.col("doc_a").alias("doc_id"))
     for _ in range(PR_ITERS):
         contrib = (
@@ -861,9 +854,7 @@ ORACLE["graph_modularity_score"] = _modularity_oracle_sql()
 # rounded at EIG_ROUND decimals so both engines walk identical float
 # sequences.  Scale shape: the pair graph is the session-cached
 # part-dimension table; each round is one node-keyed aggregate; the
-# L1 normalizer is a 1-row aggregate broadcast onto the FENCED iterate
-# (the fence makes the recompute-per-consumer a leaf read, and bounds
-# lineage like PageRank's per-round fences).
+# L1 normalizer rides an unpartitioned window over the iterate.
 # --------------------------------------------------------------------------
 EIG_ROUNDS = 4
 EIG_ROUND = 10
@@ -875,14 +866,10 @@ def graph_eigenvector_centrality(
     from stac_geoparquet_spark.operators.mining import basket_pair_support
 
     pairs = basket_pair_support(spark, sf_dir).select("part_a", "part_b")
-    edges = fenced(
-        pairs.select(
-            F.col("part_a").alias("a"), F.col("part_b").alias("b")
-        ).union(
-            pairs.select(
-                F.col("part_b").alias("a"), F.col("part_a").alias("b")
-            )
-        )
+    edges = pairs.select(
+        F.col("part_a").alias("a"), F.col("part_b").alias("b")
+    ).union(
+        pairs.select(F.col("part_b").alias("a"), F.col("part_a").alias("b"))
     )
     # empty-graph probe: one LIMIT-1 job, not a full count (the k-core
     # early-exit convention)
@@ -892,9 +879,7 @@ def graph_eigenvector_centrality(
     # positive start, so the conventional 1/n initial (which costs a
     # count job + a rounding step) buys nothing — both engines start
     # from the identical exact constant
-    nodes = fenced(
-        edges.select(F.col("a").alias("n")).distinct()
-    )
+    nodes = edges.select(F.col("a").alias("n")).distinct()
     x = nodes.select("n", F.lit(1.0).alias("x"))
     # r11: the L1 normalizer rides an unpartitioned window over the
     # JOINED iterate (sum skips the NULL y of in-edge-less nodes, so
@@ -902,19 +887,18 @@ def graph_eigenvector_centrality(
     # shape computed contrib TWICE per round (the s aggregate and the
     # join are two consumers; no CSE) and paid a broadcast exchange
     # per round.  The window input is the node table — bounded by the
-    # part dimension, the same bound the fence already relies on.
+    # part dimension.
     w_all = Window.partitionBy().rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    # r11 batch 3: NO per-round fence.  With the normalizer riding the
-    # window, each iterate has exactly ONE consumer (the next round's
-    # join), so the fence prevented no recompute — it only paid a
-    # localCheckpoint job per round at construction time (4 jobs, the
-    # bulk of this query's 2.3 s construction).  The whole power
-    # iteration is now ONE linear plan over the two fenced leaves
-    # (edges, nodes); depth is EIG_ROUNDS (4), trivially plannable,
-    # and the per-round round(x, 10) keeps both engines on identical
-    # float sequences exactly as before.
+    # No fence: with the normalizer riding the window, each iterate
+    # has exactly ONE consumer (the next round's join), and the
+    # repeated edges/nodes subtrees read one shuffle each through
+    # exchange reuse (pinned on the final plan in tests/test_plans.py).
+    # The power iteration is ONE linear plan over the memoized pair
+    # graph; depth is EIG_ROUNDS (4), trivially plannable, and the
+    # per-round round(x, 10) keeps both engines on identical float
+    # sequences.
     for _ in range(EIG_ROUNDS):
         contrib = (
             edges.join(x.selectExpr("n AS b", "x AS xb"), "b")

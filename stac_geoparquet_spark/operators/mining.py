@@ -550,30 +550,14 @@ AFFINITY_TOP_K = 5
 
 
 def part_affinity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators._io import (
-        fenced,
-        scan_is_multisplit,
-    )
-
     items = _basket_items(spark, sf_dir)
-    # part-dimension-bounded, consumed TWICE below (cp and cn): each
-    # side re-plans the full lineitem scan + distinct + aggregate (no
-    # CSE; guide §2.4).  r11: the r10 unconditional fence regressed
-    # the driver cell 1.14 -> 1.39 s with a 0.88 core-scaling ratio —
-    # on the single-split fixture the eager fence job SERIALIZES what
-    # the duplicated branches run in parallel on idle cores (an
-    # interleaved A/B this round measured the two shapes equal-total
-    # locally, 1.34 vs 1.35 s, with the cost merely moved cons<->exec).
-    # Fence only in the multi-split regime, where the deleted second
-    # lineitem pass is real cost and there are no idle cores to hide
-    # the duplicate (r10 VERDICT item 4: gate it on split count).
+    # part-dimension-bounded, consumed TWICE below (cp and cn); no
+    # fence: the second consumer reads the first one's shuffle through
+    # exchange reuse, so lineitem is scanned once (pinned on the final
+    # plan in tests/test_plans.py)
     part_counts = items.groupBy("l_partkey").agg(
         F.count(F.lit(1)).alias("n_part")
     )
-    if scan_is_multisplit(
-        spark, os.path.join(sf_dir, "lineitem.parquet")
-    ):
-        part_counts = fenced(part_counts)
     pairs = basket_pair_support(spark, sf_dir)
     sym = pairs.select(
         F.col("part_a").alias("part"),

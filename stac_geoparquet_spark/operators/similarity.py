@@ -2829,10 +2829,6 @@ def knn_kdist_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("cos_sim").alias("kth_cos"),
         )
     )
-    from stac_geoparquet_spark.operators._io import fenced
-
-    # fenced: |Q|-bounded rollup, two consumers (stats row + flags)
-    kd = fenced(kd)
     n = F.count(F.lit(1)).cast("double")
     mu_expr = F.round(F.sum("kth_cos") / n, 9)
     sd_expr = F.round(

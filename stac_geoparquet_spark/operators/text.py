@@ -535,19 +535,9 @@ def split_unigram_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(split_pct() < TRAIN_PCT, 1).otherwise(0).alias("is_train"),
         F.explode(_words(F.col("text"))).alias("word"),
     ).where(F.col("word") != "")
-    from stac_geoparquet_spark.operators._io import fenced
-
-    # r10: fenced — the per-word count table is vocabulary-scaled
-    # (Heaps-sublinear in corpus bytes), and its TWO consumers (the
-    # totals reduce and the per-term JSD map) each re-ran the corpus
-    # tokenize + word aggregate without it (no CSE; guide §2.4).  The
-    # fence trades sublinear executor storage for a full corpus pass —
-    # the right side of that trade at every scale.
-    wc = fenced(
-        words.groupBy("word").agg(
-            F.sum("is_train").cast("bigint").alias("ct"),
-            F.sum(1 - F.col("is_train")).cast("bigint").alias("ch"),
-        )
+    wc = words.groupBy("word").agg(
+        F.sum("is_train").cast("bigint").alias("ct"),
+        F.sum(1 - F.col("is_train")).cast("bigint").alias("ch"),
     )
     tot = wc.agg(
         F.sum("ct").cast("bigint").alias("tt"),

@@ -80,12 +80,7 @@ def _daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact ints before any division).
 # --------------------------------------------------------------------------
 def orders_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators._io import fenced
-
-    # fenced (contract: multi-consumer + calendar-bounded): both lag-
-    # join sides read the materialized daily rollup — withOUT the
-    # fence Catalyst re-plans the full orders scan under x AND y
-    daily = fenced(_daily_orders(spark, sf_dir))
+    daily = _daily_orders(spark, sf_dir)
     x = daily.select(
         F.col("d").alias("xd"),
         F.col("c").alias("xc"),
@@ -178,13 +173,8 @@ def orders_seasonality_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("d").isNotNull())
     )
-    from stac_geoparquet_spark.operators._io import fenced
-
     dow = ((F.datediff(F.col("d"), F.to_date(F.lit("1970-01-05"))) % 7) + 7) % 7
-    # fenced (7-row rollup, two consumers): the totals aggregate and
-    # the share join both read the materialized rollup instead of
-    # re-planning the orders scan
-    per = fenced(
+    per = (
         o.select(dow.alias("dow"), "cents")
         .groupBy("dow")
         .agg(
@@ -582,25 +572,22 @@ ORACLE = {
 # smoothed per-term output contract as events_psi_drift.
 # --------------------------------------------------------------------------
 def events_psi_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators._io import fenced
     from stac_geoparquet_spark.operators.retrieval import INCOMING_MOD
 
     ev = _events(spark, sf_dir).where(
         F.col("event_type").isNotNull() & F.col("event_id").isNotNull()
     )
-    per = fenced(
-        ev.groupBy("event_type").agg(
-            F.sum(
-                F.when(F.col("event_id") % INCOMING_MOD != 0, 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_base"),
-            F.sum(
-                F.when(F.col("event_id") % INCOMING_MOD == 0, 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_incoming"),
+    per = ev.groupBy("event_type").agg(
+        F.sum(
+            F.when(F.col("event_id") % INCOMING_MOD != 0, 1).otherwise(0)
         )
+        .cast("bigint")
+        .alias("n_base"),
+        F.sum(
+            F.when(F.col("event_id") % INCOMING_MOD == 0, 1).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("n_incoming"),
     )
     tot = per.agg(
         F.sum("n_base").alias("ta"),
@@ -826,8 +813,6 @@ ORACLE["orders_cohort_repeat_rate"] = COHORT_REPEAT_SQL
 # double expression; the sd>0 guard compares exact ints.
 # --------------------------------------------------------------------------
 def events_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators._io import fenced
-
     ev = (
         _events(spark, sf_dir)
         .where(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
@@ -840,12 +825,8 @@ def events_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("hour_idx"),
         )
     )
-    # fenced (calendar-bounded rollup, two consumers: the slot
-    # baseline and the scoring join)
-    hourly = fenced(
-        ev.groupBy("event_type", "hour_idx").agg(
-            F.count(F.lit(1)).alias("n")
-        )
+    hourly = ev.groupBy("event_type", "hour_idx").agg(
+        F.count(F.lit(1)).alias("n")
     )
     hourly = hourly.withColumn(
         "slot", ((F.col("hour_idx") % 168) + 168) % 168
@@ -1191,7 +1172,7 @@ ORACLE["events_ab_cuped"] = _ab_cuped_sql()
 # one fixed-shape double expression, so no accumulation order exists
 # to drift cross-engine (the +0.0 normalizes the -0.0 a rounded exact
 # cancellation can produce).  The unpartitioned prefix window runs
-# over the FENCED daily rollup (calendar-bounded input — the legal
+# over the daily rollup (calendar-bounded input — the legal
 # unpartitioned-window class per tests/test_registry_contract.py);
 # the peak lookup is one broadcast 1-row join back.  Ties on the
 # rounded |cusum| flag every tied day (deterministic on both engines).
@@ -1199,9 +1180,7 @@ ORACLE["events_ab_cuped"] = _ab_cuped_sql()
 def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from stac_geoparquet_spark.operators._io import fenced
-
-    daily = fenced(
+    daily = (
         _events(spark, sf_dir)
         .where(F.col("ts").isNotNull())
         .select(F.to_date("ts").alias("d"))
@@ -1219,16 +1198,12 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("nd"),
         F.sum("c").alias("total"),
     )
-    # fenced (calendar-bounded scored table, two consumers: the peak
-    # aggregate and the final flag join)
-    scored = fenced(
-        pre.join(F.broadcast(tot)).selectExpr(
-            "d",
-            "c",
-            "round(CAST(prefix AS DOUBLE)"
-            " - CAST(k AS DOUBLE) * CAST(total AS DOUBLE)"
-            "   / CAST(nd AS DOUBLE), 6) + 0.0 AS cusum",
-        )
+    scored = pre.join(F.broadcast(tot)).selectExpr(
+        "d",
+        "c",
+        "round(CAST(prefix AS DOUBLE)"
+        " - CAST(k AS DOUBLE) * CAST(total AS DOUBLE)"
+        "   / CAST(nd AS DOUBLE), 6) + 0.0 AS cusum",
     )
     mx = scored.agg(F.max(F.abs(F.col("cusum"))).alias("max_abs"))
     return scored.join(F.broadcast(mx)).select(
@@ -3117,8 +3092,11 @@ def events_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stac_geoparquet_spark.operators._io import fenced
 
     # fenced: three consumers (the m count, the testable branch, the
-    # untestable branch) would each re-run the corpus aggregate under
-    # no-CSE; the fence output is bounded by the event-type alphabet
+    # untestable branch); the output is bounded by the event-type
+    # alphabet.  Without the fence the final plan still scans events
+    # once (exchange reuse), but the query was no faster in an
+    # interleaved A/B at sf0.1 (0.814 s fenced, 0.816 s unfenced,
+    # slower unfenced in 2 of 3 pairs), so the fence stays
     mom = fenced(per_cell.groupBy("event_type").agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
         .cast("bigint")
@@ -3576,9 +3554,11 @@ def ewma_chart_from_daily(daily: DataFrame) -> DataFrame:
 
     # calendar-bounded input: the unpartitioned index window and the
     # x W lag explode both run on the daily rollup (allowlisted).
-    # The indexed rollup is FENCED (calendar-bounded rows): three
-    # consumers (lag source, join probe, moment reduce) would each
-    # re-run the corpus rollup otherwise (the no-CSE trap).
+    # The indexed rollup is FENCED (calendar-bounded rows) for its
+    # three consumers (lag source, join probe, moment reduce).  Without
+    # it the final plan still scans orders once (exchange reuse), but
+    # ewma_control_incremental ran slower in 3/3 interleaved pairs at
+    # sf0.1 (0.877 -> 0.925 s), so the fence stays.
     idx = fenced(
         daily.withColumn(
             "t",
@@ -4037,8 +4017,9 @@ ORACLE["events_bootstrap_ci"] = BOOT_SQL
 # NULLs the trend instead of silently shortening the window.
 #
 # Scale shape: the corpus-sized work is the ONE daily rollup
-# (calendar-bounded, fenced: four consumers — window source, join
-# probe, DOW means, output — would each re-run it); the centered MA
+# (calendar-bounded; its four consumers — window source, join probe,
+# DOW means, output — read one shuffle through exchange reuse, pinned
+# on the final plan in tests/test_plans.py); the centered MA
 # is the x7 constant lag explode + date equi-join; the seasonal
 # table is a bounded 7-row aggregate broadcast back.  Counts are
 # exact int64; trend = sum7/7.0 and each mean is one fixed-shape
@@ -4048,15 +4029,11 @@ STL_EPOCH = "1995-01-02"  # a Monday: dow 0 = Monday on both engines
 
 
 def orders_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators._io import fenced
-
-    daily = fenced(
-        _daily_orders(spark, sf_dir).withColumn(
-            "dow",
-            F.expr(
-                f"((datediff(d, DATE '{STL_EPOCH}') % 7) + 7) % 7"
-            ).cast("bigint"),
-        )
+    daily = _daily_orders(spark, sf_dir).withColumn(
+        "dow",
+        F.expr(f"((datediff(d, DATE '{STL_EPOCH}') % 7) + 7) % 7").cast(
+            "bigint"
+        ),
     )
     src = daily.select(
         F.col("d").alias("ds"),
@@ -4079,7 +4056,7 @@ def orders_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11: the centering mean rides an unpartitioned window over the
     # 7-row DOW table instead of the r10 fence + 1-row aggregate +
     # broadcast join (classifier_lift_gains move; seas has one
-    # consumer, and its corpus-side inputs read the fenced daily leaf)
+    # consumer)
     seas = sdow.select(
         "dow",
         (

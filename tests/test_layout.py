@@ -93,3 +93,49 @@ def test_bucketed_copy_is_reused_after_the_catalog_forgets_it(
     finally:
         # later tests re-register the copies under the real temp dir
         drop_bucketed_tables()
+
+
+def test_layout_copies_are_pruned_to_one_per_live_source(
+    tmp_path, monkeypatch
+):
+    """A publish deletes its own source's older copies and the copies of
+    deleted sources; a copy of another live source stays."""
+    import tempfile
+
+    from stac_geoparquet_spark.operators import _io
+
+    temp = tmp_path / "temp"
+    temp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp))
+
+    def build(build_dir: str) -> None:
+        os.makedirs(build_dir)
+        open(os.path.join(build_dir, "_SUCCESS"), "w").close()
+
+    def publish(src) -> str:
+        return _io.materialize_layout(
+            _io.layout_scratch_path(str(src), "sgs_prunetest"), build
+        )
+
+    def copies() -> list[str]:
+        return sorted(os.listdir(temp))
+
+    live, gone, other = (tmp_path / f"{t}.parquet" for t in "abc")
+    for src in (live, gone, other):
+        src.write_bytes(b"x")
+    other_copy = os.path.basename(publish(other))
+    publish(gone)
+    # rewrite a source in place twice: one copy of it remains
+    publish(live)
+    for payload in (b"xy", b"xyz"):
+        live.write_bytes(payload)
+        newest = os.path.basename(publish(live))
+    assert len(copies()) == 3
+    assert newest in copies()
+    # a deleted source's copy is an orphan, removed by the next publish
+    gone.unlink()
+    live.write_bytes(b"xyzw")
+    newest = os.path.basename(publish(live))
+    # the unrelated live source's layout survives every prune
+    assert copies() == sorted([newest, other_copy])
+    assert (temp / other_copy / "_SOURCE").read_text() == str(other)

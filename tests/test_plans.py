@@ -75,6 +75,26 @@ def final_plan_of(df) -> str:
     return final
 
 
+def final_reads(final: str, source: str) -> int:
+    """Executed reads of ``source`` in a final adaptive plan (from
+    ``final_plan_of``): its FileScan nodes whose location is the
+    source's parquet file (``orders`` -> ``orders.parquet``) or one of
+    its derived layouts (``sgs_canon_orders_*``, ``sgs_orders_b8_*``).
+    A consumer served by a ReusedExchange prints no FileScan, so a
+    subtree two consumers share through exchange reuse reads once."""
+    name = re.compile(rf"(?<![A-Za-z0-9]){re.escape(source)}(\.parquet$|_)")
+    reads = 0
+    for line in final.splitlines():
+        loc = re.search(r"FileScan .*Location: \w+\(\d+ paths?\)\[([^\]]*)", line)
+        if loc and any(
+            name.search(part)
+            for path in loc.group(1).split(", ")
+            for part in path.rstrip("/").split("/")
+        ):
+            reads += 1
+    return reads
+
+
 @pytest.fixture(scope="module")
 def sf(sf_dir):
     return sf_dir
@@ -1005,6 +1025,17 @@ def test_kcore_returns_fenced_peel_result():
     assert n(s, "SortMergeJoin", "BroadcastHashJoin") == 0
 
 
+def test_pagerank_reads_only_pair_memo(spark, sf):
+    """PageRank has no fence: its edge and degree subtrees read the
+    memoized near-dup pair graph, never the documents, and the
+    repeated subtrees share their shuffles through exchange reuse."""
+    from stac_geoparquet_spark.operators import graph
+
+    final = final_plan_of(graph.pagerank_neardup_graph(spark, sf))
+    assert "FileScan" not in final
+    assert "ReusedExchange" in final
+
+
 def test_silhouette_is_pure_map_plus_one_rollup():
     s = SHAPES["kmeans_silhouette"]
     assert n(s, "HashAggregate") >= 2
@@ -1073,18 +1104,25 @@ def test_tfidf_single_explode_window_df():
     assert ["word"] in window_keys(s)
 
 
-def test_autocorrelation_broadcasts_fenced_daily():
+def test_autocorrelation_broadcasts_fenced_daily(spark, sf):
+    """No fence: both lag-join sides read the one daily rollup, the
+    second through a ReusedExchange, so orders is scanned once."""
+    from stac_geoparquet_spark.operators import timeseries as ts
+
     s = SHAPES["orders_autocorrelation"]
-    assert not scans(s, "orders.parquet")
-    assert n(s, "Scan ExistingRDD") >= 1
+    final = final_plan_of(ts.orders_autocorrelation(spark, sf))
+    assert final_reads(final, "orders") == 1
     assert n(s, "BroadcastHashJoin") == 1
     assert n(s, "Generate") == 1
     assert n(s, "Window") == 0
 
 
-def test_seasonality_single_orders_scan():
+def test_seasonality_single_orders_scan(spark, sf):
+    from stac_geoparquet_spark.operators import timeseries as ts
+
     s = SHAPES["orders_seasonality_dow"]
-    assert not scans(s, "orders.parquet")
+    final = final_plan_of(ts.orders_seasonality_dow(spark, sf))
+    assert final_reads(final, "orders") == 1
     assert n(s, "Window") == 0
 
 
@@ -1112,9 +1150,12 @@ def test_leadtime_trend_keyed_join_and_agg():
     )
 
 
-def test_benford_single_orders_scan():
+def test_benford_single_orders_scan(spark, sf):
+    from stac_geoparquet_spark.operators import audit
+
     s = SHAPES["orders_benford_digit"]
-    assert not scans(s, "orders.parquet")
+    final = final_plan_of(audit.orders_benford_digit(spark, sf))
+    assert final_reads(final, "orders") == 1
     assert n(s, "Window") == 0
 
 
@@ -1148,9 +1189,15 @@ def test_centroid_drift_single_scan_ordered_folds():
     assert n(s, "SortMergeJoin", "BroadcastHashJoin") == 0
 
 
-def test_affinity_topk_rides_cached_pairs():
+def test_affinity_topk_rides_cached_pairs(spark, sf):
+    from stac_geoparquet_spark.operators import mining
+
     s = SHAPES["part_affinity_topk"]
     assert n(s, "Scan ExistingRDD") >= 1
+    # the part-count table has two consumers and no fence: lineitem is
+    # scanned once, the second consumer reads a ReusedExchange
+    final = final_plan_of(mining.part_affinity_topk(spark, sf))
+    assert final_reads(final, "lineitem") == 1
     # one ranking window plus the WindowGroupLimit pair Spark inserts
     # for rank <= K (the K-filter runs inside the sort)
     assert n(s, "Window") - n(s, "WindowGroupLimit") == 1
@@ -1185,9 +1232,12 @@ def test_supplier_scorecard_single_scan():
     assert n(s, "HashAggregate") == 2
 
 
-def test_psi_incremental_one_scan_fenced():
+def test_psi_incremental_one_scan_fenced(spark, sf):
+    from stac_geoparquet_spark.operators import timeseries as ts
+
     s = SHAPES["events_psi_incremental"]
-    assert not scans(s, "events.parquet")
+    final = final_plan_of(ts.events_psi_incremental(spark, sf))
+    assert final_reads(final, "events") == 1
     assert n(s, "Window") == 0
 
 
@@ -1212,9 +1262,12 @@ def test_ivf_recall_composes_pruned_inputs():
     )
 
 
-def test_seasonal_anomaly_bounded_baseline():
+def test_seasonal_anomaly_bounded_baseline(spark, sf):
+    from stac_geoparquet_spark.operators import timeseries as ts
+
     s = SHAPES["events_seasonal_anomaly"]
-    assert not scans(s, "events.parquet")
+    final = final_plan_of(ts.events_seasonal_anomaly(spark, sf))
+    assert final_reads(final, "events") == 1
     assert n(s, "Window") == 0
     assert not any("percentile" in f for f in s["funcs"])
     assert n(s, "BroadcastHashJoin") == 1
@@ -1233,11 +1286,16 @@ def test_token_savings_rides_label_table():
     assert n(s, "Window") <= 1
 
 
-def test_kdist_outliers_pure_map_flags():
+def test_kdist_outliers_pure_map_flags(spark, sf):
+    """The flags are one |Q|-keyed rollup (partial + final) over the
+    memoized kNN rows; no corpus file is read."""
+    from stac_geoparquet_spark.operators import similarity as sim
+
     s = SHAPES["knn_kdist_outliers"]
     assert n(s, "Scan ExistingRDD") >= 1
     assert n(s, "Window") == 0
-    assert n(s, "HashAggregate") == 0
+    assert n(s, "HashAggregate") == 2
+    assert "FileScan" not in final_plan_of(sim.knn_kdist_outliers(spark, sf))
     assert n(s, "SortMergeJoin", "BroadcastHashJoin") == 0
 
 
@@ -1248,13 +1306,20 @@ def test_phash_dedup_one_arrow_stage():
     assert n(s, "SortMergeJoin", "BroadcastHashJoin") == 0
 
 
-def test_cusum_fenced_bounded_table():
+def test_cusum_fenced_bounded_table(spark, sf):
+    """No fence: the prefix windows are unpartitioned over the
+    calendar-bounded daily rollup (one per consumer of the scored
+    table), the totals and the peak are 1-row broadcasts, and events
+    is scanned once — every other consumer reuses the rollup's
+    shuffle."""
+    from stac_geoparquet_spark.operators import timeseries as ts
+
     s = SHAPES["events_cusum_changepoint"]
-    assert not scans(s, "events.parquet")
-    assert n(s, "Scan ExistingRDD") >= 1
-    assert n(s, "Window") == 0
+    final = final_plan_of(ts.events_cusum_changepoint(spark, sf))
+    assert final_reads(final, "events") == 1
+    assert window_keys(s) == [[], []]
     assert not any("percentile" in f for f in s["funcs"])
-    assert n(s, "BroadcastNestedLoopJoin") == 1
+    assert n(s, "BroadcastNestedLoopJoin") == 3
 
 
 def test_quantiles_exact_two_phase_selection(spark, sf):
@@ -1428,7 +1493,14 @@ def test_split_by_neardup_cluster_label_join_only():
     assert n(SHAPES["split_by_neardup_cluster"], "Window") == 0
 
 
-def test_split_unigram_jsd_two_keyed_shuffles():
+def test_split_unigram_jsd_two_keyed_shuffles(spark, sf):
+    """No fence: the totals reduce and the per-term map read one word
+    count shuffle (the second through a ReusedExchange), so the corpus
+    is tokenized once."""
+    from stac_geoparquet_spark.operators import text
+
+    final = final_plan_of(text.split_unigram_jsd(spark, sf))
+    assert final_reads(final, "documents") == 1
     s = SHAPES["split_unigram_jsd"]
     assert n(s, "BroadcastNestedLoopJoin") == 1
     assert n(s, "Window") == 0
@@ -1503,8 +1575,16 @@ def test_approx_quantiles_incremental_merge_shape():
     assert n(s, "BroadcastNestedLoopJoin") == 1
 
 
-def test_eigenvector_centrality_fenced_rounds():
+def test_eigenvector_centrality_fenced_rounds(spark, sf):
+    """The power iteration reads only the memoized pair graph: no
+    corpus file in the final plan, and the repeated edge/node
+    subtrees share their shuffles through exchange reuse."""
+    from stac_geoparquet_spark.operators import graph
+
     assert n(SHAPES["graph_eigenvector_centrality"], "Scan ExistingRDD") >= 1
+    final = final_plan_of(graph.graph_eigenvector_centrality(spark, sf))
+    assert "FileScan" not in final
+    assert "ReusedExchange" in final
 
 
 def test_msprt_single_pass_moments():
@@ -1592,11 +1672,15 @@ def test_rm3_one_filtered_tokenize_pass():
     assert n(s, "Scan ExistingRDD") >= 1
 
 
-def test_stl_decompose_fenced_rollup():
+def test_stl_decompose_fenced_rollup(spark, sf):
+    """No fence: the four consumers of the daily rollup share one
+    orders scan through exchange reuse."""
+    from stac_geoparquet_spark.operators import timeseries as ts
+
     s = SHAPES["orders_stl_decompose"]
-    assert n(s, "Scan parquet") == 0
     assert n(s, "Window") == 1
-    assert n(s, "Scan ExistingRDD") >= 1
+    final = final_plan_of(ts.orders_stl_decompose(spark, sf))
+    assert final_reads(final, "orders") == 1
 
 
 def test_mattr_pure_in_row():
