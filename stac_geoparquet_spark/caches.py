@@ -1,5 +1,5 @@
-"""Session memos: intermediates derived from one source file, kept for
-the life of a Spark session.
+"""Session memos: intermediates derived from one source (a file or a
+directory of parquet files), kept for the life of a Spark session.
 
 Several operator families share a small intermediate between their
 consumers — a ``.cache()``'d shingle table, a ``localCheckpoint()``'d
@@ -9,14 +9,21 @@ mechanism for that.  It decorates a builder ``build(spark, where,
 *extra)`` and owns the whole contract:
 
 - **Key.** ``(abspath(source), source_stamp(source), *extra)``.  The
-  source is the file the intermediate is derived from: ``where``, or
-  ``<where>/<table>.parquet`` when the memo names a table.  The
-  ``(mtime, size)`` stamp makes a source regenerated
-  mid-session build a fresh value instead of serving a stale one, the
-  way every derived view of a Delta table is keyed on one table
-  version.  The absolute path makes a relative and an absolute
-  spelling of one data dir share an entry, and keeps two dirs with the
-  same basename apart.
+  source is what the intermediate is derived from: ``where``, or
+  ``<where>/<table>.parquet`` when the memo names a table.  A file's
+  stamp is its ``(mtime, size)``; a directory's covers every parquet
+  file under it, found recursively (relative path, size and mtime of
+  each), so an append, an overwrite, a deleted part file or one
+  rewritten in place under its old name all change it.  A source
+  regenerated mid-session therefore builds a fresh value instead of
+  serving a stale one, the way every derived view of a Delta table is
+  keyed on one table version.  The absolute path makes a relative and
+  an absolute spelling of one data dir share an entry, and keeps two
+  dirs with the same basename apart.
+- **Unstampable sources are never stored.**  A source the stamp cannot
+  see — a URI of a scheme other than ``file``, or a path that cannot be
+  read — is built on every call: with no stamp there is no way to tell
+  a stale entry from a fresh one.
 - **Session.** The session rides in the stored value and is
   identity-checked on a hit.  A DataFrame is bound to its
   SparkSession; handing session A's plan to a query of session B would
@@ -40,21 +47,67 @@ would otherwise rebuild it.
 from __future__ import annotations
 
 import functools
+import hashlib
 import os
+import stat
+from urllib.parse import urlsplit
+from urllib.request import url2pathname
 
 _REGISTRY: dict[str, dict] = {}
 _ABSENT = object()
 
 
-def source_stamp(src_file: str) -> str:
-    """(mtime, size) freshness stamp of a source file — the one
-    definition of the staleness contract that session memos and
-    derived scratch layouts key on."""
+def _local_path(src: str) -> str | None:
+    """Absolute local path of ``src`` (a plain path or a ``file:`` URI),
+    or None for a URI of any other scheme."""
+    parts = urlsplit(src)
+    if parts.scheme == "file":
+        return os.path.abspath(url2pathname(parts.path))
+    if parts.scheme:
+        return None
+    return os.path.abspath(src)
+
+
+def parquet_files(filesystem, base: str) -> list:
+    """pyarrow ``FileInfo`` of every ``.parquet`` file under ``base`` on
+    ``filesystem``, recursively (hive-partitioned part files sit in
+    subdirectories), sorted by path; empty when ``base`` does not
+    exist.  The one listing of a GeoParquet directory: the sink's
+    overwrite, the footer-metadata read and the directory stamp."""
+    from pyarrow import fs as pafs
+
+    sel = pafs.FileSelector(base, recursive=True, allow_not_found=True)
+    return sorted(
+        (f for f in filesystem.get_file_info(sel) if f.is_file and f.path.endswith(".parquet")),
+        key=lambda f: f.path,
+    )
+
+
+def source_stamp(src: str) -> str | None:
+    """Freshness stamp of a source — the one definition of the staleness
+    contract that session memos and derived scratch layouts key on.
+
+    A file: its ``(mtime, size)``.  A directory: a digest over every
+    parquet file under it (relative path, size, mtime).  None when the
+    source cannot be stamped: a non-``file`` URI, or an unreadable
+    path."""
+    path = _local_path(src)
+    if path is None:
+        return None
     try:
-        st = os.stat(os.path.abspath(src_file))
-        return f"{st.st_mtime_ns}:{st.st_size}"
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return f"{st.st_mtime_ns}:{st.st_size}"
+        from pyarrow import fs as pafs
+
+        files = parquet_files(pafs.LocalFileSystem(), path)
     except OSError:
-        return "missing"
+        return None
+    digest = hashlib.sha1()
+    for f in files:
+        rel = os.path.relpath(f.path, path)
+        digest.update(f"{rel}\0{f.size}\0{f.mtime_ns}\n".encode())
+    return f"dir:{digest.hexdigest()}"
 
 
 def register_cache(name: str, store: dict) -> dict:
@@ -76,11 +129,11 @@ def session_memo(name: str, table: str | None = None):
     def decorate(build):
         @functools.wraps(build)
         def memoized(spark, where: str, *extra):
-            src = os.path.abspath(
-                where if table is None
-                else os.path.join(where, f"{table}.parquet")
-            )
-            key = (src, source_stamp(src), *extra)
+            src = where if table is None else os.path.join(where, f"{table}.parquet")
+            stamp = source_stamp(src)
+            if stamp is None:  # unstampable: never stored
+                return build(spark, where, *extra)
+            key = (_local_path(src), stamp, *extra)
             hit = store.get(key, _ABSENT)
             if hit is not _ABSENT and hit[0] is spark:
                 return hit[1]

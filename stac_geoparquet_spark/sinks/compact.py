@@ -24,6 +24,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from stac_geoparquet_spark.caches import parquet_files
+
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
 # footer keys Spark/pyarrow stamp themselves — everything else in a
@@ -55,12 +57,7 @@ def _custom_footer_kv(path: str) -> dict[str, str]:
     from pyarrow import fs as pafs
 
     filesystem, base = pafs.FileSystem.from_uri(path)
-    sel = pafs.FileSelector(base, recursive=True, allow_not_found=True)
-    files = sorted(
-        f.path
-        for f in filesystem.get_file_info(sel)
-        if f.is_file and f.path.endswith(".parquet")
-    )
+    files = [f.path for f in parquet_files(filesystem, base)]
     if not files:
         return {}
 

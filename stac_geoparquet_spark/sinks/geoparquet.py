@@ -25,6 +25,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from stac_geoparquet_spark.caches import parquet_files
+from stac_geoparquet_spark.operators._io import scan_parquet
 from stac_geoparquet_spark.stac.constants import (
     BBOX_2D,
     GEOMETRY,
@@ -203,13 +205,7 @@ def to_geoparquet(
     # top-level-only listing would miss them — mode='error' would not
     # fire and mode='overwrite' would leave them to double rows on
     # read-back
-    existing = [
-        f.path
-        for f in filesystem.get_file_info(
-            pafs.FileSelector(base, recursive=True, allow_not_found=True)
-        )
-        if f.is_file and f.path.endswith(".parquet")
-    ]
+    existing = [f.path for f in parquet_files(filesystem, base)]
     if existing and mode == "error":
         raise FileExistsError(
             f"{output_path} already contains {len(existing)} parquet file(s); "
@@ -303,22 +299,18 @@ def write_parquet_with_footer(
 
 def read_geoparquet_metadata(path: str) -> dict[str, Any]:
     """Read the ``geo`` + ``stac-geoparquet`` footer metadata from a
-    GeoParquet file or directory (first file)."""
+    GeoParquet file or directory (the first parquet file under it, in
+    path order, subdirectories included)."""
     import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
     filesystem, base = pafs.FileSystem.from_uri(path)
     info = filesystem.get_file_info(base)
     if info.type == pafs.FileType.Directory:
-        sel = pafs.FileSelector(base)
-        candidates = sorted(
-            f.path
-            for f in filesystem.get_file_info(sel)
-            if f.path.endswith(".parquet")
-        )
+        candidates = parquet_files(filesystem, base)
         if not candidates:
             raise FileNotFoundError(f"no parquet files under {path}")
-        base = candidates[0]
+        base = candidates[0].path
     md = pq.read_schema(base, filesystem=filesystem).metadata or {}
     out: dict[str, Any] = {}
     for key in (b"geo", b"stac-geoparquet"):
@@ -329,5 +321,15 @@ def read_geoparquet_metadata(path: str) -> dict[str, Any]:
 
 def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
     """Read a GeoParquet directory back as a DataFrame (S9). Plain
-    parquet read — the normalized layout is already query-optimal."""
-    return spark.read.parquet(path)
+    parquet read — the normalized layout is already query-optimal.
+
+    The value is the session's memoized LOGICAL scan of ``path``
+    (``operators._io.scan_parquet``): no rows are cached, and every
+    action computes from the parquet bytes.  A repeat read returns the
+    same relation, with no file listing and no schema-inference job,
+    while the parquet files under ``path`` are unchanged (same relative
+    paths, sizes and mtimes, subdirectories included).  Any append,
+    overwrite, deletion or in-place rewrite, a different session, or a
+    path the stamp cannot see (a non-``file`` URI, an unreadable path)
+    reads fresh (``caches.source_stamp``)."""
+    return scan_parquet(spark, path)

@@ -177,11 +177,13 @@ def row_to_item(row_dict: dict, geom_paths: list[tuple[str, ...]]) -> dict:
 
 def to_item_dicts(df: DataFrame, precision: str = "us") -> Iterator[dict]:
     """Driver-side generator of STAC Item dicts (K4,
-    arrow/_api.py:347-367). Streams via toLocalIterator — the driver
-    never holds the full table."""
+    arrow/_api.py:347-367). Streams via toLocalIterator: one job per
+    partition, the next partition's job prefetched while the driver
+    decodes the current one, so the driver holds at most two
+    partitions, never the full table."""
     shaped = to_json_shape(df, precision=precision)
     geom_paths = _wkb_paths(shaped.schema)
-    for row in shaped.toLocalIterator():
+    for row in shaped.toLocalIterator(prefetchPartitions=True):
         yield row_to_item(row.asDict(recursive=True), geom_paths)
 
 
