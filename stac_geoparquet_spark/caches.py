@@ -10,16 +10,18 @@ mechanism for that.  It decorates a builder ``build(spark, where,
 
 - **Key.** ``(abspath(source), source_stamp(source), *extra)``.  The
   source is what the intermediate is derived from: ``where``, or
-  ``<where>/<table>.parquet`` when the memo names a table.  A file's
+  ``table_path(where, table)`` when the memo names a table.  A file's
   stamp is its ``(mtime, size)``; a directory's covers every parquet
   file under it, found recursively (relative path, size and mtime of
   each), so an append, an overwrite, a deleted part file or one
   rewritten in place under its old name all change it.  A source
   regenerated mid-session therefore builds a fresh value instead of
   serving a stale one, the way every derived view of a Delta table is
-  keyed on one table version.  The absolute path makes a relative and
-  an absolute spelling of one data dir share an entry, and keeps two
-  dirs with the same basename apart.
+  keyed on one table version.  That build drops the entries of older
+  stamps for the same ``(source, *extra)``, unpersisting their
+  DataFrames, so a source rewritten N times keeps one entry.  The
+  absolute path makes a relative and an absolute spelling of one data
+  dir share an entry, and keeps two dirs with the same basename apart.
 - **Unstampable sources are never stored.**  A source the stamp cannot
   see — a URI of a scheme other than ``file``, or a path that cannot be
   read — is built on every call: with no stamp there is no way to tell
@@ -110,6 +112,24 @@ def source_stamp(src: str) -> str | None:
     return f"dir:{digest.hexdigest()}"
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """Path of the registry table ``name`` under ``sf_dir``: the one
+    spelling of ``<sf_dir>/<name>.parquet``."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _unpersist(value) -> None:
+    """Unpersist every DataFrame in a stored value (one, or a tuple)."""
+    from pyspark.sql import DataFrame
+
+    for v in value if isinstance(value, tuple) else (value,):
+        if isinstance(v, DataFrame):
+            try:
+                v.unpersist()
+            except Exception:  # session already stopped
+                pass
+
+
 def register_cache(name: str, store: dict) -> dict:
     """Register a session-memo dict under a stable name and return it."""
     if name in _REGISTRY and _REGISTRY[name] is not store:
@@ -121,7 +141,7 @@ def register_cache(name: str, store: dict) -> dict:
 def session_memo(name: str, table: str | None = None):
     """Memoize ``build(spark, where, *extra)`` in the store ``name``.
 
-    The source file is ``<where>/<table>.parquet`` when ``table`` is
+    The source file is ``table_path(where, table)`` when ``table`` is
     given, else the path ``where`` itself; ``extra`` arguments join the
     key.  See the module docstring for the contract."""
     store = register_cache(name, {})
@@ -129,14 +149,21 @@ def session_memo(name: str, table: str | None = None):
     def decorate(build):
         @functools.wraps(build)
         def memoized(spark, where: str, *extra):
-            src = where if table is None else os.path.join(where, f"{table}.parquet")
+            src = where if table is None else table_path(where, table)
             stamp = source_stamp(src)
             if stamp is None:  # unstampable: never stored
                 return build(spark, where, *extra)
-            key = (_local_path(src), stamp, *extra)
+            path = _local_path(src)
+            key = (path, stamp, *extra)
             hit = store.get(key, _ABSENT)
             if hit is not _ABSENT and hit[0] is spark:
                 return hit[1]
+            superseded = [
+                k for k in store
+                if k[0] == path and k[1] != stamp and k[2:] == key[2:]
+            ]
+            for old in superseded:
+                _unpersist(store.pop(old)[1])
             value = build(spark, where, *extra)
             store[key] = (spark, value)
             return value
@@ -162,19 +189,11 @@ def clear_session_caches(spark=None) -> dict[str, int]:
     (drops EVERY cached plan in the session — fine for bench/test
     sessions, where the registry owns all caching).
     """
-    from pyspark.sql import DataFrame
-
     dropped: dict[str, int] = {}
     for name, store in _REGISTRY.items():
         dropped[name] = len(store)
         for _session, value in store.values():
-            parts = value if isinstance(value, tuple) else (value,)
-            for v in parts:
-                if isinstance(v, DataFrame):
-                    try:
-                        v.unpersist()
-                    except Exception:  # session already stopped
-                        pass
+            _unpersist(value)
         store.clear()
     if spark is not None:
         try:

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from stac_geoparquet_spark.caches import table_path
+
 # payload tuples: COLUMN ORDER IS THE CONTRACT (winner = min tuple)
 DOC_PAYLOAD = ("text", "lang", "source", "n_chars")
 EVENT_PAYLOAD = ("ts", "user_id", "event_type", "value", "props")
@@ -75,31 +77,19 @@ def _canon_layout(
     scratch-stamp + atomic-publish protocol of the IVF layout and the
     gram index, including the format-version key so upgraded build
     code never serves a stale pre-upgrade copy."""
-    import os
-
     from stac_geoparquet_spark.operators._io import (
         layout_scratch_path,
         layout_write_partitions,
         materialize_layout,
         read_spread,
+        read_table,
     )
 
-    src = os.path.join(sf_dir, f"{table}.parquet")
+    src = table_path(sf_dir, table)
     path = layout_scratch_path(src, f"sgs_canon_{table}")
 
-    def _read(p: str):
-        if table == "events":
-            # events.parquet carries TIMESTAMP(NANOS); read_events is
-            # the one place that truncation contract lives
-            from stac_geoparquet_spark.operators.relational import (
-                read_events,
-            )
-
-            return read_events(spark, p)
-        return spark.read.parquet(p)
-
     def build(build_dir: str) -> None:
-        out = canonical_rows(_read(src), id_col, payload)
+        out = canonical_rows(read_table(spark, sf_dir, table), id_col, payload)
         # toy-scale sources come out of the id-window as ONE
         # advisory-coalesced partition -> one file -> one forever-
         # single scan task (the openCostInBytes floor).  Split the
@@ -121,8 +111,12 @@ def _canon_layout(
     # is a round-robin exchange of the text column that costs more
     # than the extra parallelism buys (bm25_ndcg solo 1.30 -> 1.02 s
     # without it; the embeddings consumers use the same target=8 for
-    # the same fatter-blocks reason), making spread=True a no-op
-    # unless the layout predates the multi-file build.
+    # the same fatter-blocks reason).  spread=True still repartitions
+    # below 8 cores: Spark packs files into splits of
+    # max(openCostInBytes, total bytes / cores), so the 8 small files
+    # scan as 4 splits at local[4] (8 at local[8]), fewer than the
+    # target — the RoundRobinPartitioning(8) exchange that the local[4]
+    # test session records in plans/shapes.json.
     from stac_geoparquet_spark.operators._io import scan_parquet
 
     return (
@@ -137,7 +131,9 @@ def docs_canon(
 ) -> DataFrame:
     # spread default flipped in the r10 optimization round: the
     # round-robin exchange of the text column costs more at toy scale
-    # than the per-core work it parallelizes (see read_documents), and
+    # than the per-core work it parallelizes (see _io.read_table).
+    # spread=True repartitions only where the layout scans as fewer
+    # than 8 splits (below 8 cores at toy scale, see _canon_layout);
     # at real scale the layout scans as many splits either way.
     return _canon_layout(
         spark, sf_dir, "documents", "doc_id", DOC_PAYLOAD, spread=spread

@@ -5,8 +5,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.caches import session_memo, source_stamp
+from stac_geoparquet_spark.caches import session_memo, source_stamp, table_path
 
 
 @session_memo("io.scans")
@@ -89,16 +90,35 @@ def fenced(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
-def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r10 session 2: plain scan, no toy-file spread.  Interleaved A/B
-    # at sf0.1 showed the round-robin exchange of the text column cost
-    # more than every consumer's per-core work gains: tfidf 1.11 ->
-    # 0.97, a synthetic 200-ln/row in-row load 1.06 -> 0.32, and the
-    # relational family (which always scanned un-spread via _t) sits
-    # at the bench floor.  At scale both paths are the scan's natural
-    # split count; per-op opt-in via read_spread stays available for
-    # any genuinely compute-bound toy-scale consumer.
-    return scan_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Registry table ``name`` under ``sf_dir``: the one reader of a
+    data dir's tables, a plain memoized scan.
+
+    No toy-file spread (r10): interleaved A/B at sf0.1 showed the
+    round-robin exchange of the documents text column cost more than
+    every consumer's per-core work gains (tfidf 1.11 -> 0.97, a
+    synthetic 200-ln/row in-row load 1.06 -> 0.32), and the relational
+    family, which never spread, sits at the bench floor.  At scale a
+    scan has its natural split count either way; ``read_spread`` stays
+    the opt-in for a compute-bound toy-scale consumer.
+
+    ``events`` may carry TIMESTAMP(NANOS), which Spark's parquet scan
+    rejects outright (it has no nanosecond type).  It is read as a raw
+    long (``spark.sql.legacy.parquet.nanosAsLong``, set here because a
+    caller's session may not have it) and truncated to microseconds —
+    exactly what DuckDB does loading the same file into its
+    microsecond TIMESTAMP."""
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = scan_parquet(spark, table_path(sf_dir, name))
+    if name == "events" and df.schema["ts"].dataType.simpleString() == "bigint":
+        # integer `div`, NOT float division: ns epochs (~2^60) exceed a
+        # double's 53-bit mantissa, so floor(ts/1000.0) is off by ±1us
+        df = df.withColumn(
+            "ts",
+            F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
+        )
+    return df
 
 
 # Bumped whenever the CONTENT a layout build writes changes (e.g. the

@@ -28,17 +28,11 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stac_geoparquet_spark.operators._exprs import const_cols
-from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
-
-
-def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _scan_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
+from stac_geoparquet_spark.operators._io import read_table
 
 
 # --------------------------------------------------------------------------
@@ -57,7 +51,7 @@ def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def orders_benford_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     per = (
-        _orders(spark, sf_dir)
+        read_table(spark, sf_dir, "orders")
         .select(cents.alias("cents"))
         .where(F.col("cents").isNotNull() & (F.col("cents") > 0))
         .select(
@@ -397,7 +391,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stac_geoparquet_spark.operators.similarity import _valid_vec
 
     emb = (
-        _scan_parquet(spark, os.path.join(sf_dir, "embeddings.parquet"))
+        read_table(spark, sf_dir, "embeddings")
         .where(_valid_vec() & F.col("label").isNotNull())
         .select("vec_id", "embedding", "label")
     )
@@ -695,9 +689,7 @@ FROM j GROUP BY hamming
 # both engines.
 # --------------------------------------------------------------------------
 def supplier_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    li = _scan_parquet(spark, _os.path.join(sf_dir, "lineitem.parquet")).where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         F.col("l_suppkey").isNotNull()
     )
     return (
@@ -883,10 +875,8 @@ BOT_MIN_EVENTS = 20
 
 
 def user_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators.relational import read_events
-
     ev = (
-        read_events(spark, os.path.join(sf_dir, "events.parquet"))
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
         .select(
             "user_id",

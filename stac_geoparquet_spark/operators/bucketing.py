@@ -35,7 +35,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.operators.relational import _dsum, _t
+from stac_geoparquet_spark.caches import table_path
+from stac_geoparquet_spark.operators._io import read_table
+from stac_geoparquet_spark.operators.relational import _dsum
 
 N_BUCKETS = 8
 
@@ -52,12 +54,12 @@ def _bucketed_table(
     )
 
     path = layout_scratch_path(
-        os.path.join(sf_dir, f"{table}.parquet"), f"sgs_{table}_b{N_BUCKETS}"
+        table_path(sf_dir, table), f"sgs_{table}_b{N_BUCKETS}"
     )
     name = os.path.basename(path)
     if spark.catalog.tableExists(name):
         return name
-    df = _t(spark, sf_dir, table).select(*cols)
+    df = read_table(spark, sf_dir, table).select(*cols)
 
     def build(build_dir: str) -> None:
         # Spark writes bucketed files only through a catalog table (the

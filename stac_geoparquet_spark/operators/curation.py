@@ -30,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
+from stac_geoparquet_spark.operators._io import read_spread, read_table
 
-from stac_geoparquet_spark.caches import session_memo
+from stac_geoparquet_spark.caches import session_memo, table_path
 
 from stac_geoparquet_spark.operators._canon import (
     DOCS_CANON_SQL as _DOCS_CANON_SQL,
@@ -50,21 +50,6 @@ from stac_geoparquet_spark.operators.text import (
     bpe_roundtrip_ctes,
     bpe_token_ctes,
 )
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators._io import read_documents
-
-    return read_documents(spark, sf_dir)
-
-
-def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # toy-scale spread kept for the gram-heavy ops (see pipeline.py)
-    import os
-
-    from stac_geoparquet_spark.operators._io import read_spread
-
-    return read_spread(spark, os.path.join(sf_dir, "documents.parquet"))
 
 
 # --------------------------------------------------------------------------
@@ -86,7 +71,7 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine drift is float accumulation ~1e-12 — nine orders under the
     6-decimal rounding.
     """
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     head = (
         docs.select(F.explode(_words(F.col("text"))).alias("word"))
         .groupBy("word")
@@ -156,7 +141,7 @@ def cross_lang_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang_grams = (
         # r10: gram-heavy — keep the toy-scale spread (read_spread)
         # while the light per-row ops read the bare scan
-        _docs_spread(spark, sf_dir)
+        read_spread(spark, table_path(sf_dir, "documents"))
         .select(
             "lang",
             # r10: in-row array_distinct BEFORE the explode — in-doc
@@ -242,7 +227,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     and call them duplicates while the oracle's join drops them — a
     latent divergence found by NULL-injection differential testing).
     """
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = read_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     max_pos = F.greatest(F.length("text") - F.lit(SPAN_K - 1), F.lit(1))
     pos = F.explode(
         F.sequence(F.lit(1), max_pos, F.lit(SPAN_STRIDE))
@@ -378,7 +363,7 @@ def fingerprint_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per doc: the winnowing fingerprint-set size and its min/max
     hash (order-insensitive summary of the selected set; two docs
     sharing text regions share fingerprints by construction)."""
-    fps = winnow_fingerprint_sets(_docs(spark, sf_dir))
+    fps = winnow_fingerprint_sets(read_table(spark, sf_dir, "documents"))
     return fps.selectExpr(
         "doc_id",
         "CAST(size(fps) AS BIGINT) AS n_selected",
@@ -466,7 +451,7 @@ def _bpe_topk_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bpe_merge_candidates, tokenize_bpe_encode, pack_sequences)."""
     from stac_geoparquet_spark.operators._io import fenced
 
-    return fenced(_bpe_topk(_word_freq(_docs(spark, sf_dir))))
+    return fenced(_bpe_topk(_word_freq(read_table(spark, sf_dir, "documents"))))
 
 
 def bpe_merges_vocab_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -552,12 +537,10 @@ def _ed_name_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + freq + both prefix self-join sides + the two name-attach
     joins re-planned the part scan + distinct aggregate ~6x each per
     query; guide §2.4)."""
-    import os
-
     from stac_geoparquet_spark.operators._io import fenced
 
     return fenced(
-        _scan_parquet(spark, os.path.join(sf_dir, "part.parquet"))
+        read_table(spark, sf_dir, "part")
         .where(
             (F.length("p_name") >= ED_MIN_LEN)
             & F.col("p_name").rlike("^[\\x00-\\x7f]*$")
@@ -958,7 +941,7 @@ GROUP BY doc_id
 # --------------------------------------------------------------------------
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
-        _docs(spark, sf_dir)
+        read_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select("doc_id", "text")
     )
@@ -1120,7 +1103,7 @@ _BPE_FOLD = bpe_fold_expr("word")
 
 
 def tokenize_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     wf_src = (
         docs.where(F.col("source").isNotNull())
         .select("source", F.explode(_words(F.col("text"))).alias("word"))
@@ -1223,7 +1206,7 @@ _BPE_RT_FOLD = f"""aggregate(
 
 
 def tokenize_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     wf_src = (
         docs.where(F.col("source").isNotNull())
         .select("source", F.explode(_words(F.col("text"))).alias("word"))
@@ -1370,7 +1353,7 @@ def _uni_vocab_map_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stac_geoparquet_spark.operators._io import fenced
 
     wf = (
-        _docs(spark, sf_dir)
+        read_table(spark, sf_dir, "documents")
         .select(F.explode(_words(F.col("text"))).alias("word"))
         .where(
             (F.col("word") != "")
@@ -1415,7 +1398,7 @@ _UNI_FOLD = f"""aggregate(
 
 
 def tokenize_unigram_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     wf_src = (
         docs.where(F.col("source").isNotNull())
         .select("source", F.explode(_words(F.col("text"))).alias("word"))
@@ -1644,8 +1627,6 @@ _FS_U = "((CAST(au AS DOUBLE) + 0.5) / (CAST(nu AS DOUBLE) + 1.0))"
 
 
 def er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     p = _ed_name_domain(spark, sf_dir)
     cand = _ed_candidate_pairs(p)
     named = cand.join(
@@ -1663,7 +1644,7 @@ def er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "kb",
         (F.levenshtein("sa", "sb") <= ED_TAU).alias("is_match"),
     )
-    attrs = _scan_parquet(spark, os.path.join(sf_dir, "part.parquet")).select(
+    attrs = read_table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_brand",
         "p_type",
@@ -1837,7 +1818,7 @@ HEAPS_CHECKPOINTS = 10
 
 
 def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(_words(F.col("text"))).alias("term")
     )

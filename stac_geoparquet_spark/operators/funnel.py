@@ -15,19 +15,12 @@ k=3 stages in one pass), no window over the raw event log.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+from stac_geoparquet_spark.operators._io import read_table
 
 FUNNEL_STAGES = ("view", "click", "purchase")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    return read_events(spark, os.path.join(sf_dir, "events.parquet"))
 
 
 def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,7 +40,7 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     earliest-completion funnel definition and needs no per-stage
     self-join.
     """
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     per_user = (
         ev.where(F.col("event_type").isin(*FUNNEL_STAGES))
         .groupBy("user_id")
@@ -130,7 +123,7 @@ def retention_weekly_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     them on user_id (hashpartitioning(user_id, week) does not satisfy
     a user_id-only window) and the cohort rollup re-keys the survivors
     once more. Three exchanges total, one fact-sized."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     weekly = (
         ev.select(
             "user_id",
@@ -204,7 +197,7 @@ def user_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     the round(,6) output quantum (the accepted convention).  The
     everyone-dies edge (d = n at the tail) is an exact-zero survival
     on both engines via the flag column, never ln(0)."""
-    ev = _events(spark, sf_dir).where(
+    ev = read_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     per_user = ev.groupBy("user_id").agg(
@@ -367,7 +360,7 @@ PURCHASE_WINDOW = "24 hours"  # purchase within 24h of that click
 
 
 def funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).where(
+    ev = read_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     v = (
@@ -497,7 +490,7 @@ ORACLE["funnel_time_bounded"] = FUNNEL_TIME_BOUNDED_SQL
 # per populated arm).
 # --------------------------------------------------------------------------
 def funnel_by_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir).where(
+    ev = read_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     v = (

@@ -28,12 +28,10 @@ Two surfaces:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
+from stac_geoparquet_spark.operators._io import read_table
 
 ZBITS = 16  # bits per dimension after quantization
 CELL_LEVEL = 3  # quadtree level for the rollup: 4^3 = 64 cells
@@ -83,7 +81,7 @@ def layout_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-curve over (l_partkey, l_suppkey) — the tightness evidence: every
     cell bounds BOTH dimensions, which is exactly what makes row-group
     stats selective after a z-ordered write."""
-    li = _scan_parquet(spark, os.path.join(sf_dir, "lineitem.parquet")).select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey"
     )
     m = li.agg(

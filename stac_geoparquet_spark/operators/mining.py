@@ -24,32 +24,16 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
+from stac_geoparquet_spark.operators._io import read_table
 
 from stac_geoparquet_spark.caches import session_memo
 
 
 MIN_SUPPORT = 2  # basket pairs: min co-occurrence count
 PARETO_CUTS = ((0.99, "top_1pct"), (0.95, "top_5pct"), (0.90, "top_10pct"))
-
-
-def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _scan_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
-
-
-def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _scan_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    return read_events(spark, os.path.join(sf_dir, "events.parquet"))
 
 
 # --------------------------------------------------------------------------
@@ -69,7 +53,7 @@ def _basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark's distinct()+count while DuckDB's count(DISTINCT) drops
     # it (the KMV NULL-key lesson) — and a NULL key can't join anyway
     return (
-        _lineitem(spark, sf_dir)
+        read_table(spark, sf_dir, "lineitem")
         .where(
             F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
         )
@@ -190,7 +174,7 @@ def customer_interpurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB last, so a NULL-dated order would pick different lag
     # neighbors per engine (the moving_avg NULL-ordering class)
     o = (
-        _orders(spark, sf_dir)
+        read_table(spark, sf_dir, "orders")
         .select(
             "o_custkey",
             F.to_date("o_orderdate").alias("d"),
@@ -254,7 +238,7 @@ def events_type_cooccurrence_pmi(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     ut = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
         .select("user_id", "event_type")
         .distinct()
@@ -346,7 +330,7 @@ CROSS JOIN t
 # --------------------------------------------------------------------------
 def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     act = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
         .select("user_id", F.to_date("ts").alias("day"))
         .distinct()
@@ -411,7 +395,7 @@ FROM dau JOIN wau ON wau.wday = dau.day
 # --------------------------------------------------------------------------
 def orders_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
-        _orders(spark, sf_dir)
+        read_table(spark, sf_dir, "orders")
         .select(
             "o_custkey",
             F.round(F.col("o_totalprice") * 100).cast("bigint").alias(

@@ -29,7 +29,9 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stac_geoparquet_spark.caches import table_path
 from stac_geoparquet_spark.operators._exprs import const_cols
+from stac_geoparquet_spark.operators._io import read_spread, read_table
 
 from stac_geoparquet_spark.operators._canon import (
     DOCS_CANON_SQL as _DOCS_CANON_SQL,
@@ -58,28 +60,6 @@ def _docs_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stac_geoparquet_spark.operators._canon import docs_canon
 
     return docs_canon(spark, sf_dir)
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread the per-row expression work only when the scan yields
-    # fewer splits than cores (single-small-file fixture); no-op shuffle
-    # at real scale
-    from stac_geoparquet_spark.operators._io import read_documents
-
-    return read_documents(spark, sf_dir)
-
-
-def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r10 session 2: explicit toy-scale spread for the GRAM-HEAVY ops
-    # below (5-gram construction / per-doc gram rollups): their
-    # single-split explode stage is genuinely compute-bound at test
-    # scale, so these keep the round-robin spread the light per-row
-    # ops dropped (read_documents).  Still a no-op at real scale.
-    import os
-
-    from stac_geoparquet_spark.operators._io import read_spread
-
-    return read_spread(spark, os.path.join(sf_dir, "documents.parquet"))
 
 
 def _docs_canon_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,7 +132,11 @@ def decontaminate_against_holdout(
     """
     from pyspark.sql import Window
 
-    docs = _docs_spread(spark, sf_dir).select(
+    # r10: the GRAM-HEAVY ops (5-gram construction, per-doc gram
+    # rollups) keep the toy-scale spread the light per-row ops dropped:
+    # their single-split explode stage is compute-bound at test scale.
+    # Still a no-op at real scale.
+    docs = read_spread(spark, table_path(sf_dir, "documents")).select(
         "doc_id", _text_word_ngrams(NGRAM_N).alias("grams")
     )
     labeled = docs.withColumn("split", split_pct())
@@ -230,7 +214,7 @@ def gram_index_path(sf_dir: str) -> str:
     from stac_geoparquet_spark.operators._io import layout_scratch_path
 
     return layout_scratch_path(
-        os.path.join(sf_dir, "documents.parquet"), "sgs_gram_index"
+        table_path(sf_dir, "documents"), "sgs_gram_index"
     )
 
 
@@ -625,7 +609,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     content hash.  Single-pass scan, no shuffle; chunk count per doc is
     ceil(max(len-overlap, 1) / stride) so a short doc still yields one
     chunk."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     overlap = CHUNK_LEN - CHUNK_STRIDE
     n_chunks = F.ceil(
         F.greatest(F.length("text") - overlap, F.lit(1)) / F.lit(float(CHUNK_STRIDE))
@@ -689,7 +673,7 @@ DSIR_K = 100  # docs selected by importance resampling
 
 
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).withColumn("pct", split_pct())
+    docs = read_table(spark, sf_dir, "documents").withColumn("pct", split_pct())
     words = docs.select(
         "doc_id",
         (F.col("pct") >= TRAIN_PCT).alias("is_holdout"),
@@ -822,7 +806,8 @@ def select_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stac_geoparquet_spark.operators.text import quality_score_expr
 
     per_doc = (
-        _docs_spread(spark, sf_dir)
+        # gram-heavy: toy-scale spread (see decontaminate_against_holdout)
+        read_spread(spark, table_path(sf_dir, "documents"))
         # contentless docs are excluded EXPLICITLY: least() skips NULL
         # operands, so a NULL-text doc would otherwise score 0.7 (the
         # capped-term defaults) and float to the top of the greedy
@@ -942,7 +927,7 @@ def _budget_oracle_sql() -> str:
 # aggregation applies; no joins, no windows.
 # --------------------------------------------------------------------------
 def text_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    grams = _docs(spark, sf_dir).select(
+    grams = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.explode(_text_word_ngrams(2)).alias("g"),
     )
@@ -1040,7 +1025,7 @@ def rebalance_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash threshold makes the sample stable under reruns and backfills:
     a doc's keep/drop never changes.
     """
-    docs = _docs(spark, sf_dir).select("doc_id", "lang")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "lang")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_before"))
     min_n = counts.agg(F.min("n_before").alias("min_n"))
     thresholds = counts.join(F.broadcast(min_n)).select(
@@ -1092,7 +1077,7 @@ def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget.  One aggregation; the corpus totals reach every row via a
     broadcast 1-row aggregate, never a driver round-trip."""
     epoch_budget = 10_000
-    docs = _docs(spark, sf_dir).select("source")
+    docs = read_table(spark, sf_dir, "documents").select("source")
     counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     totals = counts.agg(
         F.sum("n_docs").alias("n_total"),
@@ -1265,7 +1250,7 @@ def cap_docs_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     per_doc = (
         # r10: regex-heavy score evaluated on BOTH branches — keep the
-        # toy-scale spread (see _docs_spread)
+        # toy-scale spread (see decontaminate_against_holdout)
         _docs_canon_spread(spark, sf_dir)
         .where(
             F.col("text").isNotNull()
@@ -1364,7 +1349,7 @@ U_DENOM = 2**32 + 1  # (hash + 1) / U_DENOM keeps u strictly in (0, 1)
 
 
 def sample_weighted_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     h = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("bigint")
@@ -1414,7 +1399,7 @@ MIXTURE_ALPHA = 0.7
 
 
 def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("source")
+    docs = read_table(spark, sf_dir, "documents").select("source")
     counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     total = counts.agg(F.sum("n_docs").alias("n_total"))
     shared = counts.join(F.broadcast(total)).withColumn(
@@ -1471,7 +1456,7 @@ BUDGET_FRAC = 0.5  # token budget as a fraction of the corpus
 
 def mixture_epoch_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = (
-        _docs(spark, sf_dir)
+        read_table(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(
             F.sum(
@@ -1560,7 +1545,7 @@ FROM shared, z
 def corpus_gini_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    docs = _docs(spark, sf_dir).where(F.col("source").isNotNull())
+    docs = read_table(spark, sf_dir, "documents").where(F.col("source").isNotNull())
     per_src = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.coalesce(

@@ -23,14 +23,12 @@ so the whole report is exactly oracle-gated.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stac_geoparquet_spark.operators._exprs import const_cols
 
-from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
+from stac_geoparquet_spark.operators._io import read_table
 
 
 def _check_row(name: str, failed: DataFrame, total: DataFrame) -> DataFrame:
@@ -98,9 +96,9 @@ def _dq_lineitem_scan_aggs() -> tuple:
 
 def dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(check, failed, total) across the star schema's core contracts."""
-    orders = _scan_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
-    lineitem = _scan_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
-    customer = _scan_parquet(spark, os.path.join(sf_dir, "customer.parquet"))
+    orders = read_table(spark, sf_dir, "orders")
+    lineitem = read_table(spark, sf_dir, "lineitem")
+    customer = read_table(spark, sf_dir, "customer")
 
     n_orders = orders.agg(F.count(F.lit(1)).alias("total"))
     n_li = lineitem.agg(F.count(F.lit(1)).alias("total"))
@@ -292,17 +290,13 @@ def dq_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     NaN event values.
     `failed > 0` on any row is the promote/abort gate a pipeline runs
     before the operators whose contracts these are."""
-    docs = _scan_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
-    emb = _scan_parquet(spark, os.path.join(sf_dir, "embeddings.parquet"))
+    docs = read_table(spark, sf_dir, "documents")
+    emb = read_table(spark, sf_dir, "embeddings")
 
     d_aggs, e_aggs, ev_aggs = _dq_corpus_aggs()
     d = docs.agg(*d_aggs)
     e = emb.agg(*e_aggs)
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    ev = read_events(spark, os.path.join(sf_dir, "events.parquet")).agg(
-        *ev_aggs
-    )
+    ev = read_table(spark, sf_dir, "events").agg(*ev_aggs)
     drows = d.selectExpr(
         "stack(4, 'doc_null_text', null_text, 'doc_dup_id', dup_doc_id,"
         " 'doc_lang_domain', lang_domain, 'doc_n_chars_drift',"
@@ -389,9 +383,7 @@ K_ANON_VALUE_BUCKET = 50.0
 
 
 def events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    ev = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    ev = read_table(spark, sf_dir, "events")
     g = ev.select(
         F.col("event_type"),
         F.hour("ts").cast("bigint").alias("hour_of_day"),
@@ -434,9 +426,7 @@ L_DIVERSITY_L = 3
 
 
 def events_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    ev = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    ev = read_table(spark, sf_dir, "events")
     g = ev.select(
         F.hour("ts").cast("bigint").alias("hour_of_day"),
         F.floor(F.col("value") / K_ANON_VALUE_BUCKET)
@@ -498,8 +488,6 @@ MEANAD_SCALE = 1.253314
 def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from stac_geoparquet_spark.operators.relational import _t
-
     # event_type IS NOT NULL: the oracle's med/mad attach via
     # JOIN ... USING (event_type), which drops the NULL-type group
     # (NULL never equi-matches).  The r11 window rewrite below keeps
@@ -508,7 +496,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the NULL-injection differential gate: spark=6 vs duckdb=5 rows;
     # the driver SFs carry no NULL event_type, so the sf gates missed
     # it).
-    ev = _t(spark, sf_dir, "events").where(
+    ev = read_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull() & F.col("event_type").isNotNull()
     )
     hourly = (

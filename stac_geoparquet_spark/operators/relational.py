@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.session import load_tables
+from stac_geoparquet_spark.operators._io import read_table
 
 
 def _dsum(col, scale: int = 2):
@@ -53,47 +53,13 @@ def _davg(col, scale: int = 4):
     )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import os
-
-    from stac_geoparquet_spark.operators._io import scan_parquet
-
-    if name == "events":
-        return read_events(spark, os.path.join(sf_dir, "events.parquet"))
-    return scan_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def read_events(spark: SparkSession, path: str) -> DataFrame:
-    """Read the events table, tolerating TIMESTAMP(NANOS) parquet.
-
-    Spark has no nanosecond timestamp type; the parquet scan rejects
-    INT64(TIMESTAMP(NANOS)) outright. We read nanos as raw long
-    (spark.sql.legacy.parquet.nanosAsLong) and truncate to microseconds
-    — exactly what DuckDB does when it loads the same file into its
-    microsecond TIMESTAMP.
-    """
-    from stac_geoparquet_spark.operators._io import scan_parquet
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = scan_parquet(spark, path)
-    ts_type = df.schema["ts"].dataType.simpleString()
-    if ts_type == "bigint":
-        # integer `div`, NOT float division: ns epochs (~2^60) exceed a
-        # double's 53-bit mantissa, so floor(ts/1000.0) is off by ±1us
-        df = df.withColumn(
-            "ts",
-            F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
-        )
-    return df
-
-
 # --------------------------------------------------------------------------
 # Q1 — pricing summary (TPC-H Q1 shape): scan + filter + wide agg.
 # Plan shape to verify: PushedFilters on l_shipdate, partial HashAggregate
 # before the exchange (map-side combine), single shuffle on 2 group cols.
 # --------------------------------------------------------------------------
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (
@@ -137,9 +103,9 @@ GROUP BY l_returnflag, l_linestatus
 # --------------------------------------------------------------------------
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit("1998-03-15").cast("timestamp")
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
+    cust = read_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    orders = read_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -175,15 +141,15 @@ LIMIT 10
 # lineitem->orders on orderkey dominates, then a tiny agg on n_name.
 # --------------------------------------------------------------------------
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders").filter(
+    region = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = read_table(spark, sf_dir, "nation")
+    cust = read_table(spark, sf_dir, "customer")
+    supp = read_table(spark, sf_dir, "supplier")
+    orders = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     dim = (
         supp.join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
@@ -229,7 +195,7 @@ GROUP BY n_name
 # --------------------------------------------------------------------------
 def agg_orders_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("order_count"),
@@ -258,9 +224,9 @@ GROUP BY o_orderpriority
 # fact shuffle beyond the final 5-row agg.
 # --------------------------------------------------------------------------
 def join_customers_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    cust = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region")
     return (
         cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
@@ -295,7 +261,7 @@ def window_topk_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFra
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .withColumn("rank_in_cust", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank_in_cust") <= 3)
         .select("o_custkey", "o_orderkey", "o_totalprice", "rank_in_cust")
@@ -319,8 +285,8 @@ WHERE rank_in_cust <= 3
 # Semi / anti joins — EXISTS / NOT EXISTS territory.
 # --------------------------------------------------------------------------
 def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp")
     )
     return cust.join(
@@ -339,8 +305,8 @@ WHERE EXISTS (
 
 
 def anti_join_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    big_orders = _t(spark, sf_dir, "orders").filter(
+    cust = read_table(spark, sf_dir, "customer")
+    big_orders = read_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") > 300000
     )
     return cust.join(
@@ -362,10 +328,10 @@ WHERE NOT EXISTS (
 # Set operation: nations that have both customers and suppliers.
 # --------------------------------------------------------------------------
 def intersect_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey")
     )
-    supp = _t(spark, sf_dir, "supplier").select(
+    supp = read_table(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").alias("nationkey")
     )
     return cust.intersect(supp)
@@ -382,9 +348,9 @@ SELECT s_nationkey AS nationkey FROM supplier
 # Rollup: customer counts at (region, nation), (region), () grains.
 # --------------------------------------------------------------------------
 def rollup_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    cust = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region")
     return (
         cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
@@ -413,7 +379,7 @@ HAVING count(*) > 0
 # Scalar subquery: parts priced above the global average.
 # --------------------------------------------------------------------------
 def parts_above_avg_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     avg_price = part.agg(F.avg("p_retailprice").alias("a"))
     return (
         part.crossJoin(F.broadcast(avg_price))
@@ -434,7 +400,7 @@ WHERE p_retailprice > (SELECT avg(p_retailprice) FROM part)
 # --------------------------------------------------------------------------
 def topk_orders_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(20)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -454,7 +420,7 @@ LIMIT 20
 # streaming windowed agg in stac_geoparquet_spark.streaming).
 # --------------------------------------------------------------------------
 def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return (
         ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
         .groupBy("hour", "event_type")
@@ -502,7 +468,7 @@ ANOMALY_MIN_PREV = 12
 def events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
+    ev = read_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     hourly = (
         ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
         .groupBy("event_type", "hour")
@@ -584,7 +550,7 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB's parser rejects them, while get_json_object is lenient —
     # the contract follows the spec (escaped '\\u000b' forms still
     # extract on both).
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     strict_props = F.when(
         F.col("props").rlike("[\\x00-\\x1f]"), F.lit(None)
     ).otherwise(F.col("props"))
@@ -652,7 +618,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise sort first in Spark's lag chain and last in DuckDB's —
     # the same NULL-ordering divergence class as the moving average,
     # found by NULL-injection differential testing)
-    ev = _t(spark, sf_dir, "events").where(
+    ev = read_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -703,7 +669,7 @@ def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     (house convention) while the window key is computed on a UTC cast;
     min/max aggregate the original column, so results are
     session-timezone independent."""
-    ev = _t(spark, sf_dir, "events").where(
+    ev = read_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     )
     return (
@@ -789,4 +755,4 @@ ORACLE = {
     "events_session_window": EVENTS_SESSION_WINDOW_SQL,
 }
 
-__all__ = ["QUERIES", "ORACLE", "load_tables"]
+__all__ = ["QUERIES", "ORACLE"]

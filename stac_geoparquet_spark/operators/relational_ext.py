@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stac_geoparquet_spark.operators.relational import _dsum, _t
+from stac_geoparquet_spark.operators._io import read_table
+from stac_geoparquet_spark.operators.relational import _dsum
 
 
 def _rev() -> F.Column:
@@ -36,7 +37,7 @@ def _rev() -> F.Column:
 # the parquet reader (check: PushedFilters on shipdate/discount/qty).
 # --------------------------------------------------------------------------
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -67,17 +68,17 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 # twice under different roles (supplier side / customer side).
 # --------------------------------------------------------------------------
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    n1 = _t(spark, sf_dir, "nation").select(
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    supp = read_table(spark, sf_dir, "supplier")
+    n1 = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("cust_nation")
     )
     return (
@@ -128,10 +129,10 @@ GROUP BY n1.n_name, n2.n_name, year(l_shipdate)
 # profit = discounted revenue for parts matching a name pattern).
 # --------------------------------------------------------------------------
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
+    supp = read_table(spark, sf_dir, "supplier")
+    nation = read_table(spark, sf_dir, "nation")
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .join(supp, li.l_suppkey == supp.s_suppkey)
@@ -160,13 +161,13 @@ GROUP BY n_name, year(l_shipdate)
 # Q10 — returned-item reporting: top 20 customers by lost revenue.
 # --------------------------------------------------------------------------
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    orders = _t(spark, sf_dir, "orders").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    orders = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    cust = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -206,8 +207,8 @@ LIMIT 20
 # Q13 — customer order-count distribution (left outer join + double agg).
 # --------------------------------------------------------------------------
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     per_cust = (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
@@ -233,11 +234,11 @@ GROUP BY c_count
 # Q14 — promotion effect: conditional aggregate ratio over one month.
 # --------------------------------------------------------------------------
 def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-06-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-07-01").cast("timestamp"))
     )
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     rev = _rev()
     return (
         li.join(part, li.l_partkey == part.p_partkey)
@@ -276,8 +277,8 @@ WHERE l_shipdate >= TIMESTAMP '1996-06-01'
 # so its join is left to AQE: broadcast at small sf, shuffle at scale.
 # --------------------------------------------------------------------------
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
     avg_qty = li.groupBy(F.col("l_partkey").alias("ap_partkey")).agg(
         (F.avg("l_quantity") * 0.2).alias("qty_threshold")
     )
@@ -314,9 +315,9 @@ WHERE p_brand = 'Brand#1'
 # to orders/customer.
 # --------------------------------------------------------------------------
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"))
@@ -356,8 +357,8 @@ LIMIT 100
 # Q19 — disjunctive predicate revenue (brand x quantity bands).
 # --------------------------------------------------------------------------
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     q = F.col("l_quantity")
     b = F.col("p_brand")
     return (
@@ -385,8 +386,8 @@ WHERE (p_brand = 'Brand#1' AND l_quantity BETWEEN 1 AND 15)
 # join, grouped by segment.
 # --------------------------------------------------------------------------
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
     )
     avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(
@@ -421,7 +422,7 @@ GROUP BY c_mktsegment
 # --------------------------------------------------------------------------
 def cube_lineitem_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
         .agg(
             F.count(F.lit(1)).alias("line_count"),
@@ -445,7 +446,7 @@ HAVING count(*) > 0
 # --------------------------------------------------------------------------
 def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     piv = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
         .agg(F.count(F.lit(1)))
@@ -475,7 +476,7 @@ GROUP BY o_orderpriority
 # --------------------------------------------------------------------------
 def percentile_prices_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
         .agg(
             F.round(F.expr("percentile(o_totalprice, 0.25)"), 4).alias("p25"),
@@ -508,7 +509,7 @@ def moving_avg_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (Spark sorts NULLs first, DuckDB last — found by NULL-injection
     # differential testing).
     daily = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .where(F.col("o_orderdate").isNotNull())
         .groupBy(F.to_date(F.col("o_orderdate")).alias("day"))
         .agg(_dsum(F.col("o_totalprice")).alias("day_revenue"))
@@ -540,7 +541,7 @@ FROM (
 # finished ('F') — EXCEPT (distinct semantics on both engines).
 # --------------------------------------------------------------------------
 def except_open_not_finished(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     open_c = orders.filter(F.col("o_orderstatus") == "O").select(
         F.col("o_custkey").alias("custkey")
     )
@@ -571,7 +572,7 @@ def asof_last_click_before_purchase(
     # an as-of lookup is undefined without a timestamp or user key;
     # exclude such rows on both engines (NULL ts sorts first in Spark's
     # frame and last in DuckDB's — the NULL-ordering divergence class)
-    ev = _t(spark, sf_dir, "events").where(
+    ev = read_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     )
     w = (
@@ -651,7 +652,7 @@ ORACLE = {
 # (HLL++ relativeSD default 5%; percentile_approx accuracy 10000).
 # --------------------------------------------------------------------------
 def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     agg = li.agg(
         F.countDistinct("l_partkey").alias("n_exact"),
         F.approx_count_distinct("l_partkey").alias("n_approx"),
@@ -682,7 +683,7 @@ def approx_percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 class.  p50 interpolates at g = 0.5 (exact binary, d = 2);
     # p95's position rounds in the double domain, so d = 20 recovery
     # absorbs the ~ulp lerp noise around the true 0.05-cent multiple.
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents")
     )
     agg = orders.agg(
@@ -721,7 +722,7 @@ ORACLE["approx_percentile_prices"] = APPROX_PCTL_SQL
 # Unpivot (stack) — wide metrics to long rows; the inverse of pivot.
 # --------------------------------------------------------------------------
 def unpivot_flag_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag").agg(
         F.round(F.sum("l_quantity"), 2).alias("qty"),
         _dsum(F.col("l_extendedprice")).alias("base_price"),
@@ -761,7 +762,7 @@ ORACLE["unpivot_flag_metrics"] = UNPIVOT_SQL
 # batch; the dimension never shuffles.
 # --------------------------------------------------------------------------
 def scd2_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dim = _t(spark, sf_dir, "customer").select(
+    dim = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     # deterministic update batch: every 10th customer moves to a new

@@ -31,7 +31,8 @@ from stac_geoparquet_spark.operators._canon import (
 )
 from pyspark.sql.window import Window
 
-from stac_geoparquet_spark.operators.relational import _dsum, _t
+from stac_geoparquet_spark.operators._io import read_table
+from stac_geoparquet_spark.operators.relational import _dsum
 
 
 # --------------------------------------------------------------------------
@@ -42,11 +43,11 @@ from stac_geoparquet_spark.operators.relational import _dsum, _t
 # (days from order date to ship date) instead.
 # --------------------------------------------------------------------------
 def q12_ship_delay_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
     )
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     delay = F.datediff(F.to_date("l_shipdate"), F.to_date("o_orderdate"))
     bucket = (
         F.when(delay <= 30, "0-30")
@@ -87,7 +88,7 @@ GROUP BY 1
 # flags disambiguate grain-null from data-null.
 # --------------------------------------------------------------------------
 def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.groupingSets(
@@ -214,7 +215,7 @@ def gapfill_hourly_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without the explicit filter Spark's NULL-hour row (which sorts
     # FIRST in the hour ordering) would seed the LOCF chain (found by
     # the round-4 NULL-ts/value event probe)
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = read_table(spark, sf_dir, "events").filter(
         (F.col("event_type") == "purchase") & F.col("ts").isNotNull()
     )
     hourly = ev.groupBy(
@@ -305,7 +306,7 @@ _DAY_US = 86_400_000_000
 
 
 def rolling_24h_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     us = F.expr(
         f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '{_EPOCH_ORIGIN}', ts)"
     )
@@ -352,7 +353,7 @@ N_BINS = 20
 
 
 def histogram_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     bounds = orders.agg(
         F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
     )
@@ -407,7 +408,7 @@ _DECAY_TAU_US = 7 * _DAY_US
 
 
 def events_decayed_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     us = F.expr(
         f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '{_EPOCH_ORIGIN}', ts)"
     )
@@ -462,7 +463,7 @@ GROUP BY user_id
 # quality_winsorize states for its round(,6)-in-[0,1] scores.
 # --------------------------------------------------------------------------
 def funnel_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias(
             "first_view"
@@ -549,7 +550,7 @@ FROM lat
 # bit-exact cross-engine; ties go to 'hi' (>=) on both engines.
 # --------------------------------------------------------------------------
 def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.max("ts").alias("last_ts"),
         F.count(F.lit(1)).alias("freq"),

@@ -27,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stac_geoparquet_spark.operators.relational import _dsum, _t
+from stac_geoparquet_spark.operators._io import read_table
+from stac_geoparquet_spark.operators.relational import _dsum
 
 
 def _rev() -> F.Column:
@@ -45,15 +46,15 @@ _REV_SQL = "l_extendedprice * (1 - l_discount)"
 # p_partkey, dimensions broadcast.
 # --------------------------------------------------------------------------
 def q2_best_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs_raw = _t(spark, sf_dir, "lineitem").select(
+    pairs_raw = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey"
     )
-    part = _t(spark, sf_dir, "part").filter(
+    part = read_table(spark, sf_dir, "part").filter(
         (F.col("p_type") == "PROMO") & (F.col("p_size") <= 10)
     )
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    supp = read_table(spark, sf_dir, "supplier")
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     eu_supp = (
         supp.join(
             F.broadcast(nation),
@@ -120,11 +121,11 @@ WHERE p_type = 'PROMO' AND p_size <= 10
 # non-equi condition; one orderkey shuffle, date filter pushed to scan.
 # --------------------------------------------------------------------------
 def q4_priority_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         orders.join(
             li,
@@ -157,17 +158,17 @@ GROUP BY o_orderpriority
 # aggregation pass; fact table shuffles once on the group key.
 # --------------------------------------------------------------------------
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation_c = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    nation_s = _t(spark, sf_dir, "nation").select(
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    nation_c = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    nation_s = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("sn_key"),
         F.col("n_name").alias("supp_nation"),
     )
-    supp = _t(spark, sf_dir, "supplier")
+    supp = read_table(spark, sf_dir, "supplier")
     joined = (
         li.join(part, li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
@@ -225,7 +226,7 @@ GROUP BY year(o_orderdate)
 def q11_important_supplier_value(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     # ONE scan of the fact table: the global total is the exact decimal
     # sum of the per-supplier partials (decimal addition is associative)
     # computed as an unpartitioned window over the ALREADY-AGGREGATED
@@ -270,13 +271,13 @@ HAVING CAST(round(sum(CAST({_REV_SQL} AS DECIMAL(18,6))), 2) AS DOUBLE) > (
 # the per-supplier aggregate is reused for both sides).
 # --------------------------------------------------------------------------
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
     rev = li.groupBy("l_suppkey").agg(_dsum(_rev()).alias("total_rev"))
     top = rev.agg(F.max("total_rev").alias("max_rev"))
-    supp = _t(spark, sf_dir, "supplier")
+    supp = read_table(spark, sf_dir, "supplier")
     return (
         rev.join(F.broadcast(top), rev.total_rev == F.col("max_rev"))
         .join(supp, rev.l_suppkey == supp.s_suppkey)
@@ -305,10 +306,10 @@ WHERE total_rev = (SELECT max(total_rev) FROM rev)
 # (NOT IN -> broadcast anti-join; the exclusion list is tiny).
 # --------------------------------------------------------------------------
 def q16_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "LARGE")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part").filter(F.col("p_type") == "LARGE")
     bad = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
@@ -339,19 +340,19 @@ GROUP BY p_brand, p_size
 # aggregate once on suppkey, then semi-join supplier against it.
 # --------------------------------------------------------------------------
 def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "MEDIUM")
+    part = read_table(spark, sf_dir, "part").filter(F.col("p_type") == "MEDIUM")
     heavy = (
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("l_suppkey")
         .agg(F.round(F.sum("l_quantity"), 2).alias("qty"))
         .filter(F.col("qty") > 300)
     )
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation").filter(
+    supp = read_table(spark, sf_dir, "supplier")
+    nation = read_table(spark, sf_dir, "nation").filter(
         F.col("n_name").isin("NATION_1", "NATION_2", "NATION_3")
     )
     return (
@@ -389,8 +390,8 @@ WHERE n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
 # shuffles once on orderkey.
 # --------------------------------------------------------------------------
 def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
     lo = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
         "l_orderkey",
         "l_suppkey",
@@ -427,7 +428,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     culprit = per_order.filter(
         (F.col("n_supp") > 1) & (F.col("n_late_supp") == 1)
     ).select("l_orderkey", F.col("late_supp").alias("l_suppkey"))
-    supp = _t(spark, sf_dir, "supplier")
+    supp = read_table(spark, sf_dir, "supplier")
     return (
         culprit.groupBy("l_suppkey")
         .agg(F.count(F.lit(1)).alias("numwait"))

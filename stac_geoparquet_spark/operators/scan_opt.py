@@ -16,11 +16,10 @@ semantics changes) and plan pins in tests/test_plans.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stac_geoparquet_spark.caches import table_path
 from stac_geoparquet_spark.operators.relational import _dsum
 
 
@@ -42,7 +41,7 @@ def agg_pushdown_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2 = spark.newSession()
     s2.conf.set("spark.sql.sources.useV1SourceList", "")
     s2.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    orders = s2.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    orders = s2.read.parquet(table_path(sf_dir, "orders"))
     return orders.agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.min("o_totalprice").alias("min_price"),
@@ -73,7 +72,7 @@ def build_orders_year_layout(spark: SparkSession, sf_dir: str) -> str:
         materialize_layout,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
+    src = table_path(sf_dir, "orders")
 
     def build(build_dir: str) -> None:
         (
@@ -171,8 +170,8 @@ def bloom_filter_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered orders side (`might_contain(...)` on the lineitem scan,
     pinned in tests/test_plans.py)."""
     s2 = bloom_session(spark)
-    li = s2.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    orders = s2.read.parquet(os.path.join(sf_dir, "orders.parquet")).where(
+    li = s2.read.parquet(table_path(sf_dir, "lineitem"))
+    orders = s2.read.parquet(table_path(sf_dir, "orders")).where(
         "o_orderpriority = '1-URGENT'"
     )
     return (

@@ -45,9 +45,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stac_geoparquet_spark.operators._exprs import const_cols
+from stac_geoparquet_spark.operators._io import read_table
 from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
 
-from stac_geoparquet_spark.caches import session_memo
+from stac_geoparquet_spark.caches import session_memo, table_path
 from pyspark.sql.window import Window
 
 
@@ -127,7 +128,7 @@ def _read_vec_range(sf_dir: str, lo: int | None, hi: int | None):
     if lo is not None:
         filters.append(("vec_id", ">=", lo))
     tbl = pq.read_table(
-        os.path.join(sf_dir, "embeddings.parquet"),
+        table_path(sf_dir, "embeddings"),
         columns=["vec_id", "embedding"],
         filters=filters or None,
     )
@@ -245,7 +246,7 @@ def _emb_blocks(
 
     df = (
         read_spread(
-            spark, os.path.join(sf_dir, "embeddings.parquet"), target=8
+            spark, table_path(sf_dir, "embeddings"), target=8
         )
         .where(_valid_vec())
         .select("vec_id", "embedding")
@@ -600,7 +601,7 @@ def ivf_layout_path(sf_dir: str) -> str:
     from stac_geoparquet_spark.operators._io import layout_scratch_path
 
     return layout_scratch_path(
-        os.path.join(sf_dir, "embeddings.parquet"), "sgs_ivf_layout"
+        table_path(sf_dir, "embeddings"), "sgs_ivf_layout"
     )
 
 
@@ -808,7 +809,7 @@ def _kmeans_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical vectors the Lloyd fit runs over — a cheap
     canonical-layout read rebuilt per call."""
     return (
-        _scan_parquet(spark, os.path.join(sf_dir, "embeddings.parquet"))
+        read_table(spark, sf_dir, "embeddings")
         .where(_valid_vec())
         # canonical-by-id (_canon.py): k-means is an index build — a
         # re-ingested duplicate id must not double-weight the means, so
@@ -1039,7 +1040,7 @@ FROM pp GROUP BY cluster
 # --------------------------------------------------------------------------
 def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
-        _scan_parquet(spark, os.path.join(sf_dir, "embeddings.parquet"))
+        read_table(spark, sf_dir, "embeddings")
         .where(_valid_vec())
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     )
@@ -1105,9 +1106,7 @@ def embedding_class_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     inherent to exact centroid distances; at 100 TB the exploded frame
     is what a pipeline would persist between the passes.
     """
-    emb = _scan_parquet(spark, 
-        os.path.join(sf_dir, "embeddings.parquet")
-    ).where(_valid_vec())
+    emb = read_table(spark, sf_dir, "embeddings").where(_valid_vec())
     x = emb.select(
         "vec_id",
         "label",
@@ -1733,7 +1732,7 @@ def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             " n_suspect bigint",
         )
     emb = (
-        _scan_parquet(spark, os.path.join(sf_dir, "embeddings.parquet"))
+        read_table(spark, sf_dir, "embeddings")
         .where(_valid_vec())
         .select(
             "vec_id",
@@ -1949,7 +1948,7 @@ def pca_power_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     if comp is None:
         return spark.createDataFrame([], out_schema)
     emb = (
-        _scan_parquet(spark, os.path.join(sf_dir, "embeddings.parquet"))
+        read_table(spark, sf_dir, "embeddings")
         .where(_valid_vec())
         .select(
             "vec_id",
@@ -2388,7 +2387,7 @@ def _load_query_labels(sf_dir: str) -> dict:
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(
-        os.path.join(sf_dir, "embeddings.parquet"),
+        table_path(sf_dir, "embeddings"),
         columns=["vec_id", "embedding", "label"],
         filters=[("vec_id", "<", N_QUERIES)],
     )
@@ -2480,7 +2479,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     blocks = (
         read_spread(
-            spark, os.path.join(sf_dir, "embeddings.parquet"), target=8
+            spark, table_path(sf_dir, "embeddings"), target=8
         )
         .where(_valid_vec())
         .select("vec_id", "embedding", "label")

@@ -24,13 +24,12 @@ the salt doing the work: 3 hot keys become 3*SALTS balanced keys.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
+from stac_geoparquet_spark.operators._io import read_table
 
 SALTS = 8
 
@@ -72,7 +71,7 @@ def salted_join(
 
 
 def skew_salted_flag_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _scan_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
+    li = read_table(spark, sf_dir, "lineitem")
     dim = (
         li.select("l_returnflag")
         .distinct()

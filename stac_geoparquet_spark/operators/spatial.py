@@ -26,12 +26,10 @@ quadratic cross-join oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
+from stac_geoparquet_spark.operators._io import read_table
 
 WORLD = 100_000  # integer coordinate space [0, WORLD)
 CELL = 1_000  # grid cell size -> 100 x 100 cells
@@ -69,14 +67,14 @@ def _grid_cells_expr(idiv: str) -> str:
 
 
 def _boxes_a(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _scan_parquet(spark, os.path.join(sf_dir, "customer.parquet"))
+    cust = read_table(spark, sf_dir, "customer")
     return cust.selectExpr(
         "c_custkey AS a_id", *_boxes_sql("c_custkey", _AX, _AY, 97, 89)
     )
 
 
 def _boxes_b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supp = _scan_parquet(spark, os.path.join(sf_dir, "supplier.parquet"))
+    supp = read_table(spark, sf_dir, "supplier")
     return supp.selectExpr(
         "s_suppkey AS b_id", *_boxes_sql("s_suppkey", _BX, _BY, 83, 79)
     )

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stac_geoparquet_spark.operators._exprs import const_cols
-from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
+from stac_geoparquet_spark.operators._io import read_table
 
 N_ITEMS = 500
 
@@ -34,10 +34,8 @@ def _synth_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic JSON-shape STAC items derived from `part`:
     geometry as a GeoJSON string (pre-T1 shape), bbox as a 4-list,
     nested properties."""
-    import os
-
     part = (
-        _scan_parquet(spark, os.path.join(sf_dir, "part.parquet"))
+        read_table(spark, sf_dir, "part")
         .orderBy("p_partkey")
         .limit(N_ITEMS)
     )
@@ -269,8 +267,6 @@ def cql2_orders_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CQL2 over a plain relational table (the translator is not
     STAC-specific): priority membership + price between + order-date
     interval + negated status equality."""
-    import os
-
     from stac_geoparquet_spark.stac.cql2 import cql2_filter
 
     expr = {
@@ -304,7 +300,7 @@ def cql2_orders_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]},
         ],
     }
-    orders = _scan_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
+    orders = read_table(spark, sf_dir, "orders")
     return cql2_filter(orders, expr).select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderstatus"
     )
@@ -328,8 +324,6 @@ def cql2_text_lineitem_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     this entry pins the end-to-end text->AST->Column->rows path against
     a plain-SQL oracle. Mixes NOT LIKE, BETWEEN, IN, arithmetic and a
     temporal function so every grammar production is exercised."""
-    import os
-
     from stac_geoparquet_spark.stac.cql2_text import cql2_text_filter
 
     text = (
@@ -340,7 +334,7 @@ def cql2_text_lineitem_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "T_DURING(l_shipdate, INTERVAL('1996-01-01T00:00:00Z',"
         " '1996-12-31T23:59:59Z'))"
     )
-    li = _scan_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
+    li = read_table(spark, sf_dir, "lineitem")
     out = cql2_text_filter(li, text)
     return out.select(
         "l_orderkey",

@@ -22,13 +22,11 @@ tasks, and the oracle all agree row-for-row.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stac_geoparquet_spark.operators._exprs import const_cols
-from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
+from stac_geoparquet_spark.operators._io import read_table
 
 SAMPLE_K = 500  # fixed-size sample
 
@@ -56,7 +54,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified Bernoulli sample of orders: keep a row
     iff its hash bucket falls under its stratum's rate. Pure scan-stage
     filter — zero shuffles, pushdown-friendly, retry-stable."""
-    orders = _scan_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
+    orders = read_table(spark, sf_dir, "orders")
     return orders.where(
         F.expr(f"{_bucket_sql('o_orderkey', 'smp')} < {_RATE_CASE}")
     ).select("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -77,7 +75,7 @@ def sample_fixed_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalable fixed-size-sample shape (never a global sort). The hash
     column rides along so the result set is well-defined (hash is
     unique per (orderkey, linenumber) in practice; K smallest values)."""
-    li = _scan_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
+    li = read_table(spark, sf_dir, "lineitem")
     h = (
         "CAST(conv(substring(md5(concat('rsv:', CAST(l_orderkey AS STRING),"
         " ':', CAST(l_linenumber AS STRING))), 1, 15), 16, 10) AS BIGINT)"
@@ -104,7 +102,7 @@ def stats_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second-moment profile of quantity vs price per return flag:
     Pearson correlation, sample covariance, sample stddevs, mean.
     One partial-aggregable groupBy (all moments are associative)."""
-    li = _scan_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -152,7 +150,7 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one global aggregate; here shuffled rows ~= distinct values.
     At 100 TB swap the exact pair compaction for approx_count_distinct
     when ±2% NDV is acceptable."""
-    li = _scan_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
+    li = read_table(spark, sf_dir, "lineitem")
     stack = ", ".join(f"'{c}', {c}" for c in _PROFILE_COLS)
     pairs = li.selectExpr(
         f"stack({len(_PROFILE_COLS)}, {stack}) AS (column_name, v)"
@@ -212,7 +210,7 @@ def outliers_iqr_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ by one ulp — enough to flip a row sitting exactly on a
     fence (the funnel-latency sf0.1 finding, applied to the
     comparison rather than the rounding)."""
-    orders = _scan_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
+    orders = read_table(spark, sf_dir, "orders")
     priced = orders.select(
         "o_orderkey",
         "o_orderpriority",
@@ -290,13 +288,7 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-take K minima) is what makes KMV maintainable in the
     streaming/rollup.py pattern; the kth-hash rides along as
     evidence."""
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    # read_events, not a raw parquet read: events.parquet carries
-    # TIMESTAMP(NANOS), which the plain scan rejects unless the legacy
-    # nanosAsLong conf is set — a raw read here would pass or fail
-    # depending on which operator ran first in the session.
-    ev = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    ev = read_table(spark, sf_dir, "events")
     h = (
         "CAST(conv(substring(md5(concat('kmv:', CAST(user_id AS STRING))),"
         " 1, 15), 16, 10) AS BIGINT)"
@@ -398,10 +390,9 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal when the word's minimum-row bucket has no collisions."""
     from pyspark.sql.window import Window
 
-    from stac_geoparquet_spark.operators._io import read_documents
     from stac_geoparquet_spark.operators.text import _words
 
-    docs = read_documents(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     words = docs.select(F.explode(_words(F.col("text"))).alias("word"))
     # ONE per-word count aggregate feeds both the sketch and the exact
     # top-K (identical subtree -> ReusedExchange): cell totals are
@@ -499,7 +490,7 @@ QUERIES = {
 def kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    docs = _scan_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+    docs = read_table(spark, sf_dir, "documents")
     h = (
         "CAST(conv(substring(md5(concat('kmvsrc:', text)),"
         " 1, 15), 16, 10) AS BIGINT)"
@@ -692,9 +683,7 @@ def _hll_present(state: DataFrame) -> DataFrame:
 
 
 def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    ev = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    ev = read_table(spark, sf_dir, "events")
     hashed = _hll_hashed(ev)
     exact = (
         hashed.groupBy("event_type", "uh")
@@ -719,9 +708,7 @@ def sketch_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintain-then-estimate == build-once EXACTLY — something the
     built-in datasketches rollup (streaming/rollup.py) cannot offer its
     oracle, which must exclude the opaque estimate column."""
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    ev = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    ev = read_table(spark, sf_dir, "events")
     state: DataFrame | None = None
     for part in (2, 0, 1):  # deliberately out of arrival order
         delta = _hll_state(
@@ -824,11 +811,9 @@ FROM folded
 # any merge order (the sketch_hll_distinct argument).
 # --------------------------------------------------------------------------
 def hll_event_type_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators.relational import read_events
-
     from stac_geoparquet_spark.operators._io import fenced
 
-    ev = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    ev = read_table(spark, sf_dir, "events")
     hashed = _hll_hashed(ev)
     # r10: the sketch state is consumed FOUR times below (singles,
     # the type list, and both sides of the pair-keyed union) — without
@@ -1139,8 +1124,8 @@ FROM sig a JOIN sig b ON a.source < b.source
 # everything partial-aggregates map-side.
 # --------------------------------------------------------------------------
 def ols_discount_response(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _scan_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
-    part = _scan_parquet(spark, os.path.join(sf_dir, "part.parquet"))
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     xy = (
         li.join(part, li.l_partkey == part.p_partkey)
         .where(
@@ -1291,9 +1276,7 @@ def quantiles_user_value_exact(
 ) -> DataFrame:
     from pyspark.sql import Window
 
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    ev = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    ev = read_table(spark, sf_dir, "events")
     per_user = (
         ev.where(F.col("user_id").isNotNull() & F.col("value").isNotNull())
         .select(
@@ -1499,9 +1482,7 @@ def user_cents_totals(ev: DataFrame) -> DataFrame:
 def approx_quantiles_histogram(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    ev = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    ev = read_table(spark, sf_dir, "events")
     return hist_quantiles_from_user_totals(spark, user_cents_totals(ev))
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stac_geoparquet_spark.operators._exprs import const_cols
+from stac_geoparquet_spark.operators._io import read_table
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for")
 
@@ -24,15 +25,6 @@ LANG_MARKERS = (
     ("fr", ("le", "les", "et", "est", "une")),
     ("zh", ("de5", "shi4", "le5", "zai4", "he2")),
 )
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread the per-row expression work only when the scan yields
-    # fewer splits than cores (single-small-file fixture); no-op shuffle
-    # at real scale
-    from stac_geoparquet_spark.operators._io import read_documents
-
-    return read_documents(spark, sf_dir)
 
 
 def jlower(col: Column) -> Column:
@@ -213,7 +205,7 @@ tok AS (SELECT word, t AS toks, mg AS merged, dec = word AS ok
 # (ceil(chars/4) per word, the common ~4-chars-per-token rule)
 # --------------------------------------------------------------------------
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     w = _words(F.col("text"))
     subword = F.aggregate(
         w,
@@ -283,7 +275,7 @@ QUALITY_SCORE_SQL = f"""round(least(len({_sql_words()}) / 100.0, 1.0) * 0.4
 
 
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     w = _words(F.col("text"))
     n_words = F.size(w).cast("double")
     stop = F.size(F.filter(w, lambda x: x.isin(*STOPWORDS))).cast("double")
@@ -384,7 +376,7 @@ def _detect_lang_sql(text_expr: str) -> str:
 
 
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     w = _words(F.col("text"))
     scored = docs.select("doc_id", "lang", w.alias("w"))
     for lang, markers in LANG_MARKERS:
@@ -427,7 +419,7 @@ FROM scored
 # prefix fingerprint (cheap rolling-hash-style partial signature)
 # --------------------------------------------------------------------------
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     norm = F.regexp_replace(jlower(F.trim(F.col("text"))), r"\s+", " ")
     return docs.select(
         "doc_id",
@@ -481,7 +473,7 @@ def split_pct() -> Column:
 
 
 def split_train_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     pct = split_pct()
     split = F.when(pct < TRAIN_PCT, "train").otherwise("holdout")
     return (
@@ -530,7 +522,7 @@ _JSD_TERM = (
 
 
 def split_unigram_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     words = docs.select(
         F.when(split_pct() < TRAIN_PCT, 1).otherwise(0).alias("is_train"),
         F.explode(_words(F.col("text"))).alias("word"),
@@ -626,7 +618,7 @@ TFIDF_TOP_K = 3
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     tf = (
         docs.select("doc_id", F.explode(_words(F.col("text"))).alias("word"))
         .groupBy("doc_id", "word")
@@ -699,7 +691,7 @@ VOCAB_TOP_K = 50
 def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     counts = (
         docs.select(F.explode(_words(F.col("text"))).alias("word"))
         .groupBy("word")
@@ -729,7 +721,7 @@ WHERE rk <= {VOCAB_TOP_K}
 # both engines (radix-2 libm), so bucket edges agree bit-for-bit.
 # --------------------------------------------------------------------------
 def doc_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     n_tok = F.size(_words(F.col("text"))).cast("bigint")
     return (
         docs.select(
@@ -770,7 +762,7 @@ GROUP BY 1
 # accumulated difference (~1e-13) is nine orders below the quantum.
 # --------------------------------------------------------------------------
 def text_unigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id", F.explode(_words(F.col("text"))).alias("word")
     )
@@ -837,7 +829,7 @@ VAL_PCT = 90  # [TRAIN_PCT, VAL_PCT) = val, [VAL_PCT, 100) = test
 
 
 def stratified_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     pct = split_pct()
     split = (
         F.when(pct < TRAIN_PCT, "train")
@@ -890,7 +882,7 @@ FROM g JOIN t ON g.lang IS NOT DISTINCT FROM t.lang
 # One keyed aggregate, map-side combined.
 # --------------------------------------------------------------------------
 def token_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = read_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     per = docs.select(
         "lang",
         F.length("text").cast("bigint").alias("chars"),
@@ -994,7 +986,7 @@ def _gopher_cols() -> dict[str, Column]:
 
 
 def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     cols = _gopher_cols()
     return docs.select(
         "doc_id", *[c.alias(n) for n, c in cols.items()]
@@ -1080,7 +1072,7 @@ def _clf_cols() -> dict[str, Column]:
 
 
 def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     cols = _clf_cols()
     return docs.select(
         "doc_id", *[c.alias(n) for n, c in cols.items()]
@@ -1116,7 +1108,7 @@ def quality_classifier_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Zero-token/NULL-text semantics mirror the untrained variant
     exactly (NULL words -> NULL raw on both engines)."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     w = _words(F.col("text"))
 
     def slot_of(x: Column) -> Column:
@@ -1246,12 +1238,8 @@ def text_nfc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # work they parallelized (solo noop 1.0 -> 0.37 s measured
     # interleaved).  At scale the spread was a no-op anyway; the scan
     # parallelism IS the split count on both paths.
-    import os as _os
-
-    from stac_geoparquet_spark.operators._io import scan_parquet
-
     docs = (
-        scan_parquet(spark, _os.path.join(sf_dir, "documents.parquet"))
+        read_table(spark, sf_dir, "documents")
         .select("lang", "text")
         .where(F.col("text").isNotNull())
     )
@@ -1329,7 +1317,7 @@ GROUP BY lang
 def source_unigram_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     by_st = (
         docs.select("source", F.explode(_words(F.col("text"))).alias("tok"))
         .groupBy("source", "tok")
@@ -1397,7 +1385,7 @@ FROM per_source
 # both axes are bounded label sets, so the output is a tiny matrix.
 # --------------------------------------------------------------------------
 def lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = read_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     return (
         docs.select("lang", _detect_lang(F.col("text")).alias("detected"))
         .groupBy("lang", "detected")
@@ -1440,7 +1428,7 @@ def quality_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact int or the bit-identical cut — no final rounding, because
     # cut/1e6 + round(,6) would re-land exact 6dp midpoints where the
     # two engines' HALF_UP implementations split.
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = read_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     scored = docs.select(
         "doc_id",
         "lang",
@@ -1524,7 +1512,7 @@ FROM scored JOIN qs USING (lang)
 # convention (a doc can land exactly on 0).
 # --------------------------------------------------------------------------
 def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = read_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     n_words = F.size(_words(F.col("text"))).cast("bigint")
     n_sents = F.greatest(
         F.lit(1).cast("bigint"),
@@ -1599,7 +1587,7 @@ FROM scored
 # Spark, unnest(NULL) is empty in DuckDB).
 # --------------------------------------------------------------------------
 def vocab_oov_rate_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     vocab = (
         docs.select(F.explode(_words(F.col("text"))).alias("word"))
         .groupBy("word")
@@ -1663,7 +1651,7 @@ GROUP BY lang
 # oracle reads raw too; dup ids agree row-for-row).
 # --------------------------------------------------------------------------
 def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(_words(F.col("text"))).alias("tok")
     )
     counts = docs.groupBy("doc_id", "tok").agg(
@@ -1730,7 +1718,7 @@ def classifier_calibration_bins(
     # was: two full scans + a doc-keyed shuffle join).  The shared
     # _clf_cols/_gopher_cols expression factories keep the semantics
     # pinned to the component ops; the oracle still spells the join.
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     j = docs.select(
         "doc_id",
         _clf_cols()["prob"].alias("prob"),
@@ -1890,7 +1878,7 @@ ORACLE = {
 def lexical_diversity_by_source(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    tok = _docs(spark, sf_dir).select(
+    tok = read_table(spark, sf_dir, "documents").select(
         "source", F.explode(_words(F.col("text"))).alias("word")
     )
     counts = tok.groupBy("source", "word").agg(
@@ -1970,7 +1958,7 @@ _MIX_SCRIPTS = ("latin", "cyrillic", "greek", "cjk")  # digit never mixes
 
 
 def text_script_mix_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = read_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     counted = docs.select(
         "doc_id",
         F.length("text").cast("bigint").alias("n_chars"),
@@ -2065,7 +2053,7 @@ MATTR_W = 25
 
 
 def text_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    docs = read_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = docs.select("doc_id", _words(F.col("text")).alias("w"))
     return toks.selectExpr(
         "doc_id",
@@ -2154,7 +2142,7 @@ def classifier_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both scorers are per-row projections of the same scan, so the
     # doc_id join was the identity (one scan, one tokenize pass, zero
     # join exchange; oracle mirrors the one-scan shape)
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     j = docs.select(
         "doc_id",
         _clf_cols()["prob"].alias("prob"),

@@ -28,36 +28,20 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
+from stac_geoparquet_spark.operators._io import read_table
 
 ACF_MAX_LAG = 7  # daily-series autocorrelation horizon (one week)
 LEADTIME_X_EPOCH = "2020-01-01"  # OLS x-origin: keeps day indexes small
-
-
-def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _scan_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
-
-
-def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _scan_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    return read_events(spark, os.path.join(sf_dir, "events.parquet"))
 
 
 def _daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL dates carry no position on the time axis — excluded
     # explicitly on both engines (the canonical NULL-key rule)
     return (
-        _orders(spark, sf_dir)
+        read_table(spark, sf_dir, "orders")
         .select(F.to_date("o_orderdate").alias("d"))
         .where(F.col("d").isNotNull())
         .groupBy("d")
@@ -166,7 +150,7 @@ FROM m
 # --------------------------------------------------------------------------
 def orders_seasonality_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
-        _orders(spark, sf_dir)
+        read_table(spark, sf_dir, "orders")
         .select(
             F.to_date("o_orderdate").alias("d"),
             F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
@@ -249,7 +233,7 @@ FROM per CROSS JOIN tot
 # --------------------------------------------------------------------------
 def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
         .select(
             "event_type",
@@ -348,7 +332,7 @@ FROM per CROSS JOIN tot
 # --------------------------------------------------------------------------
 def events_ab_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull())
         .groupBy("user_id")
         .agg(
@@ -470,12 +454,12 @@ FROM agg
 # one aggregate on the scaling l_suppkey.
 # --------------------------------------------------------------------------
 def supplier_leadtime_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _lineitem(spark, sf_dir).where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         F.col("l_suppkey").isNotNull()
         & F.col("l_orderkey").isNotNull()
         & F.col("l_shipdate").isNotNull()
     )
-    o = _orders(spark, sf_dir).where(
+    o = read_table(spark, sf_dir, "orders").where(
         F.col("o_orderkey").isNotNull() & F.col("o_orderdate").isNotNull()
     )
     j = li.join(o, li.l_orderkey == o.o_orderkey).select(
@@ -574,7 +558,7 @@ ORACLE = {
 def events_psi_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stac_geoparquet_spark.operators.retrieval import INCOMING_MOD
 
-    ev = _events(spark, sf_dir).where(
+    ev = read_table(spark, sf_dir, "events").where(
         F.col("event_type").isNotNull() & F.col("event_id").isNotNull()
     )
     per = ev.groupBy("event_type").agg(
@@ -746,7 +730,7 @@ FROM per CROSS JOIN tot
 # --------------------------------------------------------------------------
 def orders_cohort_repeat_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
-        _orders(spark, sf_dir)
+        read_table(spark, sf_dir, "orders")
         .select("o_custkey", F.to_date("o_orderdate").alias("d"))
         .where(F.col("o_custkey").isNotNull() & F.col("d").isNotNull())
     )
@@ -814,7 +798,7 @@ ORACLE["orders_cohort_repeat_rate"] = COHORT_REPEAT_SQL
 # --------------------------------------------------------------------------
 def events_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
         .select(
             "event_type",
@@ -928,7 +912,7 @@ ORACLE["events_seasonal_anomaly"] = SEASONAL_ANOMALY_SQL
 # --------------------------------------------------------------------------
 def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
         .select(
             "user_id",
@@ -1181,7 +1165,7 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     daily = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("ts").isNotNull())
         .select(F.to_date("ts").alias("d"))
         .groupBy("d")
@@ -1276,7 +1260,7 @@ def orders_interarrival_burstiness(
     from pyspark.sql import Window
 
     o = (
-        _orders(spark, sf_dir)
+        read_table(spark, sf_dir, "orders")
         .where(F.col("o_custkey").isNotNull() & F.col("o_orderdate").isNotNull())
         .select(
             "o_custkey",
@@ -1372,7 +1356,7 @@ SRM_CHI2_95 = 3.841459  # chi-square(1 dof) 95% quantile
 
 def events_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull())
         .select("user_id")
         .distinct()
@@ -1478,7 +1462,7 @@ MW_CENTS_BUCKET = 1 << 20  # prefix-sum bucket width in cents (~$10.5k)
 
 def orders_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
-        _orders(spark, sf_dir)
+        read_table(spark, sf_dir, "orders")
         .where(
             F.col("o_custkey").isNotNull() & F.col("o_totalprice").isNotNull()
         )
@@ -1706,7 +1690,7 @@ _WELCH_GUARD = f"na < 2 OR nb < 2 OR {_WELCH_SE2} <= 0.0"
 
 def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("value").isNotNull())
         .select(
             "user_id",
@@ -1885,7 +1869,7 @@ _POWER_N = (
 
 def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("value").isNotNull())
         .select(
             "user_id",
@@ -1988,7 +1972,7 @@ _JK_THETA = (
 
 def events_jackknife_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("value").isNotNull())
         .select(
             "user_id",
@@ -2182,7 +2166,7 @@ _DID_ALL_N2 = "nu_t >= 2 AND nu_c >= 2"
 
 def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(
             F.col("user_id").isNotNull()
             & F.col("value").isNotNull()
@@ -2447,7 +2431,7 @@ _MSPRT_GUARD = f"na < 2 OR nb < 2 OR {_MSPRT_V} <= 0.0"
 
 def events_msprt_always_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("value").isNotNull())
         .select(
             "user_id",
@@ -2649,7 +2633,7 @@ def users_spearman_value_activity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     per_user = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("value").isNotNull())
         .select(
             "user_id",
@@ -2788,7 +2772,7 @@ _KW_GUARD = f"n0 = 0 OR n1 = 0 OR n2 = 0 OR n < 3 OR {_KW_C} <= 0.0"
 
 def events_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("value").isNotNull())
         .select(
             "user_id",
@@ -2940,7 +2924,7 @@ ORACLE["events_kruskal_wallis"] = KRUSKAL_SQL
 # --------------------------------------------------------------------------
 def users_value_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("value").isNotNull())
         .select(
             "user_id",
@@ -3063,7 +3047,7 @@ def events_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     per_cell = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(
             F.col("user_id").isNotNull()
             & F.col("value").isNotNull()
@@ -3354,7 +3338,7 @@ _RATIO_GUARD = (
 
 def events_ratio_metric_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("value").isNotNull())
         .select(
             "user_id",
@@ -3863,7 +3847,7 @@ def _boot_w_expr(u: str) -> str:
 
 def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
-        _events(spark, sf_dir)
+        read_table(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull() & F.col("value").isNotNull())
         .select(
             "user_id",

@@ -137,48 +137,3 @@ def ensure_worker_imports(spark: SparkSession) -> None:
         return
     spark.sparkContext.addPyFile(worker_zip())
     _SHIPPED_APPS.add(app)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Register the driver testdata parquet tables as temp views.
-
-    Returns a dict name -> DataFrame. Views let both the DataFrame API
-    and spark.sql(...) address the same inputs.
-    """
-    if names is None:
-        names = (
-            "region",
-            "nation",
-            "customer",
-            "supplier",
-            "part",
-            "orders",
-            "lineitem",
-            "events",
-            "documents",
-            "embeddings",
-        )
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            if name == "events":
-                # events.parquet may carry TIMESTAMP(NANOS): a raw read
-                # either throws (conf unset) or — if read_events ran
-                # earlier and set nanosAsLong session-wide — silently
-                # exposes ts as raw BIGINT nanoseconds. Route through
-                # the one reader that owns that handling.
-                from stac_geoparquet_spark.operators.relational import (
-                    read_events,
-                )
-
-                df = read_events(spark, path)
-            else:
-                from stac_geoparquet_spark.operators._io import (
-                    scan_parquet,
-                )
-
-                df = scan_parquet(spark, path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

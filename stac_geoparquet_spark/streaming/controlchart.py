@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
+from stac_geoparquet_spark.operators._io import read_table
 
 
 def daily_state(orders: DataFrame) -> DataFrame:
@@ -53,15 +53,13 @@ def ewma_control_incremental(spark, sf_dir: str) -> DataFrame:
     SPLIT across deltas (their counts — and therefore the smoothed
     level, the moments, and every control flag — only become correct
     after the merge)."""
-    import os
-
     from stac_geoparquet_spark.operators.timeseries import (
         ewma_chart_from_daily,
     )
 
     from stac_geoparquet_spark.operators._io import fenced
 
-    orders = _scan_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
+    orders = read_table(spark, sf_dir, "orders")
     # pmod + coalesce: every row lands in exactly ONE delta (the
     # rollup.py convention — Spark's % keeps the dividend's sign and
     # NULL % 3 is NULL)

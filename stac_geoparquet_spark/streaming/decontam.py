@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stac_geoparquet_spark.operators._io import read_table
 from stac_geoparquet_spark.operators.pipeline import (
     NGRAM_N,
     _sql_ngrams,
@@ -46,9 +47,7 @@ def holdout_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     built once from the corpus (one explode + one distinct shuffle);
     in production this is the benchmark suite, small enough that the
     stream side's join broadcasts it."""
-    from stac_geoparquet_spark.operators._io import read_documents
-
-    docs = read_documents(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     # r10: in-doc duplicate grams collapse in-row (array_distinct)
     # BEFORE the explode feeds the global DISTINCT shuffle — the
     # distinct result is insensitive to in-doc multiplicity, so the
@@ -95,9 +94,7 @@ def decontam_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch-mode entry: per incoming contaminated train doc (doc_id %
     50 == 0), the number of DISTINCT word-5-grams it shares with the
     holdout split."""
-    from stac_geoparquet_spark.operators._io import read_documents
-
-    incoming = read_documents(spark, sf_dir).filter(
+    incoming = read_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % INCOMING_MOD == 0
     )
     matched = _match_holdout(

@@ -27,12 +27,10 @@ test asserts it emits byte-identical pairs to the batch entry.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
+from stac_geoparquet_spark.operators._io import read_table
 from pyspark.sql import types as T
 
 from stac_geoparquet_spark.operators.dedup import (
@@ -147,7 +145,7 @@ def _join_and_verify(incoming: DataFrame, index: DataFrame) -> DataFrame:
 
 
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _scan_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+    docs = read_table(spark, sf_dir, "documents")
     incoming = incoming_signatures(
         docs.filter(F.col("doc_id") % INCOMING_MOD == 0)
     )

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stac_geoparquet_spark.operators._io import read_table
+
 
 def user_cents_state(events: DataFrame) -> DataFrame:
     """Aggregate a batch of raw events into mergeable per-user state."""
@@ -46,14 +48,11 @@ def approx_quantiles_incremental(spark, sf_dir: str) -> DataFrame:
     incremental path loses nothing, including users whose events are
     SPLIT across deltas (their totals — and therefore buckets — only
     become correct after the merge)."""
-    import os
-
-    from stac_geoparquet_spark.operators.relational import read_events
     from stac_geoparquet_spark.operators.stats import (
         hist_quantiles_from_user_totals,
     )
 
-    events = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    events = read_table(spark, sf_dir, "events")
     # pmod + coalesce: every row lands in exactly ONE delta (the
     # rollup.py convention — Spark's % keeps the dividend's sign and
     # NULL % 3 is NULL)

@@ -15,12 +15,11 @@ the flagged rows reproduces the batch answer exactly (pinned by
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from stac_geoparquet_spark.operators._io import read_table
 from stac_geoparquet_spark.operators.retrieval import INCOMING_MOD
 
 EVENTS_SCHEMA = T.StructType(
@@ -40,9 +39,7 @@ def psi_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_id % INCOMING_MOD != 0).  Bounded by the type alphabet —
     at serving time this is the table the ingest job maintains and
     broadcasts."""
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    ev = read_events(spark, os.path.join(sf_dir, "events.parquet")).where(
+    ev = read_table(spark, sf_dir, "events").where(
         F.col("event_type").isNotNull() & F.col("event_id").isNotNull()
     )
     return (

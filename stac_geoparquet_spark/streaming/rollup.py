@@ -27,6 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stac_geoparquet_spark.operators._io import read_table
+
+
 def hourly_rollup_state(events: DataFrame) -> DataFrame:
     """Aggregate raw events into mergeable hourly state."""
     return (
@@ -73,13 +76,9 @@ def events_rollup_incremental(spark, sf_dir: str) -> DataFrame:
     column is excluded here: DuckDB's approx sketch differs; its
     equivalence is pinned register-exactly in
     tests/test_rollup_maintenance.py.)"""
-    import os
-
-    from stac_geoparquet_spark.operators.relational import read_events
-
     from stac_geoparquet_spark.operators._io import fenced
 
-    events = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    events = read_table(spark, sf_dir, "events")
     # pmod + coalesce: every row must land in exactly ONE delta —
     # Spark's % keeps the dividend's sign (negative ids would match no
     # branch) and NULL % 3 is NULL (a NULL-id row would silently drop

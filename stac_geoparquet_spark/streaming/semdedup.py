@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stac_geoparquet_spark.caches import table_path
 from stac_geoparquet_spark.operators._io import scan_parquet as _scan_parquet
 
 from stac_geoparquet_spark.operators.dedup import SEMDEDUP_TAU
@@ -51,8 +52,6 @@ def _read_incoming(sf_dir: str):
     contract, per the round-3 verdict).  Applies the same valid-vector
     contract as ``similarity._read_vec_range`` (NULL / wrong-dim /
     non-finite-sum rows excluded)."""
-    import os
-
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -63,9 +62,7 @@ def _read_incoming(sf_dir: str):
     # dataset(), not ParquetFile(): the source may be a single file OR
     # a Spark-written directory of part files (the empty-input fixture
     # is one)
-    src = pds.dataset(
-        os.path.join(sf_dir, "embeddings.parquet"), format="parquet"
-    )
+    src = pds.dataset(table_path(sf_dir, "embeddings"), format="parquet")
     # vec_id % MOD == 0 spelled with div/mul (pyarrow ships no modulo
     # kernel); integer divide on int64 truncates, ids are non-negative
     vid = pc.field("vec_id")

@@ -2434,14 +2434,12 @@ def test_path_entropy_bounds_and_single_path_zero(spark):
     from stac_geoparquet_spark.operators.relational_ext3 import (
         user_path_entropy,
     )
-    from stac_geoparquet_spark.operators.relational import read_events
-
-    import os
+    from stac_geoparquet_spark.operators._io import read_table
 
     rows = user_path_entropy(spark, SF_DIR).collect()
     assert rows
     n_types = (
-        read_events(spark, os.path.join(SF_DIR, "events.parquet"))
+        read_table(spark, SF_DIR, "events")
         .select("event_type")
         .where("event_type IS NOT NULL")
         .distinct()
@@ -3653,9 +3651,9 @@ def test_bpe_encode_reconstructs_greedy_scan(spark):
         _word_freq,
         tokenize_bpe_encode,
     )
-    from stac_geoparquet_spark.operators._io import read_documents
+    from stac_geoparquet_spark.operators._io import read_table
 
-    docs = read_documents(spark, SF_DIR)
+    docs = read_table(spark, SF_DIR, "documents")
     merges = set(
         r["pair"] for r in _bpe_topk(_word_freq(docs)).collect()
     )
@@ -4007,7 +4005,7 @@ def test_tokenize_bpe_roundtrip_identity_and_fallback(spark):
     independent Python greedy replay: roundtrip_rate must be exactly
     1.0 everywhere, and the char-fallback share must equal
     1 - merged_tokens/total_tokens from the replay."""
-    from stac_geoparquet_spark.operators._io import read_documents
+    from stac_geoparquet_spark.operators._io import read_table
     from stac_geoparquet_spark.operators.curation import (
         _bpe_topk,
         _word_freq,
@@ -4019,7 +4017,7 @@ def test_tokenize_bpe_roundtrip_identity_and_fallback(spark):
 
     import pyarrow.parquet as pq
 
-    docs = read_documents(spark, SF_DIR)
+    docs = read_table(spark, SF_DIR, "documents")
     merges = set(
         r["pair"] for r in _bpe_topk(_word_freq(docs)).collect()
     )

@@ -1380,8 +1380,8 @@ def test_time_bounded_funnel_user_keyed_no_window():
 def test_script_audit_pure_projection():
     s = SHAPES["text_script_mix_audit"]
     assert n(s, "Scan parquet") == 1
-    # the only exchange is read_documents' round-robin spread (a
-    # small-fixture work-spreader, no-op at real scale)
+    # read_table is a plain scan (no round-robin spread), so at most
+    # one exchange, and none in the recorded shape
     assert not hash_keys(s)
     assert n(s, "Exchange") <= 1
     assert n(s, "Window") == 0

@@ -616,6 +616,77 @@ def test_session_caches_all_registered():
     )
 
 
+def test_registry_tables_read_through_read_table():
+    """``caches.table_path`` is the one spelling of a registry table's
+    file and ``_io.read_table`` the one reader, which owns the events
+    TIMESTAMP(NANOS) rule.  A ``"<name>.parquet"`` literal, an
+    f-string of only placeholders ending in ``.parquet`` (``f"{t}.parquet"``)
+    or a ``nanosAsLong`` mention elsewhere in the package fails here:
+    it re-spells the path, or reads events without the rule."""
+    import re as _re
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "stac_geoparquet_spark")
+    path_spelling = _re.compile(
+        r"""["']/?\w+\.parquet["']|f["'](?:\{[^{}]*\}/?)+\.parquet["']"""
+    )
+    found = []
+    for root, _, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, repo)
+            for i, line in enumerate(open(path), 1):
+                if fn not in ("caches.py", "_io.py"):
+                    found += [
+                        (rel, i, m.group(0))
+                        for m in path_spelling.finditer(line)
+                    ]
+                if fn != "_io.py" and "nanosAsLong" in line:
+                    found.append((rel, i, "nanosAsLong"))
+    assert not found, (
+        f"registry table read outside _io.read_table: {found} — use "
+        "read_table(spark, sf_dir, name), or caches.table_path(sf_dir, "
+        "name) where a path is needed"
+    )
+
+
+def test_read_table_truncates_nanos_events_to_micros(spark, tmp_path):
+    """The NANOS branch of ``read_table(..., "events")``: the sf0.001-
+    sf0.1 events files carry microseconds, so this writes its own
+    TIMESTAMP(NANOS) table.  ``ts`` comes back as timestamp_ntz,
+    truncated to the microsecond by an integer ``div`` — the last
+    value's float division lands one microsecond off."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from stac_geoparquet_spark.operators._io import read_table
+
+    ns = [0, 1_700_000_000_123_456_789, 1_234_567_890_123_456_999]
+    assert int(float(ns[2]) / 1000) != ns[2] // 1000
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    df = read_table(spark, str(tmp_path), "events")
+    assert df.schema["ts"].dataType == T.TimestampNTZType()
+    got = {r["event_id"]: r["ts"] for r in df.collect()}
+    epoch = dt.datetime(1970, 1, 1)
+    want = {
+        i + 1: epoch + dt.timedelta(microseconds=v // 1000)
+        for i, v in enumerate(ns)
+    }
+    assert got == want
+
+
 def test_clear_session_caches_empties_registry():
     from stac_geoparquet_spark import caches
 

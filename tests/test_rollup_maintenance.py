@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from stac_geoparquet_spark.operators.relational import read_events
+from stac_geoparquet_spark.operators._io import read_table
 from stac_geoparquet_spark.streaming.rollup import (
     hourly_rollup_state,
     merge_rollup_state,
@@ -18,7 +18,7 @@ from stac_geoparquet_spark.streaming.rollup import (
 
 @pytest.fixture(scope="module")
 def events(spark, sf_dir):
-    return read_events(spark, sf_dir + "/events.parquet").cache()
+    return read_table(spark, sf_dir, "events").cache()
 
 
 def _collect(df):

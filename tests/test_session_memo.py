@@ -85,6 +85,32 @@ def test_rewritten_source_rebuilds(memo, tmp_path):
     assert build(spark, str(tmp_path)) is second
 
 
+def test_rewritten_source_keeps_one_entry(memo, tmp_path):
+    """A rebuild drops the entries of the source's older stamps (same
+    extra key parts only): a source rewritten three times in one
+    session keeps one entry, not four."""
+    build, builds = memo
+    _write_source(tmp_path, b"v0")
+    spark = _session()
+    other = build(spark, str(tmp_path), "other")
+    src = os.path.join(tmp_path, "docs.parquet")
+    for i in range(1, 4):
+        build(spark, str(tmp_path))
+        _write_source(tmp_path, b"v" * (i + 1))
+        mtime = os.stat(src).st_mtime_ns + i * 10**9
+        os.utime(src, ns=(mtime, mtime))
+    latest = build(spark, str(tmp_path))
+    assert len(builds) == 5
+    store = caches.registered_caches()["test.memo"]
+    assert [v for k, (_, v) in store.items() if k[2:] == ()] == [latest]
+    assert build(spark, str(tmp_path)) is latest
+    # the "other" entry is superseded too, but goes only when the
+    # "other" key is rebuilt
+    assert len(store) == 2
+    assert build(spark, str(tmp_path), "other") is not other
+    assert len(store) == 2
+
+
 def test_relative_and_absolute_dir_share_one_entry(
     memo, tmp_path, monkeypatch
 ):

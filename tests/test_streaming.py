@@ -560,9 +560,9 @@ def test_stream_psi_matches_batch(spark, sf_dir, tmp_path):
     from stac_geoparquet_spark.operators.timeseries import (
         events_psi_incremental,
     )
-    from stac_geoparquet_spark.operators.relational import read_events
+    from stac_geoparquet_spark.operators._io import read_table
 
-    ev = read_events(spark, os.path.join(sf_dir, "events.parquet"))
+    ev = read_table(spark, sf_dir, "events")
     inc = ev.filter(
         (F.col("event_id") % INCOMING_MOD == 0)
         & F.col("event_id").isNotNull()
