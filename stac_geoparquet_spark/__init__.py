@@ -20,7 +20,17 @@ re-expresses that surface Spark-first:
 - ``streaming`` — Structured Streaming idioms for incremental sync.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from stac_geoparquet_spark.session import get_spark
+
+# Worker closures pickle every package function they reach BY VALUE
+# (submodules included), so a Python worker never imports this package
+# and any package function may be called from one, whatever the
+# driver's cwd or sys.path.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __version__ = "0.1.0"
 

@@ -104,14 +104,21 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``events`` may carry TIMESTAMP(NANOS), which Spark's parquet scan
     rejects outright (it has no nanosecond type).  It is read as a raw
-    long (``spark.sql.legacy.parquet.nanosAsLong``, set here because a
-    caller's session may not have it) and truncated to microseconds —
-    exactly what DuckDB does loading the same file into its
-    microsecond TIMESTAMP."""
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = scan_parquet(spark, table_path(sf_dir, name))
-    if name == "events" and df.schema["ts"].dataType.simpleString() == "bigint":
+    long and truncated to microseconds — exactly what DuckDB does
+    loading the same file into its microsecond TIMESTAMP.  The long
+    read needs ``spark.sql.legacy.parquet.nanosAsLong``, which only
+    ``_nanos_reader(spark)`` carries: the scan relation is resolved
+    there, then handed to the caller's session, which plans and runs
+    every query over it.  The file reader takes the flag from the
+    relation's own session, so the caller's conf stays as it was and a
+    plain read of another TIMESTAMP(NANOS) file still raises."""
+    path = table_path(sf_dir, name)
+    if name != "events":
+        return scan_parquet(spark, path)
+    scan = scan_parquet(_nanos_reader(spark), path)
+    relation = scan._jdf.queryExecution().analyzed().relation()
+    df = DataFrame(spark._jsparkSession.baseRelationToDataFrame(relation), spark)
+    if df.schema["ts"].dataType.simpleString() == "bigint":
         # integer `div`, NOT float division: ns epochs (~2^60) exceed a
         # double's 53-bit mantissa, so floor(ts/1000.0) is off by ±1us
         df = df.withColumn(
@@ -119,6 +126,19 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
         )
     return df
+
+
+def _nanos_reader(spark: SparkSession) -> SparkSession:
+    """``spark``'s clone (same SparkContext, own SQLConf) that reads a
+    parquet TIMESTAMP(NANOS) column as a raw long.  One per session,
+    kept on the session itself, so a repeat ``events`` read is a hit
+    in the ``io.scans`` memo, which is keyed on session identity."""
+    clone = getattr(spark, "_sgs_nanos_reader", None)
+    if clone is None:
+        clone = spark.newSession()
+        clone.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark._sgs_nanos_reader = clone
+    return clone
 
 
 # Bumped whenever the CONTENT a layout build writes changes (e.g. the

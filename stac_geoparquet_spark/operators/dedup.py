@@ -40,6 +40,7 @@ from pyspark.sql.window import Window
 
 from stac_geoparquet_spark.operators.similarity import (
     VALID_VEC_SQL as _VALID_VEC_SQL,
+    _vec_matrix,
 )
 from stac_geoparquet_spark.operators._exprs import const_cols
 from stac_geoparquet_spark.operators._io import fenced
@@ -669,9 +670,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     def block(batches):
         for pdf_block in batches:
             a_ids = pdf_block["vec_id"].to_numpy()
-            a = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf_block["embedding"]]
-            )
+            a = _vec_matrix(pdf_block)
             a_unit = a / np.sqrt((a * a).sum(axis=1))[:, None]
             sims = a_unit @ b_unit.value.T
             rows_i, cols_j = np.nonzero(
@@ -1038,9 +1037,7 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         order = np.argsort(pdf["vec_id"].to_numpy())
         ids = pdf["vec_id"].to_numpy()[order]
-        a = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-        )[order]
+        a = _vec_matrix(pdf)[order]
         norms = np.sqrt((a * a).sum(axis=1))
         with np.errstate(divide="ignore", invalid="ignore"):
             unit = a / norms[:, None]
@@ -1136,9 +1133,7 @@ def semantic_decontam_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         if n_hold == 0 or corp.sum() == 0:
             out["contaminated"] = np.zeros(corp.sum(), dtype=bool)
             return pd.DataFrame(out)
-        a = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-        )
+        a = _vec_matrix(pdf)
         norms = np.sqrt((a * a).sum(axis=1))
         with np.errstate(divide="ignore", invalid="ignore"):
             unit = a / norms[:, None]

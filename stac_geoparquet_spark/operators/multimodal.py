@@ -326,10 +326,7 @@ AUDIO_WINDOW = 16  # samples (bytes) per analysis window
 def audio_energy_frame(m: DataFrame) -> DataFrame:
     """Windowed energy over any (doc_id, payload binary) frame — the
     decode stage mm_audio_energy wires to the synthetic media table;
-    tests drive it with injected non-window-aligned payloads. The
-    closure is self-contained (cloudpickle by value; see
-    tests/test_worker_imports.py for why module-level references are
-    forbidden in shipped closures)."""
+    tests drive it with injected non-window-aligned payloads."""
 
     def energy(batches):
         import numpy as np

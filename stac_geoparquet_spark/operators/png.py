@@ -15,10 +15,9 @@ Scope (honest, documented): 8-bit samples, color types 0 (gray),
 corpora and re-encodable upstream).  16-bit depth raises rather than
 silently truncating.
 
-Worker-side use: the functions here are importable on executors (the
-package ships with the job), but closures passed to mapInPandas must
-import them INSIDE the closure per the repo's self-contained-closure
-rule (tests/test_worker_imports.py).
+Worker-side use: a closure passed to mapInPandas may call these
+functions like any other package code; the package registers itself to
+pickle by value, so executors never import it.
 """
 
 from __future__ import annotations

@@ -109,6 +109,14 @@ def _valid_vec() -> "Column":
     )
 
 
+def _vec_matrix(pdf, col: str = "embedding"):
+    """The ``col`` vectors of one pandas batch as a float64 matrix, one
+    row per vector — the decode every worker-side kernel starts from."""
+    import numpy as np
+
+    return np.stack([np.asarray(v, dtype=np.float64) for v in pdf[col]])
+
+
 def _read_vec_range(sf_dir: str, lo: int | None, hi: int | None):
     """Driver-side read of a slice of the embeddings table — the
     broadcast-variable build for queries/centroids (lo/hi=None reads
@@ -180,12 +188,12 @@ def _load_queries(sf_dir: str):
     return _read_vec_range(sf_dir, None, N_QUERIES)
 
 
-def _make_score(b_q, top_k: int):
+def _make_score(b_q, top_k: int, dims: int | None = None):
     """Build the worker-side scoring generator for the EXACT brute
     force path (the ANN paths join candidates first and use
-    _make_candidate_score). Everything the closure touches is defined
-    inside this function so cloudpickle ships it by value — workers
-    never need this package on their import path.
+    _make_candidate_score). ``dims`` truncates each candidate to its
+    first ``dims`` components (the Matryoshka prefix; the broadcast
+    queries must be truncated to match); None scores full vectors.
 
     Per-batch top-k per query: -inf marks masked (self) pairs; the
     sort key (-sim, neighbor_id) matches the final window's total
@@ -198,9 +206,7 @@ def _make_score(b_q, top_k: int):
         q_ids, qm, qnorm = b_q.value
         for pdf in batches:
             c_ids = pdf["vec_id"].to_numpy()
-            c = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
+            c = _vec_matrix(pdf)[:, :dims]
             cnorm = np.sqrt((c * c).sum(axis=1))
             sims = np.round(qm @ c.T / (qnorm[:, None] * cnorm[None, :]), 6)
             mask = q_ids[:, None] == c_ids[None, :]
@@ -318,8 +324,7 @@ def _make_bucketize():
     """(vec_id, embedding) -> (vec_id, embedding, bucket): one tiny
     N x DIM @ DIM x N_PLANES GEMM per Arrow batch. This is the index
     pass; at 100 TB the bucket is a persisted layout column (same idea
-    as write_zordered) and this stage disappears from the query path.
-    Closure is self-contained for cloudpickle by-value shipping."""
+    as write_zordered) and this stage disappears from the query path."""
     planes_list = _hyperplanes()
     n_planes = N_PLANES
 
@@ -330,9 +335,7 @@ def _make_bucketize():
         planes = np.array(planes_list)
         weights = (1 << np.arange(n_planes)).astype(np.int64)
         for pdf in batches:
-            c = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
+            c = _vec_matrix(pdf)
             bucket = ((c @ planes.T >= 0).astype(np.int64) * weights).sum(
                 axis=1
             )
@@ -365,9 +368,7 @@ def _make_candidate_score(b_q, top_k: int):
                 continue
             qidx = pdf["query_id"].map(qpos).to_numpy()
             n_ids = pdf["vec_id"].to_numpy()
-            c = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
+            c = _vec_matrix(pdf)
             cnorm = np.sqrt((c * c).sum(axis=1))
             sims = np.round(
                 (c * qm[qidx]).sum(axis=1) / (cnorm * qnorm[qidx]), 6
@@ -487,29 +488,17 @@ def _load_centroids(sf_dir: str):
     return _read_vec_range(sf_dir, CENTROID_LO, CENTROID_LO + N_CENTROIDS)
 
 
-def _cell_assigner():
-    """Nearest-centroid helper built as a LOCAL function: worker-side
-    closures must capture it from an enclosing scope so cloudpickle
-    ships it BY VALUE. A module-level function would be pickled by
-    reference (module.qualname) and the driver's Python workers would
-    need this package importable — not true when the driver runs from
-    an arbitrary cwd (the same reason _make_score keeps everything
-    inside the closure)."""
+def assign_cells(vecs, vnorm, c_ids, cm, cnorm):
+    """Nearest centroid by rounded cosine, ties to the lowest centroid
+    id — the same total order the SQL oracle's row_number uses."""
+    import numpy as np
 
-    def assign_cells(vecs, vnorm, c_ids, cm, cnorm):
-        """Nearest centroid by rounded cosine, ties to the lowest
-        centroid id — the same total order the SQL oracle's
-        row_number uses."""
-        import numpy as np
-
-        sims = np.round(vecs @ cm.T / (vnorm[:, None] * cnorm[None, :]), 6)
-        # argmax returns the FIRST max index and c_ids are ascending,
-        # so the lowest centroid id wins ties — matching the oracle's
-        # ORDER BY sim DESC, cid ASC
-        best = np.argmax(sims, axis=1)
-        return c_ids[best], sims
-
-    return assign_cells
+    sims = np.round(vecs @ cm.T / (vnorm[:, None] * cnorm[None, :]), 6)
+    # argmax returns the FIRST max index and c_ids are ascending, so
+    # the lowest centroid id wins ties — matching the oracle's ORDER BY
+    # sim DESC, cid ASC
+    best = np.argmax(sims, axis=1)
+    return c_ids[best], sims
 
 
 def ivf_cell_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -541,7 +530,6 @@ def _make_cell_assign_fn(
     (the layout write needs it; the assignment query does not)."""
     c_ids, cm, cnorm = _load_centroids(sf_dir)
     b_c = spark.sparkContext.broadcast((c_ids, cm, cnorm))
-    assign_cells = _cell_assigner()  # local => shipped by value
 
     def assign(batches):
         import numpy as np
@@ -549,9 +537,7 @@ def _make_cell_assign_fn(
 
         c_ids_, cm_, cnorm_ = b_c.value
         for pdf in batches:
-            v = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf["embedding"]]
-            )
+            v = _vec_matrix(pdf)
             vnorm = np.sqrt((v * v).sum(axis=1))
             cells, _ = assign_cells(v, vnorm, c_ids_, cm_, cnorm_)
             out = {"vec_id": pdf["vec_id"].to_numpy()}
@@ -1203,8 +1189,7 @@ def _pq_codebook(sf_dir: str):
 
 
 def _make_pq_encode(b_cb):
-    """Worker-side closure: batch of vectors -> (vec_id, codes) rows.
-    Self-contained so cloudpickle ships it by value."""
+    """Worker-side closure: batch of vectors -> (vec_id, codes) rows."""
 
     def encode(batches):
         import numpy as np
@@ -1213,9 +1198,7 @@ def _make_pq_encode(b_cb):
         cb = b_cb.value  # M x K x SUB
         m_dims, k, sub = cb.shape
         for pdf in batches:
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            ).reshape(len(pdf), m_dims, sub)
+            x = _vec_matrix(pdf).reshape(len(pdf), m_dims, sub)
             codes = np.empty((len(pdf), m_dims), dtype=np.int64)
             for m in range(m_dims):
                 d2 = ((x[:, m, None, :] - cb[m][None, :, :]) ** 2).sum(-1)
@@ -1334,9 +1317,7 @@ def _make_pq_adc(b_cb, b_q, top_k: int, b_probes):
         for pdf in batches:
             c_ids = pdf["vec_id"].to_numpy()
             c_cells = pdf["ivf_cell"].to_numpy()
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            ).reshape(len(pdf), m_dims, sub)
+            x = _vec_matrix(pdf).reshape(len(pdf), m_dims, sub)
             codes = np.empty((len(pdf), m_dims), dtype=np.int64)
             for m in range(m_dims):
                 d2 = ((x[:, m, None, :] - cb[m][None, :, :]) ** 2).sum(-1)
@@ -1657,9 +1638,7 @@ def embedding_random_projection(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            v = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf["embedding"]]
-            )
+            v = _vec_matrix(pdf)
             p = np.round(v @ R, 6)
             out = {"vec_id": pdf["vec_id"].to_numpy()}
             for k in range(n_proj):
@@ -1744,7 +1723,6 @@ def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").isNotNull()
     )
     b_c = spark.sparkContext.broadcast((c_ids, cm, cnorm))
-    assign_cells = _cell_assigner()
     k, susp_lt = AGREE_K, AGREE_SUSPECT_LT
 
     def tag(batches):
@@ -1755,7 +1733,7 @@ def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vecs = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
+            vecs = _vec_matrix(pdf, "v")
             vnorm = np.sqrt((vecs * vecs).sum(axis=1))
             cells, _ = assign_cells(vecs, vnorm, c_ids_, cm_, cnorm_)
             yield pd.DataFrame(
@@ -1781,7 +1759,7 @@ def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "susp_part": pd.Series([], dtype="int64"),
                 }
             )
-        vecs = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
+        vecs = _vec_matrix(pdf, "v")
         labels = pdf["label"].to_numpy()
         ids = pdf["vec_id"].to_numpy()
         norms = np.sqrt((vecs * vecs).sum(axis=1))
@@ -2436,9 +2414,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         q_ids, qm, qnorm, q_labels = b_q.value
         for pdf in batches:
             c_ids = pdf["vec_id"].to_numpy()
-            c = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
+            c = _vec_matrix(pdf)
             cnorm = np.sqrt((c * c).sum(axis=1))
             sims = np.round(
                 qm @ c.T / (qnorm[:, None] * cnorm[None, :]), 6
@@ -2596,37 +2572,7 @@ def _matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qm_t = qm[:, :MAT_DIM]
     qnorm_t = np.sqrt((qm_t * qm_t).sum(axis=1))
     b_q = spark.sparkContext.broadcast((q_ids, qm_t, qnorm_t))
-    mat_dim, top_k = MAT_DIM, TOP_K
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        q_ids, qm, qnorm = b_q.value
-        for pdf in batches:
-            c_ids = pdf["vec_id"].to_numpy()
-            c = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )[:, :mat_dim]
-            cnorm = np.sqrt((c * c).sum(axis=1))
-            sims = np.round(qm @ c.T / (qnorm[:, None] * cnorm[None, :]), 6)
-            mask = q_ids[:, None] == c_ids[None, :]
-            sims[mask] = -np.inf
-            out_q, out_n, out_s = [], [], []
-            for i in range(len(q_ids)):
-                row = sims[i]
-                valid = np.nonzero(row != -np.inf)[0]
-                if len(valid) == 0:
-                    continue
-                order = valid[np.lexsort((c_ids[valid], -row[valid]))][
-                    :top_k
-                ]
-                out_q.extend([q_ids[i]] * len(order))
-                out_n.extend(c_ids[order])
-                out_s.extend(row[order])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cos_sim": out_s}
-            )
+    score = _make_score(b_q, TOP_K, MAT_DIM)
 
     # r11 batch 4: un-fenced.  The report's two consumers (n_trunc +
     # hits) duplicate this subtree in the STATIC plan, but both copies

@@ -79,61 +79,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-_SHIPPED_APPS: set[str] = set()
-
-
-def worker_zip() -> str:
-    """Path of a zip of this package's ``.py`` files, named by a hash
-    of their contents: every process running the same code shares one
-    file, and a code change gets a new one.  Published with
-    write-to-temp + ``os.replace``, so a concurrent reader never sees a
-    half-written zip."""
-    import hashlib
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    files = sorted(
-        os.path.join(dirpath, f)
-        for dirpath, _dirs, names in os.walk(pkg_dir)
-        for f in names
-        if f.endswith(".py")
-    )
-    digest = hashlib.sha256()
-    for full in files:
-        digest.update(os.path.relpath(full, root).encode() + b"\0")
-        with open(full, "rb") as fh:
-            digest.update(fh.read() + b"\0")
-    zpath = os.path.join(
-        tempfile.gettempdir(),
-        f"stac_geoparquet_spark-pyfiles-{digest.hexdigest()[:16]}.zip",
-    )
-    if not os.path.exists(zpath):
-        tmp = f"{zpath}.{os.getpid()}.tmp"
-        with zipfile.ZipFile(tmp, "w") as z:
-            for full in files:
-                z.write(full, os.path.relpath(full, root))
-        os.replace(tmp, zpath)
-    return zpath
-
-
-def ensure_worker_imports(spark: SparkSession) -> None:
-    """Make this package importable on Python workers regardless of the
-    driver's cwd/session origin.
-
-    cloudpickle serializes *importable module-level functions* by
-    reference (module + qualname), so a worker-side closure that calls
-    one (e.g. the NDJSON sink's ``row_to_item``) needs the package on
-    the worker's import path. When the driver session was built by
-    external code from an arbitrary cwd, that isn't guaranteed — so
-    ``addPyFile`` the package zip once per application; Spark
-    distributes the zip and workers prepend it to sys.path before
-    unpickling. Self-contained closures (the GEMM scorers) don't need
-    this; call it from any operator that ships module references."""
-    app = spark.sparkContext.applicationId
-    if app in _SHIPPED_APPS:
-        return
-    spark.sparkContext.addPyFile(worker_zip())
-    _SHIPPED_APPS.add(app)

@@ -190,11 +190,6 @@ def to_item_dicts(df: DataFrame, precision: str = "us") -> Iterator[dict]:
 def to_ndjson(df: DataFrame, path: str, precision: str = "us", mode: str = "append") -> None:
     """Distributed NDJSON sink (K3, arrow/_api.py:370-403): one JSON
     line per item, written in parallel as text partitions."""
-    from stac_geoparquet_spark.session import ensure_worker_imports
-
-    # emit's closure references row_to_item by module reference; ship
-    # the package so workers can import it whatever the driver's cwd
-    ensure_worker_imports(df.sparkSession)
     shaped = to_json_shape(df, precision=precision)
     geom_paths = _wkb_paths(shaped.schema)
     out_schema = T.StructType([T.StructField("json", T.StringType())])

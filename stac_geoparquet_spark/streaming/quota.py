@@ -100,8 +100,7 @@ FROM r
 
 def quota_stream(incoming: DataFrame) -> DataFrame:
     """The stateful operator over any (doc_id, source, ...) stream:
-    admit while the source's running count < QUOTA_M.  Closure is
-    self-contained (worker-import rule)."""
+    admit while the source's running count < QUOTA_M."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     quota = QUOTA_M

@@ -30,6 +30,8 @@ from stac_geoparquet_spark.operators.similarity import (
     _DOT_SQL,
     _centroid_cte,
     _load_centroids,
+    _vec_matrix,
+    assign_cells,
     build_ivf_layout,
 )
 from stac_geoparquet_spark.streaming.dedup import INCOMING_MOD
@@ -121,8 +123,6 @@ def _incoming_with_cells(sf_dir: str):
     None, None) when there are no incoming vectors or no centroids."""
     import numpy as np
 
-    from stac_geoparquet_spark.operators.similarity import _cell_assigner
-
     ids, mat, norms = _read_incoming(sf_dir)
     c_ids, cm, cnorm = _load_centroids(sf_dir)
     if len(ids) == 0 or len(c_ids) == 0:
@@ -130,7 +130,7 @@ def _incoming_with_cells(sf_dir: str):
     # THE one nearest-centroid definition (rounded cosine, lowest
     # centroid id on ties) — shared with the layout build so the
     # incremental routing can never desynchronize from the index cells
-    cells, _ = _cell_assigner()(mat, norms, c_ids, cm, cnorm)
+    cells, _ = assign_cells(mat, norms, c_ids, cm, cnorm)
     with np.errstate(divide="ignore", invalid="ignore"):
         unit = mat / norms[:, None]
     return ids, unit, cells
@@ -138,8 +138,7 @@ def _incoming_with_cells(sf_dir: str):
 
 def _make_index_matcher(b_inc, tau: float):
     """Worker-side closure: count, per incoming vector, the static
-    index rows in this batch at rounded cosine >= tau.  Self-contained
-    (cloudpickle ships it by value)."""
+    index rows in this batch at rounded cosine >= tau."""
 
     def match(batches):
         import numpy as np
@@ -149,9 +148,7 @@ def _make_index_matcher(b_inc, tau: float):
         for pdf in batches:
             s_ids = pdf["vec_id"].to_numpy()
             s_cells = pdf["ivf_cell"].to_numpy()
-            a = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
+            a = _vec_matrix(pdf)
             norms = np.sqrt((a * a).sum(axis=1))
             with np.errstate(divide="ignore", invalid="ignore"):
                 unit = a / norms[:, None]
@@ -233,7 +230,7 @@ FROM inc i LEFT JOIN matches m USING (vec_id)
 
 def _make_pair_scorer(tau: float):
     """Worker-side closure: rounded cosine per (incoming, index) row
-    pair, emitting only the >= tau hits.  Self-contained."""
+    pair, emitting only the >= tau hits."""
 
     def score(batches):
         import numpy as np
@@ -242,12 +239,8 @@ def _make_pair_scorer(tau: float):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            a = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            b = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["index_emb"]]
-            )
+            a = _vec_matrix(pdf)
+            b = _vec_matrix(pdf, "index_emb")
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = np.round(
                     (a * b).sum(axis=1)

@@ -335,11 +335,11 @@ def test_png_resize_nearest():
 
 def test_png_decode_inside_spark_worker(spark):
     """The real decode runs where it will in production: inside a
-    mapInPandas closure over a binary payload column (self-contained
-    imports per the worker-closure rule)."""
+    mapInPandas closure over a binary payload column, calling the
+    package's decoder, which ships pickled by value."""
     import pandas as pd
 
-    from stac_geoparquet_spark.operators.png import encode_png
+    from stac_geoparquet_spark.operators.png import decode_png, encode_png
 
     rows = [
         (i, encode_png(2 + i, 3, 3, _rand_pixels((2 + i) * 3 * 3, seed=i)))
@@ -348,10 +348,6 @@ def test_png_decode_inside_spark_worker(spark):
     df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
 
     def decode(batches):
-        from stac_geoparquet_spark.operators.png import decode_png
-
-        import pandas as pd
-
         for pdf in batches:
             out = {"doc_id": [], "width": [], "height": [], "channels": []}
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):

@@ -687,6 +687,59 @@ def test_read_table_truncates_nanos_events_to_micros(spark, tmp_path):
     assert got == want
 
 
+def _write_nanos_events(path) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1], pa.int64()),
+                "ts": pa.array([1_700_000_000_123_456_789], pa.timestamp("ns")),
+            }
+        ),
+        path,
+    )
+
+
+def test_read_table_events_leaves_session_conf_alone(spark, tmp_path):
+    """The events NANOS read sets ``nanosAsLong`` on a clone only: the
+    caller's conf reads the same after it, and the events frame still
+    belongs to the caller's session."""
+    from stac_geoparquet_spark.operators._io import read_table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    _write_nanos_events(tmp_path / "events.parquet")
+    df = read_table(spark, str(tmp_path), "events")
+    assert df.schema["ts"].dataType == T.TimestampNTZType()
+    assert spark.conf.get(key) == before
+    assert df.sparkSession is spark
+
+
+def test_plain_nanos_read_still_raises_after_events_read(spark, tmp_path):
+    """After ``read_table(spark, d, "events")``, a plain read of an
+    unrelated TIMESTAMP(NANOS) file in the same session still raises
+    instead of silently returning raw ``bigint`` nanoseconds; a repeat
+    events read reuses its memoized scan."""
+    from pyspark.errors import AnalysisException
+
+    from stac_geoparquet_spark.caches import registered_caches
+    from stac_geoparquet_spark.operators._io import read_table
+
+    (tmp_path / "d").mkdir()
+    _write_nanos_events(tmp_path / "d" / "events.parquet")
+    _write_nanos_events(tmp_path / "other.parquet")
+    read_table(spark, str(tmp_path / "d"), "events").collect()
+    scans = len(registered_caches()["io.scans"])
+    rows = read_table(spark, str(tmp_path / "d"), "events").collect()
+    assert len(registered_caches()["io.scans"]) == scans
+    assert rows[0]["ts"].microsecond == 123456
+    with pytest.raises(AnalysisException):
+        spark.read.parquet(str(tmp_path / "other.parquet")).collect()
+
+
 def test_clear_session_caches_empties_registry():
     from stac_geoparquet_spark import caches
 
